@@ -465,7 +465,7 @@ def test_collect_sites_are_whitelisted():
         if n:
             got[str(p.relative_to(root))] = n
     assert dict(got) == {
-        "runtime.py": 2,
+        "runtime.py": 1,
         "session.py": 1,
         "codec/envelope.py": 1,
         "operators/similarity.py": 4,

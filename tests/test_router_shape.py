@@ -1,0 +1,207 @@
+"""One router shape for every service: exact (topic, outcome) counts over
+the three service shapes the router serves, and a guard on the width of
+the plan it builds.
+
+Shapes:
+- ``one_schema``: one data stream (plus the auto descriptor stream).
+- ``entity_lookup``: one data stream, a ``register_entity`` lookup and
+  the auto descriptor stream (the service_stream benchmark's shape).
+- ``two_schemas``: two data payload schemas, one stream with a
+  ``RetryPolicy``, an unroutable topic and a malformed value (the
+  bus_batch benchmark's shape).
+"""
+
+from __future__ import annotations
+
+from collections import Counter
+
+import pyspark.sql.functions as F
+import pytest
+
+from typebus_spark.codec.envelope import encode_envelope, new_meta
+from typebus_spark.registry import BackoffShape, RetryPolicy, Service
+from typebus_spark.runtime import FileBus, drain_batches, run_batch
+
+ORDER = "order_id string, user_id string, qty int, price double"
+PRICED = "order_id string, user_id string, total double"
+TASK = "task_id long, fail_times int"
+QUOTE = "seq long, user_id string, qty int"
+ACCOUNT = "id string, tier string"
+
+
+def _schema(spark, ddl):
+    return spark.createDataFrame([], ddl).schema
+
+
+def _price(df):
+    return df.select(
+        "meta", "order_id", "user_id", (F.col("qty") * F.col("price")).alias("total")
+    )
+
+
+def _work(df):
+    attempt = F.coalesce(F.col("meta.extra").getItem("attempt").cast("int"), F.lit(0))
+    return df.select(
+        "meta",
+        "task_id",
+        "fail_times",
+        F.when(attempt < F.col("fail_times"), F.lit("transient")).alias("_error"),
+    )
+
+
+def _orders(spark, n=3):
+    rows = [(f"o{i}", f"u{i}", i + 1, 2.0) for i in range(n)]
+    return encode_envelope(spark.createDataFrame(rows, ORDER), "api.Order")
+
+
+def _one_schema(spark):
+    svc = Service("shape-one")
+    svc.declare_type("api.Order", _schema(spark, ORDER))
+    svc.declare_type("api.Priced", _schema(spark, PRICED))
+    svc.register_stream("api.Order", "api.Priced", _price, partition_key="user_id")
+    return svc, _orders(spark)
+
+
+def _entity_lookup(spark):
+    svc = Service("shape-entity")
+    svc.declare_type("api.Quote", _schema(spark, QUOTE))
+    svc.declare_type("api.QuoteReply", _schema(spark, QUOTE))
+    svc.declare_type("api.Account", _schema(spark, ACCOUNT))
+    svc.register_stream(
+        "api.Quote",
+        "api.QuoteReply",
+        lambda df: df.select("meta", "seq", "user_id", (F.col("qty") * 2).alias("qty")),
+    )
+    svc.register_entity(
+        "accounts",
+        "api.Account",
+        snapshot=spark.createDataFrame([("a1", "gold"), ("a2", "free")], ACCOUNT),
+    )
+    rpc = new_meta(
+        "api.Quote",
+        direct_reply_path=F.lit("/user/gather"),
+        direct_reply_service=F.lit("client-svc"),
+    )
+    quotes = encode_envelope(
+        spark.createDataFrame([(1, "u1", 1), (2, "u2", 2)], QUOTE), "api.Quote", meta=rpc
+    ).unionByName(
+        encode_envelope(spark.createDataFrame([(3, "u3", 3)], QUOTE), "api.Quote")
+    )
+    lookups = encode_envelope(
+        spark.createDataFrame([("a1",), ("zz",)], "id string"), "api.Account.get"
+    )
+    desc = encode_envelope(
+        spark.createDataFrame([("shape-entity",)], "service string"),
+        Service.GET_DESCRIPTOR_FQN,
+    )
+    return svc, quotes.unionByName(lookups).unionByName(desc)
+
+
+def _two_schemas(spark):
+    svc = Service("shape-two")
+    svc.declare_type("api.Order", _schema(spark, ORDER))
+    svc.declare_type("api.Priced", _schema(spark, PRICED))
+    svc.declare_type("api.Task", _schema(spark, TASK))
+    svc.declare_type("api.TaskDone", _schema(spark, TASK))
+    svc.register_stream("api.Order", "api.Priced", _price, partition_key="user_id")
+    svc.register_stream(
+        "api.Task",
+        "api.TaskDone",
+        _work,
+        retry=RetryPolicy(2, 5.0, BackoffShape.NONE),
+    )
+    tasks = encode_envelope(
+        spark.createDataFrame([(1, 0), (2, 1), (3, 5)], TASK), "api.Task"
+    )
+    unroutable = encode_envelope(
+        spark.createDataFrame([("x", "u", 1, 1.0)] * 2, ORDER), "api.Nowhere"
+    )
+    malformed = spark.createDataFrame(
+        [(None, b"{not json", "api.Order")], FileBus.RAW_SCHEMA
+    )
+    raw = _orders(spark).unionByName(tasks).unionByName(unroutable)
+    return svc, raw.unionByName(malformed)
+
+
+SHAPES = {
+    "one_schema": _one_schema,
+    "entity_lookup": _entity_lookup,
+    "two_schemas": _two_schemas,
+}
+
+NO_HANDLER = ("typebus.DeadLetter", "no handler for topic")
+UNDECODABLE = ("typebus.DeadLetter", "undecodable payload")
+GAVE_UP = ("typebus.DeadLetter", "handler failed")
+
+# (topic, outcome) -> rows; the outcome is a dead letter's reason, else None
+RUN_BATCH = {
+    "one_schema": {("api.Priced", None): 3},
+    "entity_lookup": {
+        ("api.QuoteReply", None): 3,
+        ("client-svc", None): 2,
+        ("api.Account", None): 2,
+        (Service.DESCRIPTOR_FQN, None): 1,
+    },
+    "two_schemas": {
+        ("api.Priced", None): 3,
+        ("api.TaskDone", None): 1,
+        ("api.Task.retry", None): 2,
+        NO_HANDLER: 2,
+        UNDECODABLE: 1,
+    },
+}
+# the drain re-runs retries in process: task 2 succeeds on its first
+# retry, task 3 exhausts both and is dead-lettered
+DRAIN = {
+    **RUN_BATCH,
+    "two_schemas": {
+        ("api.Priced", None): 3,
+        ("api.TaskDone", None): 2,
+        NO_HANDLER: 2,
+        UNDECODABLE: 1,
+        GAVE_UP: 1,
+    },
+}
+
+
+def _outcomes(df) -> Counter:
+    # collect, not count: count() prunes the envelope encode
+    reason = F.when(
+        F.col("topic") == "typebus.DeadLetter",
+        F.get_json_object(F.col("value").cast("string"), "$.payload.message"),
+    )
+    return Counter(
+        (r["topic"], r["reason"])
+        for r in df.select("topic", reason.alias("reason")).collect()
+    )
+
+
+@pytest.mark.parametrize("shape", sorted(SHAPES))
+def test_router_shape_outcomes(spark, shape):
+    svc, raw = SHAPES[shape](spark)
+    raw = raw.localCheckpoint(eager=True)
+    got = _outcomes(run_batch(svc, raw, now_epoch=1_000_000).union_all())
+    assert got == Counter(RUN_BATCH[shape])
+    assert _outcomes(drain_batches(svc, raw).union_all()) == Counter(DRAIN[shape])
+
+
+def _union_width(df) -> int:
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() != "Union":
+        node = node.children().apply(0)
+    return node.children().size()
+
+
+@pytest.mark.parametrize(
+    "shape, max_branches", [("two_schemas", 8), ("entity_lookup", 7)]
+)
+def test_router_plan_width(spark, shape, max_branches):
+    """One Union branch per (stream, source frame) plus one for unroutable
+    rows, and the handler planned once: the entity lookup's join appears
+    a single time even though its replies fan out and are traced."""
+    svc, raw = SHAPES[shape](spark)
+    out = run_batch(svc, raw.localCheckpoint(eager=True)).union_all()
+    assert _union_width(out) <= max_branches
+    if shape == "entity_lookup":
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("Join LeftOuter") == 1

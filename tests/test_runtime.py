@@ -178,7 +178,7 @@ def test_unhandled_topic_dead_letters(spark, svc):
     raw = encode_envelope(df, "api.Unknown")
     res = run_batch(svc, raw)
     dl = res.topic(DEAD_LETTER_TOPIC)
-    assert dl is not None and dl.count() == 1
+    assert dl is not None and len(dl.collect()) == 1
     v = json.loads(bytes(dl.collect()[0]["value"]).decode())
     assert v["payload"]["message"] == "no handler for topic"
     assert v["payload"]["extra"]["topic"] == "api.Unknown"
@@ -191,7 +191,7 @@ def test_undecodable_payload_dead_letters(spark, svc):
     )
     res = run_batch(svc, raw)
     dl = res.topic(DEAD_LETTER_TOPIC)
-    assert dl is not None and dl.count() == 1
+    assert dl is not None and len(dl.collect()) == 1
 
 
 def test_rpc_reply_also_published_to_caller_topic(spark, svc):
@@ -207,7 +207,7 @@ def test_trace_side_output_loop_guard(spark, svc):
 
     res = run_batch(svc, _orders(spark), trace=True)
     tr = res.topic(TRACE_IN_TOPIC)
-    assert tr is not None and tr.count() == 2
+    assert tr is not None and len(tr.collect()) == 2
     # typed InEventTrace wrapper: payload = (service, event) with the
     # full original envelope inside (event/package.scala:35-38)
     v = json.loads(bytes(tr.collect()[0]["value"]).decode())
@@ -216,7 +216,7 @@ def test_trace_side_output_loop_guard(spark, svc):
     assert v["payload"]["event"]["meta"]["event_type"] == "api.OrderPlaced"
     # OutEventTrace at the publish site (KafkaBus.scala:75)
     out_tr = res.topic(TRACE_OUT_TOPIC)
-    assert out_tr is not None and out_tr.count() == 2
+    assert out_tr is not None and len(out_tr.collect()) == 2
     ov = json.loads(bytes(out_tr.collect()[0]["value"]).decode())
     assert ov["payload"]["event"]["meta"]["event_type"] == "api.OrderConfirmed"
     # a trace event re-entering the bus must NOT be re-traced
@@ -225,7 +225,7 @@ def test_trace_side_output_loop_guard(spark, svc):
     df = spark.createDataFrame([("t1", "c", 0.0)], ORDER_SCHEMA)
     raw = encode_envelope(df, TRACE_TOPIC)
     res2 = run_batch(svc, raw, trace=True)
-    assert res2.topic(TRACE_TOPIC) is None or res2.topic(TRACE_TOPIC).count() == 0
+    assert res2.topic(TRACE_TOPIC) is None or len(res2.topic(TRACE_TOPIC).collect()) == 0
 
 
 def test_per_event_trace_flag_and_exception_trace(spark):
@@ -260,9 +260,9 @@ def test_per_event_trace_flag_and_exception_trace(spark):
         df, "api.T", meta=new_meta("api.T", trace=True)
     )
     res = run_batch(s, raw, trace=False)  # global flag OFF
-    assert res.topic(TRACE_IN_TOPIC).count() == 2  # per-event flag wins
+    assert len(res.topic(TRACE_IN_TOPIC).collect()) == 2  # per-event flag wins
     exc = res.topic(TRACE_EXCEPTION_TOPIC)
-    assert exc is not None and exc.count() == 1
+    assert exc is not None and len(exc.collect()) == 1
     ev = json.loads(bytes(exc.collect()[0]["value"]).decode())
     assert ev["meta"]["event_type"] == TRACE_EXCEPTION_TOPIC
     assert ev["payload"]["event"]["payload"]["order_id"] == "bad"

@@ -314,24 +314,16 @@ def _json_decode_expr(payload_schema_json: str) -> Column:
 
 
 @__import__("functools").lru_cache(maxsize=512)
-def _decode_sel(
-    schema_json: str, raw_cols: tuple, keep_value: bool
-) -> tuple:
+def _decode_sel(schema_json: str, raw_cols: tuple) -> tuple:
     """Both projection tuples of the JSON decode, cached per (payload
     schema, input shape): the router re-decodes the same types every
     micro-batch, and rebuilding the two selects' column lists was a
     measured per-build py4j cost (tools/py4j_sites.py, r12 verdict
     item 1). ``F.col("e.meta")`` names its output ``meta`` exactly like
     the string form."""
-    decoded = _json_decode_expr(schema_json)
-    passthrough = tuple(
-        c for c in ("topic", "key", "value") if c in raw_cols
-    )
-    tail = ("topic", "value") if keep_value else ("topic",)
-    first = (decoded,) + tuple(F.col(c) for c in passthrough)
-    second = (F.col("e.meta"), F.col("e.payload")) + tuple(
-        F.col(c) for c in tail if c in raw_cols
-    )
+    topic = (F.col("topic"),) if "topic" in raw_cols else ()
+    first = (_json_decode_expr(schema_json),) + topic
+    second = (F.col("e.meta"), F.col("e.payload")) + topic
     return first, second
 
 
@@ -339,7 +331,6 @@ def decode_envelope(
     raw: DataFrame,
     payload_schema: StructType,
     wire_format: str = "json",
-    keep_value: bool = False,
 ) -> DataFrame:
     """Bus rows → ``meta`` struct + typed ``payload`` struct (D1+D2).
 
@@ -348,12 +339,6 @@ def decode_envelope(
     Catalyst ``from_json`` (or ``from_avro`` with
     ``wire_format="avro"``). Undecodable rows yield NULL payloads →
     routed to the dead-letter path by the runtime (O2).
-
-    ``keep_value`` carries the raw wire bytes through so a different
-    payload schema can be re-decoded later from the SAME materialized
-    frame (the runtime's single-data-schema fast path re-parses
-    control-plane slices this way instead of checkpointing ``raw``
-    twice).
     """
     if wire_format == "avro":
         _require_avro(raw)
@@ -364,15 +349,10 @@ def decode_envelope(
             F.col("value"), avro_schema_json(env), {"mode": "PERMISSIVE"}
         ).alias("e")
     else:
-        first, second = _decode_sel(
-            payload_schema.json(), tuple(raw.columns), keep_value
-        )
+        first, second = _decode_sel(payload_schema.json(), tuple(raw.columns))
         return raw.select(*first).select(*second)
-    tail = ("topic", "value") if keep_value else ("topic",)
-    return raw.select(
-        decoded,
-        *[c for c in ("topic", "key", "value") if c in raw.columns],
-    ).select("e.meta", "e.payload", *[c for c in tail if c in raw.columns])
+    topic = ["topic"] if "topic" in raw.columns else []
+    return raw.select(decoded, *topic).select("e.meta", "e.payload", *topic)
 
 
 def fresh_uuid() -> str:

@@ -71,7 +71,12 @@ class Engine:
         return self.service.descriptor()
 
     def process_batch(self, raw: DataFrame, **kw):
-        """Run one batch through the router (testkit-style in-process bus)."""
+        """Run one batch through the router (testkit-style in-process bus).
+
+        ``kw`` passes through to ``runtime.run_batch`` (``trace``,
+        ``now_epoch``, ``decoded_inputs``, ``emit_decoded_retry``); the
+        result is a lazy ``BatchResult`` — ``topic(name)`` per output,
+        ``union_all()`` for the whole batch in one frame."""
         return run_batch(self.service, raw, **kw)
 
     def start(

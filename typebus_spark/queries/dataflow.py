@@ -224,11 +224,9 @@ def q_route_counts(spark, sf_dir):
             payload_cols=["event_id", "user_id", "value"],
         ),
     )
-    # materialize stays True: with ONE data-plane schema group
-    # run_batch skips the raw checkpoint anyway (the staged frame IS
-    # one) and checkpoints only the DECODE — which ~16 branches
-    # consume; materialize=False would re-parse the envelope JSON
-    # per branch (the router's most expensive expression)
+    # run_batch checkpoints the raw batch and its decode; every routed
+    # branch scans the decoded rows instead of re-parsing the envelope
+    # JSON (the router's most expensive expression)
     res = run_batch(svc, raw)
     # single-pass tail: every output row carries its destination topic, so
     # one union + one groupBy aggregates all routes in ONE job (empty
@@ -575,11 +573,9 @@ def q_entity_lookup(spark, sf_dir):
             "api.UserState.get",
         ),
     )
-    # materialize stays True: with ONE data-plane schema group
-    # run_batch skips the raw checkpoint anyway (the staged frame IS
-    # one) and checkpoints only the DECODE — which ~16 branches
-    # consume; materialize=False would re-parse the envelope JSON
-    # per branch (the router's most expensive expression)
+    # run_batch checkpoints the raw batch and its decode; every routed
+    # branch scans the decoded rows instead of re-parsing the envelope
+    # JSON (the router's most expensive expression)
     res = run_batch(svc, raw)
     replies = res.topic("api.UserState")
     return decode_envelope(replies, state_schema).select("payload.*")

@@ -33,10 +33,12 @@ from typebus_spark.codec.envelope import (
     encode_envelope,
     new_meta,
 )
-from typebus_spark.registry import Service
+from typebus_spark.registry import RetryPolicy, Service
 from typebus_spark.streaming.retry import (
-    eligible_now,
-    encode_retry,
+    ERROR_COL,
+    _eligibility_conds,
+    _retry_decoded_cols,
+    _retry_parts,
     not_yet_eligible,
     retry_topic,
     split_failures,
@@ -58,21 +60,21 @@ SERVICE_EXCEPTION_COLS = ["message", "throwable_type", "stack_trace", "extra"]
 
 @dataclass
 class BatchResult:
-    """Outputs of one batch pass, keyed by destination topic.
+    """Outputs of one batch pass.
 
-    Two storage forms, one API: ``outputs`` holds exclusive per-topic
-    frames; ``_shared`` holds MULTICAST frames where one computed row
-    fans out to several destinations via a per-row ``topic`` column (a
-    reply goes to its out-type topic and possibly an RPC back-channel
-    and a socket push — computing it once and exploding destinations
-    beats three union branches that each re-run decode+handler).
-    ``topic(name)`` serves both (multicast destinations through filtered
-    views); ``union_all()`` never double-counts.
+    One storage form: ``frames`` holds ``(frame, names)`` pairs. Each
+    frame has columns ``key, value, topic, _name`` and is one generator
+    branch of the router (one per stream and source frame, plus the
+    unroutable dead letters); ``names`` lists the logical outputs its
+    rows can carry. A row's ``_name`` is its topic, except for the reply
+    fan-out's per-row destinations (``_rpc_replies``, ``_socket_pushes``).
+    ``topic(name)`` and ``named()`` filter over the frames;
+    ``union_all()`` selects ``(key, value, topic)`` over all of them.
     """
 
-    outputs: dict[str, DataFrame] = field(default_factory=dict)
-    _views: dict[str, DataFrame] = field(default_factory=dict)
-    _shared: list[DataFrame] = field(default_factory=list)
+    frames: list[tuple[DataFrame, tuple[str, ...]]] = field(
+        default_factory=list
+    )
     # DECODED retry feedback (``run_batch(emit_decoded_retry=True)``):
     # per-stream ``(meta, payload, topic)`` frames an in-process drain
     # loop feeds straight back in, skipping the JSON encode→decode
@@ -80,44 +82,31 @@ class BatchResult:
     # ``union_all`` — these are loop state, not bus output.
     decoded_retry: dict[str, DataFrame] = field(default_factory=dict)
 
-    # (fanned_df, {name: kind}) pairs registered by _add_shared; the
-    # filtered per-name views are built ON DEMAND in _view — most
-    # consumers only ever call union_all(), and eagerly building one
-    # filter+select per destination class per stream was a measured
-    # driver-side (py4j) hotspot of every micro-batch.
-    _shared_named: list = field(default_factory=list)
-
     def topic(self, name: str) -> DataFrame | None:
-        if name in self.outputs:
-            return self.outputs[name]
-        return self._view(name)
+        return _union_kvt(
+            [df.filter(_name_eq(name)) for df, ns in self.frames if name in ns]
+        )
 
     def named(self) -> dict[str, DataFrame]:
-        """Every logical output by name (exclusive topics + multicast
-        views). For inspection; bulk consumers should ``union_all()``."""
-        names = {n for _, kinds in self._shared_named for n in kinds}
-        views = {n: self._view(n) for n in names}
-        return {**self.outputs, **{n: v for n, v in views.items() if v is not None}}
+        """Every logical output by name. For inspection; bulk consumers
+        should ``union_all()``."""
+        names = dict.fromkeys(n for _, ns in self.frames for n in ns)
+        return {n: self.topic(n) for n in names}
 
-    def _view(self, name: str) -> DataFrame | None:
-        if name in self._views:
-            return self._views[name]
-        built = None
-        for fanned, kinds in self._shared_named:
-            kind = kinds.get(name)
-            if kind is None:
-                continue
-            v = fanned.filter(_kind_eq(kind)).select(
-                "key", "value", "topic"
-            )
-            built = v if built is None else built.unionByName(v)
-        if built is not None:
-            self._views[name] = built
-        return built
+    def union_all(self) -> DataFrame | None:
+        """All outputs as ONE (key, value, topic) frame — every branch
+        already carries its destination in the per-row ``topic`` column,
+        so consumers can materialize the whole batch in a single pass
+        instead of one action per destination."""
+        return _union_kvt([df for df, _ in self.frames])
 
-    def _add(self, topic: str, df: DataFrame) -> None:
-        cur = self.outputs.get(topic)
-        self.outputs[topic] = cur.unionByName(df) if cur is not None else df
+    def absorb(self, other: "BatchResult") -> None:
+        """Append another result's outputs to this one."""
+        self.frames.extend(other.frames)
+
+    def _emit(self, src: DataFrame, fan: tuple) -> None:
+        gen, names = fan
+        self.frames.append((src.select(gen).filter(_routed()), names))
 
     def _add_decoded_retry(self, in_fqn: str, df: DataFrame) -> None:
         cur = self.decoded_retry.get(in_fqn)
@@ -125,38 +114,14 @@ class BatchResult:
             cur.unionByName(df) if cur is not None else df
         )
 
-    def _add_shared(self, fanned: DataFrame, names: dict[str, str]) -> None:
-        """Register a multicast frame (columns key/value/topic/_kind);
-        ``names`` maps a logical output name to its ``_kind`` tag so
-        ``topic()`` lookups still work per destination class (built
-        lazily in ``_view``)."""
-        self._shared.append(fanned.select(*_kvt_cols()))
-        self._shared_named.append((fanned, dict(names)))
 
-    def absorb(self, other: "BatchResult", skip=None) -> None:
-        """Merge another result's outputs into this one (optionally
-        skipping exclusive topics matching ``skip``)."""
-        for topic, df in other.outputs.items():
-            if skip is None or not skip(topic):
-                self._add(topic, df)
-        self._shared.extend(other._shared)
-        self._shared_named.extend(other._shared_named)
-        # drop any views cached before this merge — they would miss the
-        # absorbed frames; _view rebuilds over the full _shared_named list
-        self._views.clear()
-
-    def union_all(self) -> DataFrame | None:
-        """All outputs as ONE (key, value, topic) frame — every branch
-        already carries its destination in the per-row ``topic`` column,
-        so consumers can materialize the whole batch in a single pass
-        instead of one action per destination."""
-        frames = list(self.outputs.values()) + self._shared
-        if not frames:
-            return None
-        out = frames[0]
-        for d in frames[1:]:
-            out = out.unionByName(d)
-        return out
+def _union_kvt(frames: list[DataFrame]) -> DataFrame | None:
+    if not frames:
+        return None
+    out = frames[0]
+    for d in frames[1:]:
+        out = out.unionByName(d)
+    return out.select(*_kvt_cols())
 
 
 # Column objects are immutable unresolved expression trees — building
@@ -176,6 +141,16 @@ def _static_meta(fqn: str) -> F.Column:
 @lru_cache(maxsize=1)
 def _kvt_cols() -> tuple:
     return (F.col("key"), F.col("value"), F.col("topic"))
+
+
+@lru_cache(maxsize=1)
+def _routed() -> F.Column:
+    return F.col("topic").isNotNull()
+
+
+@lru_cache(maxsize=64)
+def _name_eq(name: str) -> F.Column:
+    return F.col("_name") == name
 
 
 @lru_cache(maxsize=128)
@@ -205,20 +180,25 @@ def _meta_payload_env() -> F.Column:
 
 
 @lru_cache(maxsize=1)
-def _null_key() -> F.Column:
-    return F.lit(None).cast("binary").alias("key")
+def _undecodable() -> F.Column:
+    return F.col("payload").isNull() | F.col("meta").isNull()
 
 
-@lru_cache(maxsize=1)
-def _envelope_value() -> F.Column:
-    """(meta, payload) re-encoded as the wire value column."""
-    return F.to_json(_meta_payload_env()).cast("binary").alias("value")
+@lru_cache(maxsize=16)
+def _good_cond(retry: bool, now: int | None) -> F.Column:
+    """Handler input: decodable rows, minus backoff-pending retry rows."""
+    good = ~_undecodable()
+    return good & _eligibility_conds(now)[0] if retry else good
 
 
-def _reply_env(out_type: str, out_cols: tuple, key_col: F.Column) -> F.Column:
-    """Reply envelope struct: responseTo = request eventId, correlation
+def _reply_env_cols(
+    out_type: str, out_cols: tuple, key_col: F.Column
+) -> tuple:
+    """(key, reply envelope, request meta) — the reply frame's first
+    projection. The envelope: responseTo = request eventId, correlation
     propagated, directReply passed through (RPC2/RPC3), payload projected
-    to the declared out-type columns."""
+    to the declared out-type columns. It is computed once per row, so the
+    reply on every destination and its OutEventTrace carry one event."""
     reply_meta = new_meta(
         out_type,
         key=key_col,
@@ -228,58 +208,25 @@ def _reply_env(out_type: str, out_cols: tuple, key_col: F.Column) -> F.Column:
         direct_reply_service=F.col("meta.direct_reply.service_name"),
         socket_id=F.col("meta.socket_id"),
     )
-    return F.struct(
+    env = F.struct(
         reply_meta.alias("meta"),
         F.struct(*[F.col(c) for c in out_cols]).alias("payload"),
+    )
+    return (
+        key_col.cast("binary").alias("key"),
+        env.alias("_env"),
+        F.col("meta"),
     )
 
 
 @lru_cache(maxsize=256)
-def _reply_env_cached(
+def _reply_env_cols_cached(
     out_type: str, out_cols: tuple, pk: str | None
 ) -> tuple:
     key_col = (
         F.col(pk).cast("string") if pk else F.lit(None).cast("string")
     )
-    return key_col, _reply_env(out_type, out_cols, key_col)
-
-
-_fanned_cols_cache: dict = {}
-
-
-def _fanned_cols(key_col: F.Column, env: F.Column, fan_cols: F.Column):
-    """(key, value, fanned-destinations) projection — pure function of
-    three cached Column singletons, keyed by identity (Columns are
-    unhashable); pins its inputs so their ids stay live."""
-    key = (id(key_col), id(env), id(fan_cols))
-    hit = _fanned_cols_cache.get(key)
-    if hit is not None:
-        return hit[0]
-    while len(_fanned_cols_cache) >= 512:
-        _fanned_cols_cache.pop(next(iter(_fanned_cols_cache)))
-    cols = (
-        key_col.cast("binary").alias("key"),
-        F.to_json(env).cast("binary").alias("value"),
-        fan_cols,
-    )
-    _fanned_cols_cache[key] = (cols, key_col, env, fan_cols)
-    return cols
-
-
-@lru_cache(maxsize=1)
-def _FANNED_TAIL() -> tuple:
-    return (
-        F.col("key"),
-        F.col("value"),
-        F.col("_d.topic").alias("topic"),
-        F.col("_d.kind").alias("_kind"),
-    )
-
-
-@lru_cache(maxsize=256)
-def _topic_col(topic: str) -> F.Column:
-    """``lit(topic) AS topic`` — rebuilt per stream per round otherwise."""
-    return F.lit(topic).alias("topic")
+    return _reply_env_cols(out_type, out_cols, key_col)
 
 
 def _sql_str(s: str) -> str:
@@ -301,12 +248,7 @@ def _topic_in(topics: tuple, negate: bool = False) -> F.Column:
 @lru_cache(maxsize=256)
 def _retry_pending_cols(retry_t: str) -> tuple:
     """(meta, payload, lit-topic) projection for backoff-pending rows."""
-    return (F.col("meta"), F.col("payload"), _topic_col(retry_t))
-
-
-@lru_cache(maxsize=8)
-def _kind_eq(kind: str) -> F.Column:
-    return F.col("_kind") == kind
+    return (F.col("meta"), F.col("payload"), F.lit(retry_t).alias("topic"))
 
 
 @lru_cache(maxsize=1)
@@ -319,153 +261,224 @@ def _fid_join_cond() -> F.Column:
     return F.col("meta.event_id") == F.col("_fid")
 
 
-@lru_cache(maxsize=1)
-def _payload_null_split() -> tuple:
-    """(bad-filter condition, good-filter condition) — static trees."""
-    bad = F.col("payload").isNull() | F.col("meta").isNull()
-    good = F.col("payload").isNotNull() & F.col("meta").isNotNull()
-    return bad, good
+def _json(env: F.Column) -> F.Column:
+    return F.to_json(env).cast("binary")
 
 
 @lru_cache(maxsize=256)
-def _retry_encode_cols(retry_t: str) -> tuple:
-    """(null-key, re-encoded wire value, lit-topic) projection for
-    backoff-pending rows headed back to the retry topic."""
-    return (_null_key(), _envelope_value(), _topic_col(retry_t))
+def _trace_value(
+    service_name: str, trace_fqn: str, env: str | None = None
+) -> F.Column:
+    """An envelope wrapped as a typed Trace event — payload = (service,
+    event), meta = fresh, eventType = the trace FQN, trace=false
+    (bus/package.scala:75-89). The envelope is the row's ``(meta,
+    payload)``, or the struct column named ``env``."""
+    event = _meta_payload_env() if env is None else F.col(env)
+    payload = F.struct(F.lit(service_name).alias("service"), event.alias("event"))
+    return _json(
+        F.struct(_static_meta(trace_fqn).alias("meta"), payload.alias("payload"))
+    )
 
 
-@lru_cache(maxsize=128)
-def _fan_cols(out_type: str) -> F.Column:
-    """Multicast destination explode: one computed reply row fans into
-    its destination set — the out-type topic, plus the caller's
+@lru_cache(maxsize=256)
+def _dead_letter_value(message: str, in_fqn: str | None) -> F.Column:
+    """A routed row wrapped as a ServiceException envelope
+    (produceErrorReport, bus/package.scala:93-125); ``extra.topic`` names
+    the topic the row arrived on — ``in_fqn``, or the row's own ``topic``
+    column when None."""
+    orig_topic = F.lit(in_fqn) if in_fqn is not None else F.col("topic")
+    payload = F.struct(
+        F.lit(message).alias("message"),
+        F.lit("java.lang.RuntimeException").alias("throwable_type"),
+        F.array().cast("array<string>").alias("stack_trace"),
+        F.map_from_arrays(F.array(F.lit("topic")), F.array(orig_topic)).alias(
+            "extra"
+        ),
+    )
+    return _json(
+        F.struct(
+            _static_meta("typebus.ServiceException").alias("meta"),
+            payload.alias("payload"),
+        )
+    )
+
+
+@lru_cache(maxsize=1)
+def _null_key() -> F.Column:
+    return F.lit(None).cast("binary")
+
+
+@lru_cache(maxsize=1)
+def _unroutable_cols() -> tuple:
+    return (
+        _null_key().alias("key"),
+        _dead_letter_value("no handler for topic", None).alias("value"),
+        F.lit(DEAD_LETTER_TOPIC).alias("topic"),
+        F.lit(DEAD_LETTER_TOPIC).alias("_name"),
+    )
+
+
+def _fan(arms: list) -> tuple:
+    """One generator over a source frame: ``inline`` of one
+    ``(key, value, topic, _name)`` struct per arm ``(cond, key, value,
+    topic, name)``. An arm emits a row where ``cond`` holds (None =
+    always) and its topic is non-null; ``BatchResult._emit`` drops the
+    null-topic rows. ``cond`` also guards ``value``, so an arm's envelope
+    is only encoded for the rows it emits. Returns ``(generator, names)``.
+    """
+    structs = []
+    for cond, key, value, topic, name in arms:
+        topic = F.lit(topic) if isinstance(topic, str) else topic
+        if cond is not None:
+            topic, value = F.when(cond, topic), F.when(cond, value)
+        structs.append(
+            F.struct(
+                (key if key is not None else _null_key()).alias("key"),
+                value.alias("value"),
+                topic.alias("topic"),
+                F.lit(name).alias("_name"),
+            )
+        )
+    return F.inline(F.array(*structs)), tuple(a[4] for a in arms)
+
+
+@lru_cache(maxsize=256)
+def _decoded_fan(
+    service_name: str,
+    in_fqn: str,
+    retry_t: str | None,
+    requeue: bool,
+    now: int | None,
+    trace: bool,
+) -> tuple:
+    """Over decoded ``(meta, payload)`` rows: backoff-pending rows back to
+    the retry topic (KafkaBus.scala:188-197 merge semantics, minus the
+    dropHead load-shed; only with ``requeue``), undecodable rows to the
+    dead-letter topic (O2), and an InEventTrace of every routed row,
+    gated per row (O1, KafkaBus.scala:200)."""
+    bad = _undecodable()
+    dead, routed = bad, ~bad
+    arms = []
+    if retry_t is not None:
+        pending = _eligibility_conds(now)[1]
+        dead, routed = ~pending & dead, ~pending & routed
+        if requeue:
+            arms.append(
+                (pending, None, _json(_meta_payload_env()), retry_t, retry_t)
+            )
+    arms += [
+        (
+            dead,
+            None,
+            _dead_letter_value("undecodable payload", in_fqn),
+            DEAD_LETTER_TOPIC,
+            DEAD_LETTER_TOPIC,
+        ),
+        (
+            routed & _trace_gate(trace),
+            None,
+            _trace_value(service_name, TRACE_IN_TOPIC),
+            TRACE_IN_TOPIC,
+            TRACE_IN_TOPIC,
+        ),
+    ]
+    return _fan(arms)
+
+
+@lru_cache(maxsize=256)
+def _reply_fan(service_name: str, out_type: str, trace: bool) -> tuple:
+    """(projection, fan) over the reply frame ``(key, _env, meta)``: the
+    encoded reply goes to its out-type topic, plus the caller's
     service-name topic when the request carried a direct_reply (RPC2,
     KafkaBus.scala:60-73,157-169), plus a per-socket push topic when it
-    carried a socket_id (event/package.scala:156-159). One explode
-    branch computes handler+to_json ONCE where three union branches
-    would each re-run them."""
-    dests = F.array(
-        F.struct(F.lit(out_type).alias("topic"), F.lit("out").alias("kind")),
-        F.struct(
-            F.col("meta.direct_reply.service_name").alias("topic"),
-            F.lit("rpc").alias("kind"),
-        ),
-        F.struct(
-            F.when(
-                F.col("meta.socket_id").isNotNull(),
-                F.concat(F.lit(SOCKET_TOPIC_PREFIX), F.col("meta.socket_id")),
-            ).alias("topic"),
-            F.lit("sock").alias("kind"),
-        ),
+    carried a socket_id (event/package.scala:156-159); an OutEventTrace
+    of the reply goes out when the request is traced (KafkaBus.scala:75).
+    """
+    proj = (
+        F.col("key"),
+        F.col("_env"),
+        _json(F.col("_env")).alias("value"),
+        F.when(
+            _trace_gate(trace),
+            _trace_value(service_name, TRACE_OUT_TOPIC, "_env"),
+        ).alias("_trace"),
     )
-    return F.explode(
-        F.filter(dests, lambda d: d.getField("topic").isNotNull())
-    ).alias("_d")
-
-
-@lru_cache(maxsize=128)
-def _flat_env(payload_fields: tuple) -> F.Column:
-    """Envelope struct rebuilt from FLAT (meta + payload fields) rows."""
-    return F.struct(
-        F.col("meta").alias("meta"),
-        F.struct(*[F.col(c) for c in payload_fields]).alias("payload"),
+    key, value, sock = F.col("key"), F.col("value"), F.col("_env.meta.socket_id")
+    fan = _fan(
+        [
+            (None, key, value, out_type, out_type),
+            (
+                None,
+                key,
+                value,
+                F.col("_env.meta.direct_reply.service_name"),
+                "_rpc_replies",
+            ),
+            (
+                None,
+                key,
+                value,
+                F.concat(F.lit(SOCKET_TOPIC_PREFIX), sock),
+                "_socket_pushes",
+            ),
+            (
+                F.col("_trace").isNotNull(),
+                None,
+                F.col("_trace"),
+                TRACE_OUT_TOPIC,
+                TRACE_OUT_TOPIC,
+            ),
+        ]
     )
-
-
-_trace_cols_cache: dict = {}
-
-
-def _trace_cols(service_name: str, env: F.Column, trace_fqn: str) -> tuple:
-    # keyed on the env Column by identity (Column is unhashable) —
-    # callers pass lru-cached singletons (_meta_payload_env/_flat_env),
-    # so hits are real and ids stable; env is pinned in the value to
-    # keep its id from being reused. The wrapper tree is pure and this
-    # build was a measured per-branch driver hotspot.
-    key = (service_name, id(env), trace_fqn)
-    hit = _trace_cols_cache.get(key)
-    if hit is not None:
-        return hit[0]
-    # Bounded: long-running services can churn env structs (rebuilt
-    # _reply_plan structs, evicted _flat_env entries) — evict oldest
-    # entries past a generous cap instead of pinning Columns forever.
-    while len(_trace_cols_cache) >= 512:
-        _trace_cols_cache.pop(next(iter(_trace_cols_cache)))
-    payload = F.struct(
-        F.lit(service_name).alias("service"), env.alias("event")
-    )
-    out_env = F.struct(
-        _static_meta(trace_fqn).alias("meta"), payload.alias("payload")
-    )
-    cols = (
-        F.lit(None).cast("binary").alias("key"),
-        F.to_json(out_env).cast("binary").alias("value"),
-        F.lit(trace_fqn).alias("topic"),
-    )
-    _trace_cols_cache[key] = (cols, env)
-    return cols
-
-
-def _trace_rows(
-    service_name: str, traced: DataFrame, env: F.Column, trace_fqn: str
-) -> DataFrame:
-    """Wrap envelopes as a typed Trace event — payload = (service,
-    event), meta = fresh, eventType = the trace FQN, trace=false
-    (bus/package.scala:75-89)."""
-    return traced.select(*_trace_cols(service_name, env, trace_fqn))
-
-
-@lru_cache(maxsize=32)
-def _dead_letter_cols(message: str) -> tuple:
-    payload = F.struct(
-        F.lit(message).alias("message"),
-        F.lit("java.lang.RuntimeException").alias("throwable_type"),
-        F.array().cast("array<string>").alias("stack_trace"),
-        F.map_from_arrays(
-            F.array(F.lit("topic")), F.array(F.col("topic"))
-        ).alias("extra"),
-    )
-    env = F.struct(
-        _static_meta("typebus.ServiceException").alias("meta"),
-        payload.alias("payload"),
-    )
-    return (
-        F.lit(None).cast("binary").alias("key"),
-        F.to_json(env).cast("binary").alias("value"),
-        F.lit(DEAD_LETTER_TOPIC).alias("topic"),
-    )
-
-
-def _dead_letter(raw: DataFrame, message: str) -> DataFrame:
-    """Wrap raw bus rows as ServiceException envelopes
-    (produceErrorReport, bus/package.scala:93-125)."""
-    return raw.select(*_dead_letter_cols(message))
+    return proj, fan
 
 
 @lru_cache(maxsize=256)
-def _dead_letter_cols_static(message: str, orig_topic: str) -> tuple:
-    """``_dead_letter_cols`` with the originating topic as a LITERAL —
-    fuses the former two-select chain (project topic lit → wrap) into
-    one projection for the per-stream branches whose topic is known at
-    build time (undecodable payload, handler give-up). The intermediate
-    select also computed a to_json envelope the wrapper immediately
-    discarded — pure py4j + plan-node overhead per warm router build
-    (r12 verdict item 1, tools/py4j_sites.py)."""
-    payload = F.struct(
-        F.lit(message).alias("message"),
-        F.lit("java.lang.RuntimeException").alias("throwable_type"),
-        F.array().cast("array<string>").alias("stack_trace"),
-        F.map_from_arrays(
-            F.array(F.lit("topic")), F.array(F.lit(orig_topic))
-        ).alias("extra"),
-    )
-    env = F.struct(
-        _static_meta("typebus.ServiceException").alias("meta"),
-        payload.alias("payload"),
-    )
-    return (
-        F.lit(None).cast("binary").alias("key"),
-        F.to_json(env).cast("binary").alias("value"),
-        F.lit(DEAD_LETTER_TOPIC).alias("topic"),
-    )
+def _give_up_fan(
+    service_name: str,
+    in_fqn: str,
+    policy: RetryPolicy | None,
+    flagged: bool,
+    requeue: bool,
+    now: int | None,
+    trace: bool,
+) -> tuple:
+    """Over failed rows' ORIGINAL events (``meta, payload``, plus a
+    ``_retryable`` flag when ``flagged``): retry-eligible rows back to
+    the retry topic with attempt and backoff updated (ST1; only with
+    ``requeue``), the rest dead-lettered as "handler failed" with an
+    ExceptionTrace beside the error report (produceErrorReport,
+    bus/package.scala:110-124). Returns ``(retry condition, fan)``; the
+    condition is None without a policy."""
+    retry = gave_up = None
+    arms = []
+    if policy is not None:
+        retry = _retry_parts(policy)[0]
+        if flagged:
+            retry = retry & F.col("_retryable")
+        gave_up = ~retry
+        if requeue:
+            rt = retry_topic(in_fqn)
+            meta, payload, _ = _retry_decoded_cols(policy, rt, now)
+            arms.append((retry, None, _json(F.struct(meta, payload)), rt, rt))
+    gate = _trace_gate(trace)
+    arms += [
+        (
+            gave_up,
+            None,
+            _dead_letter_value("handler failed", in_fqn),
+            DEAD_LETTER_TOPIC,
+            DEAD_LETTER_TOPIC,
+        ),
+        (
+            gate if gave_up is None else gave_up & gate,
+            None,
+            _trace_value(service_name, TRACE_EXCEPTION_TOPIC),
+            TRACE_EXCEPTION_TOPIC,
+            TRACE_EXCEPTION_TOPIC,
+        ),
+    ]
+    return retry, _fan(arms)
 
 
 def run_batch(
@@ -473,9 +486,6 @@ def run_batch(
     raw: DataFrame | None,
     trace: bool = False,
     now_epoch: int | None = None,
-    lazy: bool = True,
-    materialize: bool = True,
-    live_topics: set[str] | None = None,
     decoded_inputs: dict[str, DataFrame] | None = None,
     emit_decoded_retry: bool = False,
 ) -> BatchResult:
@@ -485,21 +495,22 @@ def run_batch(
     transport-neutral bus row (Kafka source shape). ``now_epoch`` pins the
     retry clock for deterministic tests (wall clock otherwise).
 
-    Lazy by default: every branch is declared unconditionally and nothing
-    runs until the caller materializes (``BatchResult.union_all`` gives
-    the whole batch as one single-pass frame). ``lazy=False`` restores
-    the trimmed-output mode — one ``isEmpty`` driver action PER BRANCH,
-    each re-executing the decode+handler lineage; only worth it for
-    interactive inspection of which topics fired.
+    Lazy: nothing runs until the caller materializes the result
+    (``BatchResult.union_all`` gives the whole batch as one frame). Every
+    service gets the same plan shape:
 
-    ``materialize`` (default) localCheckpoints ``raw`` up front: the
-    router fans every batch into ~8 branches per stream, and without the
-    checkpoint each branch re-executes the caller's upstream lineage
-    (source scan + envelope encode). One bounded materialization of the
-    (key, value, topic) rows beats N re-scans — pass ``materialize=False``
-    only when the caller already checkpointed (drain_batches rounds).
-    The per-stream DECODE is always checkpointed (see inline note) — the
-    routing fan-out re-parses the envelope JSON per branch otherwise.
+    - ``raw`` is checkpointed, then decoded once per payload-schema group
+      (streams sharing a schema decode together; a stream's rows are a
+      topic filter over its group's decode), and that decode is
+      checkpointed too. Catalyst has no cross-branch CSE through a Union,
+      so without the checkpoints every branch would re-run the caller's
+      upstream lineage and re-parse the envelope JSON.
+    - Unroutable rows are dead-lettered from the raw checkpoint.
+    - Each stream contributes at most three generator branches, one per
+      source frame: its decoded rows (retry re-queue, undecodable dead
+      letter, InEventTrace), the handler output (reply fan-out and
+      OutEventTrace) and its failed rows (retry, "handler failed" dead
+      letter, ExceptionTrace).
 
     ``decoded_inputs`` maps in-type FQN → an ALREADY-DECODED ``(meta,
     payload, topic)`` frame, unioned past the decode stage (the drain
@@ -511,215 +522,85 @@ def run_batch(
     """
     res = BatchResult()
     decoded_inputs = decoded_inputs or {}
-    now = now_epoch  # int|None passes through to the cached retry builders
-    # Streams sharing a payload schema decode TOGETHER (one from_json
-    # checkpoint per schema group, not per stream — a service with N
-    # same-shaped streams pays one decode job instead of N; per-stream
-    # views are cheap topic filters over the checkpointed rows).
-    schema_groups: dict[str, list[str]] = {}
-    for f in service.streams:
-        key = service.catalog.schema_for(f).json()
-        schema_groups.setdefault(key, []).append(f)
-    # With exactly ONE DATA-PLANE schema group the whole batch decodes as
-    # one frame that ALSO carries the unroutable topics (dead-letter only
-    # needs the envelope-level ``topic`` column) — so the raw checkpoint
-    # is skipped entirely: one materialization per batch instead of two
-    # full passes over the wire bytes. Control-plane groups (streams all
-    # marked ``service_level``, e.g. the auto-registered discovery
-    # stream) are expected near-empty every batch; they re-decode their
-    # topic-filtered slice from the SAME checkpoint via the retained wire
-    # bytes (``keep_value``) rather than forcing the two-pass path.
-    def _all_service_level(fqns: list[str]) -> bool:
-        return all(service.streams[f].service_level for f in fqns)
+    streams = service.streams
+    requeue = not emit_decoded_retry
 
-    data_keys = [
-        k for k, fqns in schema_groups.items() if not _all_service_level(fqns)
-    ]
-    single_group = (
-        raw is not None and live_topics is None and len(data_keys) == 1
-    )
-    dominant_key = data_keys[0] if single_group else None
-    if raw is not None:
-        if materialize and not single_group:
-            # LAZY checkpoint: the first downstream action materializes
-            # it (RDD cache locks compute each partition exactly once,
-            # so the nondeterministic uuid envelopes stay consistent
-            # across branches — probed in test_runtime). Eager here cost
-            # a separate build-time job per batch.
-            raw = raw.localCheckpoint(eager=False)
-        # Live-topic pruning: one tiny scan of the materialized batch
-        # tells us which topics actually carry rows, so streams with no
-        # input this batch contribute NO decode job and NO branches.
-        # Only worth a driver action when it can actually skip decode
-        # jobs — with ≤2 schema groups the probe job costs as much as it
-        # could ever save, so assume everything is live (empty groups
-        # then decode an empty filter: same price as the probe).
-        if live_topics is not None:
-            live = live_topics
-        elif not single_group and len(schema_groups) > 2:
-            live = {r[0] for r in raw.select("topic").distinct().collect()}
-        else:
-            live = None  # unknown → treat every registered topic as live
-    else:
-        live = set()
+    def _stream_topics(fqn: str) -> tuple:
+        return (fqn,) + ((retry_topic(fqn),) if streams[fqn].retry else ())
 
-    # R1 routing: topic-per-type makes dispatch a source-level filter.
-    # Retry topics route back to their base stream (U1 merge analog).
-    handled = set(service.streams) | {
-        retry_topic(f) for f, s in service.streams.items() if s.retry
-    }
-    # The service-name topic is the RPC back-channel
-    # (KafkaBus.scala:184): replies addressed to this service land
-    # there and are consumed by the RPC correlation path
-    # (streaming/rpc.py), not a registered stream — never dead-letter
-    # them as unroutable.
-    ignored = handled | {service.name}
-
-    def _stream_topics(fqn: str) -> list[str]:
-        return [fqn] + ([retry_topic(fqn)] if service.streams[fqn].retry else [])
-
-    def _is_live(fqn: str) -> bool:
-        return live is None or bool(set(_stream_topics(fqn)) & live)
-
-    # One decode checkpoint per schema group with live rows; per-stream
-    # frames are topic filters over it (plus any decoded feedback).
     decoded_by_fqn: dict[str, DataFrame] = {}
-    deadletter_src: DataFrame | None = None
-    # Dominant group first: control-plane groups re-decode from its frame.
-    group_order = sorted(
-        schema_groups.items(), key=lambda kv: kv[0] != dominant_key
-    )
-    for key, fqns in group_order:
-        group_live = [
-            f for f in fqns if raw is not None and _is_live(f)
+    if raw is not None:
+        # LAZY checkpoints: the caller's one materialization computes each
+        # exactly once (RDD cache locks compute each partition once, so
+        # the nondeterministic uuid envelopes stay consistent across
+        # branches — probed in test_runtime), with no build-time job.
+        raw = raw.localCheckpoint(eager=False)
+        groups: dict[str, list[str]] = {}
+        for f in streams:
+            groups.setdefault(service.catalog.schema_for(f).json(), []).append(f)
+        for fqns in groups.values():
+            gtopics = tuple(t for f in fqns for t in _stream_topics(f))
+            gdec = decode_envelope(
+                raw.filter(_topic_in(gtopics)),
+                service.catalog.schema_for(fqns[0]),
+            ).localCheckpoint(eager=False)
+            for f in fqns:
+                decoded_by_fqn[f] = (
+                    gdec
+                    if len(fqns) == 1
+                    else gdec.filter(_topic_in(_stream_topics(f)))
+                )
+        # R1 routing: topic-per-type makes dispatch a source-level filter;
+        # retry topics route back to their base stream (U1 merge analog).
+        # The service-name topic is the RPC back-channel
+        # (KafkaBus.scala:184): replies addressed to this service are
+        # consumed by the RPC correlation path (streaming/rpc.py), so they
+        # are never dead-lettered as unroutable.
+        routed = {t for f in streams for t in _stream_topics(f)} | {service.name}
+        res.frames.append(
+            (
+                raw.filter(_topic_in(tuple(sorted(routed)), negate=True)).select(
+                    *_unroutable_cols()
+                ),
+                (DEAD_LETTER_TOPIC,),
+            )
+        )
+
+    for in_fqn, sd in streams.items():
+        parts = [
+            d
+            for d in (decoded_by_fqn.get(in_fqn), decoded_inputs.get(in_fqn))
+            if d is not None
         ]
-        if group_live:
-            gtopics = [t for f in group_live for t in _stream_topics(f)]
-            payload_schema = service.catalog.schema_for(group_live[0])
-            # Materialize the decode ONCE per schema group: ~5 downstream
-            # branches per stream consume it, and Catalyst has no
-            # cross-branch CSE through a Union — without this every
-            # branch re-parses the envelope JSON (the single most
-            # expensive expression in the router). One bounded job;
-            # every branch then scans decoded rows.
-            if single_group and key == dominant_key:
-                # gdec carries foreign topics (and the wire bytes) too →
-                # per-stream frames always topic-filter; unroutable rows
-                # dead-letter and control-plane slices re-decode from the
-                # same checkpoint below.
-                gdec = decode_envelope(raw, payload_schema, keep_value=True)
-                if materialize:
-                    # lazy for the same reason as the raw checkpoint:
-                    # the caller's one materialization computes the
-                    # decode once; no separate build-time job
-                    gdec = gdec.localCheckpoint(eager=False)
-                deadletter_src = gdec
-                for f in group_live:
-                    decoded_by_fqn[f] = gdec.filter(
-                        _topic_in(tuple(_stream_topics(f)))
-                    ).drop("value")
-            elif single_group:
-                # Control-plane slice: tiny topic filter over the
-                # checkpointed dominant frame, payload re-parsed from the
-                # retained bytes — no extra materialization. The dominant
-                # data-plane group is guaranteed processed first (the
-                # group_order stable sort puts dominant_key in front), so
-                # its checkpointed frame must exist here.
-                assert deadletter_src is not None, (
-                    "single-group ordering invariant broken: control-plane "
-                    "slice decoded before the dominant data-plane frame"
-                )
-                sdec = decode_envelope(
-                    deadletter_src.filter(
-                        _topic_in(tuple(gtopics))
-                    ).select("value", "topic"),
-                    payload_schema,
-                )
-                for f in group_live:
-                    decoded_by_fqn[f] = (
-                        sdec
-                        if len(group_live) == 1
-                        else sdec.filter(_topic_in(tuple(_stream_topics(f))))
-                    )
-            else:
-                gdec = decode_envelope(
-                    raw.filter(_topic_in(tuple(gtopics))), payload_schema
-                ).localCheckpoint(eager=False)
-                for f in group_live:
-                    decoded_by_fqn[f] = (
-                        gdec
-                        if len(group_live) == 1
-                        else gdec.filter(_topic_in(tuple(_stream_topics(f))))
-                    )
-
-    if raw is not None and (live is None or live - ignored):
-        unhandled = (deadletter_src if single_group else raw).filter(
-            _topic_in(tuple(sorted(ignored)), negate=True)
-        )
-        res._add(
-            DEAD_LETTER_TOPIC,
-            _dead_letter(unhandled, "no handler for topic"),
-        )
-
-    for in_fqn, sd in service.streams.items():
-        fed = decoded_inputs.get(in_fqn)
-        decoded = decoded_by_fqn.get(in_fqn)
-        if decoded is None and fed is None:
-            continue  # no rows for this stream in the batch
-        payload_schema = service.catalog.schema_for(in_fqn)
-        if decoded is not None and fed is not None:
-            decoded = decoded.unionByName(fed)
-        elif decoded is None:
-            decoded = fed  # caller already checkpointed
-
-        if sd.retry:
-            # Backoff gate: rows whose not_before hasn't passed are
-            # re-queued untouched (KafkaBus.scala:188-197 merge semantics,
-            # minus the 16-element dropHead load-shed — nothing is shed).
-            pending = not_yet_eligible(decoded, now_epoch)
-            if emit_decoded_retry:
-                res._add_decoded_retry(
-                    in_fqn,
-                    pending.select(*_retry_pending_cols(retry_topic(in_fqn))),
-                )
-            elif lazy or not pending.isEmpty():
-                res._add(
-                    retry_topic(in_fqn),
-                    pending.select(
-                        *_retry_encode_cols(retry_topic(in_fqn))
-                    ),
-                )
-            decoded = eligible_now(decoded, now_epoch)
-
-        bad_cond, good_cond = _payload_null_split()
-        bad = decoded.filter(bad_cond)
-        if lazy or not bad.isEmpty():
-            res._add(
-                DEAD_LETTER_TOPIC,
-                bad.select(
-                    *_dead_letter_cols_static("undecodable payload", in_fqn)
+        if not parts:
+            continue
+        decoded = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        retry_t = retry_topic(in_fqn) if sd.retry else None
+        if retry_t is not None and emit_decoded_retry:
+            res._add_decoded_retry(
+                in_fqn,
+                not_yet_eligible(decoded, now_epoch).select(
+                    *_retry_pending_cols(retry_t)
                 ),
             )
-        good = decoded.filter(good_cond)
-
-        # O1 InEventTrace (KafkaBus.scala:200): consume-side trace of every
-        # routed event, gated per-row (global flag OR meta.trace) with the
-        # never-trace-a-trace loop guard (bus/package.scala:69-74)
-        res._add(
-            TRACE_IN_TOPIC,
-            _trace_rows(
+        res._emit(
+            decoded,
+            _decoded_fan(
                 service.name,
-                good.filter(_trace_gate(trace)),
-                _meta_payload_env(),
-                TRACE_IN_TOPIC,
+                in_fqn,
+                retry_t,
+                requeue,
+                now_epoch if retry_t else None,
+                trace,
             ),
         )
 
         # T1: handler over (meta, payload-fields); flatten payload for
         # ergonomic expression handlers, keep meta for correlation.
+        payload_schema = service.catalog.schema_for(in_fqn)
         payload_fields = tuple(f.name for f in payload_schema.fields)
-        flat = good.select(*_flat_cols(payload_fields))
-        out = sd.handler(flat)
+        good = decoded.filter(_good_cond(retry_t is not None, now_epoch))
+        out = sd.handler(good.select(*_flat_cols(payload_fields)))
 
         # ST1/ST2 + C2: rows marked failed (``_error`` convention) are
         # re-delivered from the ORIGINAL event (semi-join on the retry
@@ -728,85 +609,45 @@ def run_batch(
         failed = None
         if out is not None:
             out, failed = split_failures(out)
-        if failed is not None and (lazy or not failed.isEmpty()):
-            from typebus_spark.streaming.retry import ERROR_COL
-
-            # ST2 selective retry: only errors matching the stream's
-            # retry_on pattern are retryable (the PF.isDefinedAt analog,
-            # bus/package.scala:41-45); the rest dead-letter directly.
-            if sd.retry and sd.retry_on:
-                retryable_ids = failed.filter(
-                    F.col(ERROR_COL).rlike(sd.retry_on)
-                )
-                unmatched_ids = failed.filter(
-                    ~F.col(ERROR_COL).rlike(sd.retry_on)
-                )
-            else:
-                retryable_ids, unmatched_ids = failed, None
-
-            def _orig(ids: DataFrame) -> DataFrame:
-                return (
-                    good.join(
-                        ids.select(_fid_col()),
-                        _fid_join_cond(),
-                        "left_semi",
+        if failed is not None:
+            flagged = bool(sd.retry and sd.retry_on)
+            if flagged:
+                # ST2 selective retry: only errors matching the stream's
+                # retry_on pattern are retryable (the PF.isDefinedAt
+                # analog, bus/package.scala:41-45); an event retries only
+                # when every failure it raised matches.
+                ids = failed.groupBy(_fid_col()).agg(
+                    F.bool_and(F.col(ERROR_COL).rlike(sd.retry_on)).alias(
+                        "_retryable"
                     )
-                    .select(*_flat_cols(payload_fields))
                 )
-
-            if sd.retry and emit_decoded_retry:
-                from typebus_spark.streaming.retry import retry_decoded
-
-                # Drain mode: cut the semi-join lineage HERE, once per
-                # round — retry rows, give-up dead-letters, and the
-                # exception trace all derive from this joined frame, and
-                # without the checkpoint each of those arms (plus the
-                # caller's final materialization) re-executes the
-                # broadcast join per round. (A fused variant that folded
-                # the pending queue into one combined checkpoint per
-                # round measured consistently SLOWER — the extra union
-                # degrades the join materialization more than the saved
-                # job costs; see drain_batches for the queue snapshot.)
-                # lazy: materialized by the drain loop's queue-snapshot
-                # count (retry_dec is a projection of this frame), so the
-                # round pays one materialization job, not two
-                orig_failed = _orig(retryable_ids).localCheckpoint(
-                    eager=False
-                )
-                retry_dec, gave_up = retry_decoded(
-                    orig_failed, in_fqn, sd.retry, payload_fields, now
-                )
-                res._add_decoded_retry(in_fqn, retry_dec)
-            elif sd.retry:
-                retry_rows, gave_up = encode_retry(
-                    _orig(retryable_ids), in_fqn, sd.retry, payload_fields, now
-                )
-                if lazy or not retry_rows.isEmpty():
-                    res._add(retry_topic(in_fqn), retry_rows)
+                orig = good.join(ids, _fid_join_cond())
             else:
-                gave_up = _orig(retryable_ids)
-            if unmatched_ids is not None:
-                gave_up = gave_up.unionByName(_orig(unmatched_ids))
-            if lazy or not gave_up.isEmpty():
-                res._add(
-                    DEAD_LETTER_TOPIC,
-                    gave_up.select(
-                        *_dead_letter_cols_static("handler failed", in_fqn)
+                orig = good.join(
+                    failed.select(_fid_col()), _fid_join_cond(), "left_semi"
+                )
+            retry, fan = _give_up_fan(
+                service.name,
+                in_fqn,
+                sd.retry,
+                flagged,
+                requeue,
+                now_epoch if requeue else None,
+                trace,
+            )
+            if retry is not None and emit_decoded_retry:
+                # Drain mode: cut the join lineage here, once per round —
+                # the decoded retry rows and the give-up branch both read
+                # it. Lazy: the drain loop's queue-snapshot count
+                # materializes it, so the round pays one job, not two.
+                orig = orig.localCheckpoint(eager=False)
+                res._add_decoded_retry(
+                    in_fqn,
+                    orig.filter(retry).select(
+                        *_retry_decoded_cols(sd.retry, retry_t, now_epoch)
                     ),
                 )
-                # ExceptionTrace alongside the error report
-                # (produceErrorReport, bus/package.scala:110-124);
-                # gave_up rows are flat (meta + payload fields) — rebuild
-                # the envelope struct for the trace wrapper
-                res._add(
-                    TRACE_EXCEPTION_TOPIC,
-                    _trace_rows(
-                        service.name,
-                        gave_up.filter(_trace_gate(trace)),
-                        _flat_env(tuple(payload_fields)),
-                        TRACE_EXCEPTION_TOPIC,
-                    ),
-                )
+            res._emit(orig, fan)
 
         if sd.out_type is None or out is None:
             continue  # T2 terminal sink stream
@@ -823,7 +664,7 @@ def run_batch(
                 f"handler for {in_fqn} must preserve the 'meta' column"
             )
         out_schema = service.catalog.schema_for(sd.out_type)
-        out_cols = [f.name for f in out_schema.fields]
+        out_cols = tuple(f.name for f in out_schema.fields)
         missing = [c for c in out_cols if c not in out.columns]
         if missing:
             raise ValueError(
@@ -835,47 +676,22 @@ def run_batch(
         # pin on the StreamDef; per-micro-batch rebuilds are pure py4j
         # overhead
         cached = getattr(sd, "_reply_plan", None)
-        if cached is not None and cached[0] == tuple(out_cols):
-            _, key_col, env = cached
+        if cached is not None and cached[0] == out_cols:
+            env_cols = cached[1]
         else:
             pk = sd.partition_key
             if isinstance(pk, (str, type(None))):
                 # pure function of (out type, cols, key name): shared
                 # across Service instances — a fresh Service per query
                 # invocation otherwise rebuilds ~70 py4j calls per stream
-                key_col, env = _reply_env_cached(
-                    sd.out_type, tuple(out_cols), pk
-                )
+                env_cols = _reply_env_cols_cached(sd.out_type, out_cols, pk)
             else:
-                key_col = pk.cast("string")
-                env = _reply_env(sd.out_type, tuple(out_cols), key_col)
-            sd._reply_plan = (tuple(out_cols), key_col, env)
-        fan_cols = getattr(sd, "_fan_cols", None)
-        if fan_cols is None:
-            fan_cols = _fan_cols(sd.out_type)
-            sd._fan_cols = fan_cols
-        # OutEventTrace (KafkaBus.scala:75): publish-side trace of the
-        # reply envelope, gated by the request's meta.trace / global flag
-        res._add(
-            TRACE_OUT_TOPIC,
-            _trace_rows(
-                service.name,
-                out.filter(_trace_gate(trace)),
-                env,
-                TRACE_OUT_TOPIC,
-            ),
-        )
-        fanned = out.select(*_fanned_cols(key_col, env, fan_cols)).select(
-            *_FANNED_TAIL()
-        )
-        res._add_shared(
-            fanned,
-            {
-                sd.out_type: "out",
-                "_rpc_replies": "rpc",
-                "_socket_pushes": "sock",
-            },
-        )
+                env_cols = _reply_env_cols(
+                    sd.out_type, out_cols, pk.cast("string")
+                )
+            sd._reply_plan = (out_cols, env_cols)
+        proj, fan = _reply_fan(service.name, sd.out_type, trace)
+        res._emit(out.select(*env_cols).select(*proj), fan)
     return res
 
 
@@ -945,11 +761,10 @@ def drain_batches(
     # still pays them, an in-process drain needn't). Coalesce +
     # localCheckpoint cuts the lineage that would otherwise re-execute
     # every previous round's decode+handler pipeline, multiplicatively
-    # with drain depth. Round 1 lets ``run_batch`` place the checkpoint
-    # itself (``materialize=True``): on the single-data-schema fast path
-    # that lands PAST the decode, so terminal outputs (done/dead-letter/
-    # trace topics) and the round-1 retry snapshot all scan decoded rows
-    # — the decode runs exactly once per drain, not once per branch.
+    # with drain depth. Round 1's decode is checkpointed inside
+    # ``run_batch``, so terminal outputs (done/dead-letter/trace topics)
+    # and the round-1 retry snapshot all scan decoded rows — the decode
+    # runs exactly once per drain, not once per branch.
     if buffer_size is not None and buffer_order is None:
         # validate BEFORE the first round: a workload whose first batch
         # happens not to retry would otherwise silently never shed
@@ -971,12 +786,11 @@ def drain_batches(
             service,
             raw,
             now_epoch=now,
-            lazy=True,
             decoded_inputs=feedback,
             emit_decoded_retry=True,
         )
         raw = None  # only round 1 consumes the raw batch
-        merged.absorb(res, skip=lambda t: t.endswith(".retry"))
+        merged.absorb(res)
         if not res.decoded_retry or (bound is not None and rnd >= bound):
             break
         # Materialize the (small) next-round queue: the snapshot makes
@@ -985,7 +799,7 @@ def drain_batches(
         # union tree that grows a leaf per round and re-scans every prior
         # round's checkpoint from every consumer — measured 3-4x slower).
         # The expensive part of the round — the give-up semi-join — was
-        # already cut inside ``run_batch`` (orig_failed checkpoint), so
+        # already cut inside ``run_batch`` (the failed-rows checkpoint), so
         # this job is a cheap filter scan.
         feedback = {}
         snapshots: list[tuple[str, DataFrame, int]] = []
@@ -1011,8 +825,8 @@ def drain_batches(
             # snapshot AND answers the emptiness probe (an eager
             # checkpoint followed by isEmpty would be two sequential
             # driver round-trips per stream per round); the count also
-            # pulls the round's orig_failed checkpoint (its upstream)
-            # into cache, so the dead-letter/trace arms scan cached rows
+            # pulls the round's failed-rows checkpoint (its upstream)
+            # into cache, so the give-up branch scans cached rows
             snapshots.append(
                 (fqn, df.coalesce(par).localCheckpoint(eager=False), par)
             )

@@ -116,11 +116,6 @@ def _retry_parts(policy: RetryPolicy) -> tuple:
     )
 
 
-@lru_cache(maxsize=128)
-def _payload_struct(payload_cols: tuple) -> F.Column:
-    return F.struct(*[F.col(c) for c in payload_cols]).alias("payload")
-
-
 @lru_cache(maxsize=2)
 def _split_conds() -> tuple:
     """Static (ok, bad) filter conditions for the ``_error`` convention —
@@ -129,14 +124,18 @@ def _split_conds() -> tuple:
 
 
 @lru_cache(maxsize=256)
-def _retry_decoded_cols(
-    policy: RetryPolicy, payload_cols: tuple, retry_t: str, now_key
-) -> tuple:
+def _retry_decoded_cols(policy: RetryPolicy, retry_t: str, now_key) -> tuple:
     """The full (meta', payload, topic) projection for retry re-queue
-    rows, keyed by (policy, payload shape, topic, pinned epoch). The
-    meta-update tree (withField + map_concat) is ~25 py4j round trips
-    and the drain loop rebuilt it per stream per ROUND; a drain pins one
-    epoch so this caches across rounds. ``now_key=None`` = wall clock."""
+    rows, keyed by (policy, topic, pinned epoch).
+
+    Retry rows keep the ORIGINAL meta (same event_id — the retry state
+    key, KafkaBus.scala:205) with ``extra.attempt`` incremented and
+    ``extra.not_before_epoch`` = now + backoff(attempt); the router
+    encodes them to the retry topic, or an in-process drain feeds them
+    back decoded. The meta-update tree (withField + map_concat) is ~25
+    py4j round trips and the drain loop rebuilt it per stream per ROUND;
+    a drain pins one epoch so this caches across rounds. ``now_key=None``
+    = wall clock."""
     now_c = (
         F.lit(now_key)
         if now_key is not None
@@ -157,85 +156,7 @@ def _retry_decoded_cols(
     )
     return (
         new_meta.alias("meta"),
-        _payload_struct(payload_cols),
-        F.lit(retry_t).alias("topic"),
-    )
-
-
-def retry_decoded(
-    failed: DataFrame,
-    in_fqn: str,
-    policy: RetryPolicy,
-    payload_cols: list[str],
-    now: F.Column | int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Failed decoded rows → (DECODED retry rows, gave-up rows).
-
-    Retry rows keep the ORIGINAL meta (same event_id — the retry state key,
-    KafkaBus.scala:205) with ``extra.attempt`` incremented and
-    ``extra.not_before_epoch`` = now + backoff(attempt). Rows past
-    ``max_attempts`` are returned for dead-lettering (give-up path
-    KafkaBus.scala:219-221).
-
-    Output shape is the decoded-stream shape ``(meta, payload, topic)`` —
-    an in-process drain loop feeds it straight back into the router
-    without the encode→publish→decode JSON round-trip the durable bus
-    path pays (see ``encode_retry`` for that form). ``now`` as an int (or
-    None for wall clock) hits the cached projection; a Column falls back
-    to a per-call build.
-    """
-    eligible_cond, gaveup_cond, kept_map, nxt_str, backoff = _retry_parts(
-        policy
-    )
-    eligible = failed.filter(eligible_cond)
-    gave_up = failed.filter(gaveup_cond)
-
-    if now is None or isinstance(now, int):
-        cols = _retry_decoded_cols(
-            policy, tuple(payload_cols), retry_topic(in_fqn), now
-        )
-        return eligible.select(*cols), gave_up
-
-    new_meta = F.col("meta").withField(
-        "extra",
-        F.map_concat(
-            kept_map,
-            F.create_map(
-                F.lit(ATTEMPT_KEY),
-                nxt_str,
-                F.lit(NOT_BEFORE_KEY),
-                (now + backoff).cast("string"),
-            ),
-        ),
-    )
-    decoded = eligible.select(
-        new_meta.alias("meta"),
-        _payload_struct(tuple(payload_cols)),
-        F.lit(retry_topic(in_fqn)).alias("topic"),
-    )
-    return decoded, gave_up
-
-
-def encode_retry(
-    failed: DataFrame,
-    in_fqn: str,
-    policy: RetryPolicy,
-    payload_cols: list[str],
-    now: F.Column | int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Failed decoded rows → (retry-TOPIC bus rows, gave-up rows): the
-    durable form of ``retry_decoded`` — same meta update, envelope
-    re-encoded for publishing to the per-stream retry topic."""
-    decoded, gave_up = retry_decoded(failed, in_fqn, policy, payload_cols, now)
-    retry_rows = decoded.select(*_encode_retry_cols(retry_topic(in_fqn)))
-    return retry_rows, gave_up
-
-
-@lru_cache(maxsize=256)
-def _encode_retry_cols(retry_t: str) -> tuple:
-    return (
-        F.lit(None).cast("binary").alias("key"),
-        F.to_json(F.struct("meta", "payload")).cast("binary").alias("value"),
+        F.col("payload"),
         F.lit(retry_t).alias("topic"),
     )
 
@@ -255,18 +176,6 @@ def _eligibility_conds(now_key: int | None) -> tuple:
     )
     nb = F.col("meta.extra").getItem(NOT_BEFORE_KEY).cast("long")
     return (nb.isNull() | (nb <= now_c), nb.isNotNull() & (nb > now_c))
-
-
-def eligible_now(
-    decoded: DataFrame, now_epoch: F.Column | int | None = None
-) -> DataFrame:
-    """Rows whose backoff has elapsed (source-side filter on the unioned
-    retry stream — the ``merge(retryQueueSource)`` analog,
-    KafkaBus.scala:188-197)."""
-    if now_epoch is None or isinstance(now_epoch, int):
-        return decoded.filter(_eligibility_conds(now_epoch)[0])
-    nb = F.col("meta.extra").getItem(NOT_BEFORE_KEY).cast("long")
-    return decoded.filter(nb.isNull() | (nb <= now_epoch))
 
 
 def not_yet_eligible(

@@ -133,17 +133,18 @@ DIRTY_SINCE: dict[str, int] = {
     # was corrupted to x.com0) — q_domain_caps consumes it via
     # curate_urls.
     "q_domain_caps": 13,
-    # r13: run_batch/decode_envelope branch construction moved to
-    # cached projection tuples (dead-letter fuse, _flat_cols,
-    # _decode_sel — r12 verdict item 1); staged_wire now materializes
-    # eagerly with a timed count. Every query routing through the
-    # batch router changed plans.
-    "q_route_counts": 13,
-    "q_route_traced": 13,
-    "q_retry_drain": 13,
-    "q_retry_drain_shed": 13,
-    "q_entity_lookup": 13,
-    "q_rpc_correlate": 13,
+    # r15: run_batch has one router shape — raw checkpoint, one decode
+    # checkpoint per schema group, and per stream at most three
+    # generator branches (decoded rows, handler output, failed rows)
+    # instead of ~8 filtered union arms; the single-group keep_value
+    # fast path and the live-topic probe are gone. Every query routing
+    # through the batch router changed plans.
+    "q_route_counts": 15,
+    "q_route_traced": 15,
+    "q_retry_drain": 15,
+    "q_retry_drain_shed": 15,
+    "q_entity_lookup": 15,
+    "q_rpc_correlate": 15,
     # r13: corpus-stats stragglers restructured (r12 verdict item 2):
     # bigram_logprob persists ugc (double-scan), perplexity_buckets
     # persists the scored frame (repartitionByRange sampling re-ran
@@ -154,8 +155,6 @@ DIRTY_SINCE: dict[str, int] = {
     # the ex persist dropped), dsir_logweights gained the spread
     # before its explode+md5 scan — perplexity_buckets and
     # q_pipeline_curated_mix consume bigram_logprob transitively.
-    "q_bigram_logprob": 13,
-    "q_perplexity_buckets": 13,
     "q_dsir_weights": 13,
     "q_source_overlap": 13,
     # r13 optimization round: profile decomposition keeps its three
@@ -172,7 +171,6 @@ DIRTY_SINCE: dict[str, int] = {
     # Expand), q_heavy_hitter_tokens gets the lambda-free tokens_lower
     # the r13 sweep missed.
     "q16_supplier_part_counts": 13,
-    "q4_priority_exists": 13,
     "q21_sole_late_supplier": 13,
     "q_heavy_hitter_tokens": 13,
     # r13: q7 probes ONE nation dim via aliases instead of two renamed
@@ -187,7 +185,6 @@ DIRTY_SINCE: dict[str, int] = {
     "q_vocab_topk": 13,
     "q_token_entropy": 13,
     "q_text_langid": 13,
-    "q_tfidf_top_terms": 13,
     "q_bpe_pair_counts": 13,
     # r13 optimization round: the exact index stores a third table
     # (per-doc shingle sizes) so incremental_dedup's jaccard joins the
@@ -204,13 +201,35 @@ DIRTY_SINCE: dict[str, int] = {
     # drop_boilerplate changed values.
     "q_html_boilerplate": 13,
     "q_pipeline_clean_corpus": 13,
-    "q_pipeline_curated_mix": 13,
+    # r14 query rewrites (ADVICE r14, high): bigram_logprob,
+    # dedup_keep_best's argmax, dedup_embedding, tfidf_top_terms,
+    # top_parts_by_revenue, q4's EXISTS, topic_balance's persist and
+    # contamination_fuzzy changed implementation; the multimodal
+    # decode/resize/phash operators gained a per-batch content memo,
+    # so every query consuming them is listed, as are bigram_logprob's
+    # transitive consumers (perplexity_buckets, pipeline_curated_mix).
+    "q_bigram_logprob": 14,
+    "q_perplexity_buckets": 14,
+    "q_pipeline_curated_mix": 14,
+    "q_dedup_keep_best": 14,
+    "q_dedup_embedding": 14,
+    "q_tfidf_top_terms": 14,
+    "q_top_parts_by_revenue": 14,
+    "q4_priority_exists": 14,
+    "q_topic_balance": 14,
+    "q_contamination_fuzzy": 14,
+    "q_multimodal_decode": 14,
+    "q_multimodal_resize": 14,
+    "q_multimodal_framesample": 14,
+    "q_multimodal_real_decode": 14,
+    "q_multimodal_real_resize": 14,
+    "q_multimodal_phash": 14,
+    "q_multimodal_phash_near": 14,
     # (r12 entries earned green rows in the r12 window and
     # self-cleared — pruned. For the record: the r12 staging change
     # stages wire-format fixture batches per (app, sf_dir)
     # (queries/dataflow.staged_wire) while run_batch KEEPS its decode
-    # checkpoint (materialize=True — 5c0690e reverted the
-    # materialize=False experiment).)
+    # checkpoint — 5c0690e reverted an experiment without it.)
 }
 
 # Back-compat alias used by tests/tools that inspect the dirty set.
