@@ -443,8 +443,7 @@ def test_collect_sites_are_whitelisted():
     This pin freezes the per-module collect-site counts: adding a
     collect forces updating the whitelist with a justification here.
 
-    Justifications (re-audited r8): runtime.py — distinct TOPIC lists
-    (bounded by declared streams); session.py — event-time bounds (one
+    Justifications (re-audited r8): session.py — event-time bounds (one
     row, cached); codec/envelope.py — declared-schema sample for the
     avro switch; operators/similarity.py — centroid/codebook rows
     (k-sized trainers); operators/sketch.py — freqItems candidate
@@ -465,7 +464,6 @@ def test_collect_sites_are_whitelisted():
         if n:
             got[str(p.relative_to(root))] = n
     assert dict(got) == {
-        "runtime.py": 1,
         "session.py": 1,
         "codec/envelope.py": 1,
         "operators/similarity.py": 4,

@@ -6,9 +6,12 @@ via FileBus + foreachBatch (O3)."""
 from __future__ import annotations
 
 import json
+import os
+from collections import Counter
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -68,19 +71,21 @@ def svc():
     return s
 
 
-def _orders(spark, with_reply=False):
+def _orders(spark, reply_to=None, n=2):
+    """``n`` encoded orders, alternately confirmed and rejected; with
+    ``reply_to`` they carry a direct_reply to that service."""
     df = spark.createDataFrame(
-        [("o1", "c1", 10.0), ("o2", "c2", -5.0)],
+        [(f"o{i}", f"c{i}", 10.0 if i % 2 else -5.0) for i in range(1, n + 1)],
         "order_id string, customer_id string, amount double",
     )
     meta = None
-    if with_reply:
+    if reply_to is not None:
         from typebus_spark.codec.envelope import new_meta
 
         meta = new_meta(
             "api.OrderPlaced",
             direct_reply_path=F.lit("/user/gather-1"),
-            direct_reply_service=F.lit("client-service"),
+            direct_reply_service=F.lit(reply_to),
         )
     return encode_envelope(
         df, "api.OrderPlaced", key=F.col("customer_id"), meta=meta
@@ -195,7 +200,7 @@ def test_undecodable_payload_dead_letters(spark, svc):
 
 
 def test_rpc_reply_also_published_to_caller_topic(spark, svc):
-    res = run_batch(svc, _orders(spark, with_reply=True))
+    res = run_batch(svc, _orders(spark, reply_to="client-service"))
     rpc = res.topic("_rpc_replies")
     assert rpc is not None
     topics = {r["topic"] for r in rpc.collect()}
@@ -350,6 +355,135 @@ def test_streaming_end_to_end_filebus(spark, svc, tmp_path):
     q2 = start_service(svc, bus, spark, str(tmp_path / "ckpt"))
     q2.awaitTermination(60)
     assert bus.read(spark, ["api.OrderConfirmed"]).count() == 2
+
+
+def _bus_files(root) -> set:
+    return {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, fs in os.walk(root)
+        for f in fs
+    }
+
+
+def _crash_after_first_batch_publish(bus, max_records_per_file=None):
+    """Wrap ``bus.publish`` so the first micro-batch publish completes and
+    then raises: the query dies after its publish and before its
+    checkpoint commit. ``max_records_per_file`` applies to that first
+    publish only."""
+    real = bus.publish
+    crashed = []
+
+    def publish(df, topic=None, **kw):
+        if topic is not None or crashed:
+            return real(df, topic, **kw)
+        crashed.append(True)
+        conf = df.sparkSession.conf
+        if max_records_per_file is not None:
+            conf.set("spark.sql.files.maxRecordsPerFile", max_records_per_file)
+        try:
+            real(df, **kw)
+        finally:
+            conf.unset("spark.sql.files.maxRecordsPerFile")
+        raise RuntimeError("crash between publish and commit")
+
+    bus.publish = publish
+
+
+def _replies_per_request(spark, bus) -> tuple[Counter, list]:
+    """(replies on api.OrderConfirmed per request event id, request ids)."""
+    replies = Counter(
+        json.loads(bytes(r["value"]).decode())["meta"]["response_to"]
+        for r in bus.read(spark, ["api.OrderConfirmed"]).collect()
+    )
+    requests = decode_envelope(
+        bus.read(spark, ["api.OrderPlaced"]), ORDER_SCHEMA
+    ).collect()
+    return replies, [r["meta"]["event_id"] for r in requests]
+
+
+def test_streaming_crash_replay_publishes_once(spark, svc, tmp_path):
+    """A micro-batch replayed after a crash between publish and checkpoint
+    commit overwrites its own files: every request keeps exactly one
+    reply, and a later start publishes nothing new."""
+    bus = FileBus(str(tmp_path / "bus"))
+    bus.publish(_orders(spark, n=4), "api.OrderPlaced")
+    ck = str(tmp_path / "ck")
+    _crash_after_first_batch_publish(bus)
+    with pytest.raises(StreamingQueryException, match="crash between"):
+        start_service(svc, bus, spark, ck).awaitTermination(60)
+    replies, rids = _replies_per_request(spark, bus)
+    assert replies == {r: 1 for r in rids}  # the crashed attempt published
+
+    start_service(svc, bus, spark, ck).awaitTermination(60)  # replay
+    replies, rids = _replies_per_request(spark, bus)
+    assert len(rids) == 4 and replies == {r: 1 for r in rids}
+
+    before = _bus_files(bus.root)
+    start_service(svc, bus, spark, ck).awaitTermination(60)
+    assert _bus_files(bus.root) == before
+
+
+def test_streaming_crash_replay_removes_stale_parts(spark, svc, tmp_path):
+    """A replay that writes fewer files than the crashed attempt leaves
+    none of the attempt's extra parts behind."""
+    bus = FileBus(str(tmp_path / "bus"))
+    bus.publish(_orders(spark, n=6), "api.OrderPlaced")
+    ck = str(tmp_path / "ck")
+    _crash_after_first_batch_publish(bus, max_records_per_file=1)
+    with pytest.raises(StreamingQueryException, match="crash between"):
+        start_service(svc, bus, spark, ck).awaitTermination(60)
+    out_dir = tmp_path / "bus" / "api.OrderConfirmed"
+    crashed = set(os.listdir(out_dir))
+    assert len(crashed) == 6  # one row per file
+
+    start_service(svc, bus, spark, ck).awaitTermination(60)
+    replayed = set(os.listdir(out_dir))
+    assert replayed < crashed
+    replies, rids = _replies_per_request(spark, bus)
+    assert len(rids) == 6 and replies == {r: 1 for r in rids}
+
+
+def test_descriptor_published_once_per_version(spark, svc, tmp_path):
+    """A restart with an unchanged descriptor publishes no new descriptor
+    file; an evolved service announces its new descriptor, and discovery
+    picks that one up."""
+    from typebus_spark.catalog.discovery import await_descriptor
+
+    bus = FileBus(str(tmp_path / "bus"))
+    desc_dir = tmp_path / "bus" / Service.DESCRIPTOR_FQN
+    for _ in range(2):
+        start_service(svc, bus, spark, str(tmp_path / "ck")).awaitTermination(60)
+    assert len(os.listdir(desc_dir)) == 1
+
+    svc.declare_type(
+        "api.OrderCancelled", StructType([StructField("order_id", StringType())])
+    )
+    svc.register_stream("api.OrderCancelled", None, lambda df: df)
+    # a new source set needs its own checkpoint
+    start_service(svc, bus, spark, str(tmp_path / "ck2")).awaitTermination(60)
+    assert len(os.listdir(desc_dir)) == 2
+    desc = await_descriptor(spark, bus, "order-service", timeout=10)
+    assert {"in": "api.OrderCancelled", "out": None} in desc["service_methods"]
+
+
+def test_publish_round_trips_escaped_topic_names(spark, svc, tmp_path):
+    """Topic names with characters Spark escapes in partition paths land
+    under their exact name, and a poll leaves no staging or committer
+    files behind."""
+    weird = "client svc%1:a=b#c"
+    root = tmp_path / "bus"
+    bus = FileBus(str(root))
+    bus.publish(_orders(spark, reply_to=weird), "api.OrderPlaced")
+    start_service(svc, bus, spark, str(tmp_path / "ck")).awaitTermination(60)
+
+    rows = bus.read(spark, [weird]).collect()
+    assert len(rows) == 2 and {r["topic"] for r in rows} == {weird}
+    assert weird in os.listdir(root)
+    assert os.listdir(root / ".staging") == []
+    for d in os.listdir(root):
+        if d != ".staging":
+            left = set(os.listdir(root / d)) & {"_SUCCESS", "_temporary"}
+            assert not left, (d, left)
 
 
 def test_descriptor_answered_on_bus(spark, svc, tmp_path):

@@ -64,10 +64,11 @@ def await_descriptor(
     while True:
         rows = bus.read(spark, [Service.DESCRIPTOR_FQN]).collect()
         # The reply topic is append-only: a long-lived bus accumulates a
-        # descriptor row per (re)start of the target, and collect()
-        # order over parquet parts is arbitrary — always take the row
-        # with the LATEST meta.occurred_at so codegen never runs
-        # against a stale schema after the service evolved.
+        # descriptor row per descriptor version of the target (a restart
+        # with an unchanged descriptor adds none), and collect() order
+        # over parquet parts is arbitrary — always take the row with the
+        # LATEST meta.occurred_at so codegen never runs against a stale
+        # schema after the service evolved.
         best = None
         best_ts = ""
         for r in rows:

@@ -11,9 +11,10 @@ Spark re-expression (SURVEY.md §3.1): each registered stream becomes
 to_json encode (responseTo/correlation propagated) → sink``, with
 unroutable/undecodable rows to a dead-letter topic (O2), RPC replies
 additionally published to the caller's service topic (RPC2,
-KafkaBus.scala:157-169), and checkpointing giving exactly-once to
-idempotent sinks — strictly stronger than the reference's
-commit-after-publish at-least-once (O3, KafkaBus.scala:172).
+KafkaBus.scala:157-169), and checkpointing plus a FileBus publish that
+is idempotent per (checkpoint, batchId) giving exactly-once output —
+strictly stronger than the reference's commit-after-publish
+at-least-once (O3, KafkaBus.scala:172), which KafkaBus keeps.
 
 ``run_batch`` is the per-micro-batch function; streaming mode wraps the
 same function in ``foreachBatch`` so batch tests exercise the exact code
@@ -22,8 +23,14 @@ the stream runs (typebus-testkit parity, TestBus.scala:27-169).
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import re
+import shutil
+import uuid
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -865,6 +872,14 @@ def drain_batches(
     return merged
 
 
+def _publish_name(label: str, key: str) -> str:
+    """A file-name-safe publish name: ``label`` kept readable, plus a
+    hash of ``key`` for uniqueness. Never starts with ``_`` or ``.``,
+    which Spark's file sources treat as hidden."""
+    safe = re.sub(r"[^0-9A-Za-z.-]", "_", label).lstrip("_.")
+    return f"{safe}-{hashlib.sha1(key.encode()).hexdigest()[:12]}"
+
+
 class FileBus:
     """File-backed transport: one parquet directory per topic under a root.
 
@@ -872,9 +887,18 @@ class FileBus:
     the Kafka connector jar is absent in this environment, and the
     streaming file source supports the same read/readStream surface. On a
     real cluster ``KafkaBus`` (below) swaps in behind the same API.
+
+    Every publish is one Spark write job into a staging directory under
+    ``root/.staging/`` (same filesystem), whose files the driver then
+    renames into the topic directories as ``<name>-<n>.parquet``. A
+    rename is atomic, so a reader never sees a partial file, and a
+    publish repeated under the same name replaces its files instead of
+    adding to them: ``start_service`` names each micro-batch by
+    (checkpoint, batchId), which makes its output exactly-once.
     """
 
     RAW_SCHEMA = "key binary, value binary, topic string"
+    _DEST = "_dest"
 
     def __init__(self, root: str):
         self.root = root
@@ -883,37 +907,57 @@ class FileBus:
     def _dir(self, topic: str) -> str:
         return os.path.join(self.root, topic)
 
-    def publish(
-        self,
-        df: DataFrame,
-        topic: str | None = None,
-        topics: list[str] | None = None,
-    ) -> None:
-        """Append bus rows to their topic directories.
+    def holds(self, topic: str, name: str) -> bool:
+        """Whether a publish under ``name`` has put a file on ``topic``."""
+        return os.path.exists(os.path.join(self._dir(topic), f"{name}-0.parquet"))
 
-        With ``topic`` the frame goes to that one directory (no driver
-        action on the lineage). With per-row routing, pass ``topics``
-        when the destination set is known, or the frame is materialized
-        ONCE (localCheckpoint) so the distinct-topic probe and the
-        per-topic writes scan materialized rows instead of re-running
-        the upstream pipeline per destination.
+    def publish(
+        self, df: DataFrame, topic: str | None = None, name: str | None = None
+    ) -> None:
+        """Write bus rows to their topic directories in one Spark job.
+
+        Rows go to the directory of their own ``topic`` column, or all to
+        ``topic`` when given. Files are named ``<name>-<n>.parquet``; a
+        repeated ``name`` overwrites its earlier files and removes those
+        it no longer produces, so a replayed publish is idempotent.
+        Without ``name`` every call gets a fresh one (append).
         """
-        if topic is not None:
-            df.select("key", "value", "topic").write.mode("append").parquet(
-                self._dir(topic)
+        name = name or uuid.uuid4().hex
+        staging = os.path.join(self.root, ".staging", name)
+        shutil.rmtree(staging, ignore_errors=True)
+        dest = F.col("topic") if topic is None else F.lit(topic)
+        # coalesce keeps the file count bounded: the routed batch is a
+        # union of many narrow branches, written by one wave of tasks
+        par = df.sparkSession.sparkContext.defaultParallelism
+        df.select("key", "value", "topic", dest.alias(self._DEST)).coalesce(
+            par
+        ).write.partitionBy(self._DEST).parquet(staging)
+
+        prefix = f"{self._DEST}="
+        written = set()
+        for sub in sorted(os.listdir(staging)):
+            if not sub.startswith(prefix):
+                continue  # _SUCCESS and its checksum
+            out = self._dir(unquote(sub[len(prefix):]))
+            os.makedirs(out, exist_ok=True)
+            parts = sorted(
+                p
+                for p in os.listdir(os.path.join(staging, sub))
+                if p.endswith(".parquet")  # not the .crc checksums
             )
-            return
-        if topics is None:
-            # coalesce first: the routed batch is a union of many narrow
-            # branches — one wave of tasks materializes it, and the
-            # per-topic writes then emit a bounded file count
-            par = df.sparkSession.sparkContext.defaultParallelism
-            df = df.coalesce(par).localCheckpoint(eager=True)
-            topics = [r[0] for r in df.select("topic").distinct().collect()]
-        for top in topics:
-            df.filter(F.col("topic") == top).select(
-                "key", "value", "topic"
-            ).write.mode("append").parquet(self._dir(top))
+            for n, p in enumerate(parts):
+                dst = os.path.join(out, f"{name}-{n}.parquet")
+                os.replace(os.path.join(staging, sub, p), dst)
+                written.add(dst)
+        # a replay that produces fewer files must not leave the earlier
+        # attempt's extra parts behind
+        own = re.compile(re.escape(name) + r"-\d+\.parquet")
+        for d in os.scandir(self.root):
+            if d.is_dir() and d.name != ".staging":
+                for f in os.scandir(d.path):
+                    if own.fullmatch(f.name) and f.path not in written:
+                        os.remove(f.path)
+        shutil.rmtree(staging)
 
     def read(self, spark: SparkSession, topics: list[str]) -> DataFrame:
         dfs = [
@@ -945,8 +989,11 @@ class KafkaBus:
     policy (``latest`` — KafkaBus.scala:117,121), checkpoint location,
     and the (key, value, topic) row contract, where ``key`` comes from
     the stream's ``partition_key`` via ``encode_envelope`` (K1) and the
-    Kafka sink routes each row by its ``topic`` column natively — no
-    per-topic fan-out loop, unlike the FileBus stand-in."""
+    Kafka sink routes each row by its ``topic`` column, as FileBus does.
+
+    Delivery stays at-least-once: without a transactional producer a
+    replayed micro-batch is sent again, so ``name`` is ignored and
+    ``holds`` is always False."""
 
     RAW_COLUMNS = ("key", "value", "topic")
 
@@ -980,12 +1027,14 @@ class KafkaBus:
             reader = reader.option(k, v)
         return reader.load().select(*self.RAW_COLUMNS)
 
+    def holds(self, topic: str, name: str) -> bool:  # noqa: ARG002
+        return False
+
     def publish(
         self,
         df: DataFrame,
         topic: str | None = None,
-        topics: list[str] | None = None,  # noqa: ARG002 — FileBus parity;
-        # the Kafka sink routes by the per-row topic column natively
+        name: str | None = None,  # noqa: ARG002 — FileBus parity
     ) -> None:
         writer = df.select(*self.RAW_COLUMNS).write.format("kafka")
         for k, v in self.writer_options(topic=topic).items():
@@ -1009,20 +1058,30 @@ def start_service(
     """Materialize every registered stream as ONE multiplexed Structured
     Streaming query: union of subscribed topic streams → ``foreachBatch``
     running the same ``run_batch`` as the batch path, publishing outputs
-    back to the bus. Checkpointed (O3)."""
+    back to the bus. Checkpointed (O3).
+
+    Each micro-batch is one publish named by (checkpoint, batchId). A
+    batch replayed after a crash between its publish and its checkpoint
+    commit republishes under the same name, so on a FileBus it replaces
+    its earlier files and every request keeps exactly one reply. On a
+    KafkaBus the replay is sent again (at-least-once, as the reference).
+    """
     # C1 startup broadcast (KafkaBus.scala:247): announce this service's
     # descriptor on the bus before consuming, so peers can discover it
-    # without round-tripping a GetServiceDescriptor request.
-    import json as _json
-
-    desc_df = spark.createDataFrame(
-        [(service.name, _json.dumps(service.descriptor(), sort_keys=True))],
-        "service string, descriptor string",
-    )
-    bus.publish(
-        encode_envelope(desc_df, Service.DESCRIPTOR_FQN),
-        Service.DESCRIPTOR_FQN,
-    )
+    # without round-tripping a GetServiceDescriptor request. The name is
+    # the descriptor's hash: a restart with the same descriptor finds it
+    # on the bus already, an evolved service announces again.
+    desc = json.dumps(service.descriptor(), sort_keys=True)
+    desc_name = _publish_name(service.name, desc)
+    if not bus.holds(Service.DESCRIPTOR_FQN, desc_name):
+        desc_df = spark.createDataFrame(
+            [(service.name, desc)], "service string, descriptor string"
+        )
+        bus.publish(
+            encode_envelope(desc_df, Service.DESCRIPTOR_FQN),
+            Service.DESCRIPTOR_FQN,
+            name=desc_name,
+        )
 
     topics = [t for t in service.subscribed_topics()]
     src = None
@@ -1030,23 +1089,20 @@ def start_service(
         s = bus.read_stream(spark, t)
         src = s if src is None else src.unionByName(s)
 
+    checkpoint = os.path.join(checkpoint_root, service.name)
+    batch_prefix = _publish_name(service.name, os.path.abspath(checkpoint))
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # action on the raw SOURCE only — cheap
-            return
-        result = run_batch(service, batch_df, trace=trace)
-        allout = result.union_all()
-        if allout is None:
-            return
-        # ONE materialization of the whole routed batch (every branch
-        # carries its per-row topic, incl. _rpc_replies/_socket_pushes
-        # dynamic destinations); publish then fans out from the
-        # checkpointed rows — the decode+handler lineage runs exactly
-        # once per micro-batch regardless of destination count.
-        bus.publish(allout)
+        # No emptiness probe: an availableNow file source never hands
+        # foreachBatch an empty batch, so the publish is the batch's one
+        # Spark job.
+        allout = run_batch(service, batch_df, trace=trace).union_all()
+        if allout is not None:
+            bus.publish(allout, name=f"{batch_prefix}-{batch_id}")
 
     return (
         src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(checkpoint_root, service.name))
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
