@@ -1,5 +1,5 @@
 """One router shape for every service: exact (topic, outcome) counts over
-the three service shapes the router serves, and a guard on the width of
+the service shapes the router serves, and a guard on the width of
 the plan it builds.
 
 Shapes:
@@ -9,10 +9,16 @@ Shapes:
 - ``two_schemas``: two data payload schemas, one stream with a
   ``RetryPolicy``, an unroutable topic and a malformed value (the
   bus_batch benchmark's shape).
+- ``two_retry_streams``: two retrying streams with different payload
+  schemas, so a drain snapshots two retry queues per round.
+
+A drain whose static round bound exceeds the round cap is checked
+separately: the rows still queued at the cap are dead-lettered.
 """
 
 from __future__ import annotations
 
+import json
 from collections import Counter
 
 import pyspark.sql.functions as F
@@ -20,11 +26,18 @@ import pytest
 
 from typebus_spark.codec.envelope import encode_envelope, new_meta
 from typebus_spark.registry import BackoffShape, RetryPolicy, Service
-from typebus_spark.runtime import FileBus, drain_batches, run_batch
+from typebus_spark.runtime import (
+    _MAX_DRAIN_ROUNDS,
+    FileBus,
+    _drain_round_bound,
+    drain_batches,
+    run_batch,
+)
 
 ORDER = "order_id string, user_id string, qty int, price double"
 PRICED = "order_id string, user_id string, total double"
 TASK = "task_id long, fail_times int"
+JOB = "job_id string, fail_times int, weight double"
 QUOTE = "seq long, user_id string, qty int"
 ACCOUNT = "id string, tier string"
 
@@ -39,14 +52,26 @@ def _price(df):
     )
 
 
-def _work(df):
-    attempt = F.coalesce(F.col("meta.extra").getItem("attempt").cast("int"), F.lit(0))
-    return df.select(
-        "meta",
-        "task_id",
-        "fail_times",
-        F.when(attempt < F.col("fail_times"), F.lit("transient")).alias("_error"),
-    )
+def _failing(*cols):
+    """A handler that fails a row while its attempt < ``fail_times``."""
+
+    def handler(df):
+        attempt = F.coalesce(
+            F.col("meta.extra").getItem("attempt").cast("int"), F.lit(0)
+        )
+        return df.select(
+            "meta",
+            *cols,
+            "fail_times",
+            F.when(attempt < F.col("fail_times"), F.lit("transient")).alias(
+                "_error"
+            ),
+        )
+
+    return handler
+
+
+_work = _failing("task_id")
 
 
 def _orders(spark, n=3):
@@ -123,10 +148,41 @@ def _two_schemas(spark):
     return svc, raw.unionByName(malformed)
 
 
+def _two_retry_streams(spark):
+    svc = Service("shape-retry2")
+    svc.declare_type("api.Task", _schema(spark, TASK))
+    svc.declare_type("api.TaskDone", _schema(spark, TASK))
+    svc.declare_type("api.Job", _schema(spark, JOB))
+    svc.declare_type("api.JobDone", _schema(spark, JOB))
+    svc.register_stream(
+        "api.Task",
+        "api.TaskDone",
+        _work,
+        retry=RetryPolicy(2, 5.0, BackoffShape.NONE),
+    )
+    svc.register_stream(
+        "api.Job",
+        "api.JobDone",
+        _failing("job_id", "weight"),
+        retry=RetryPolicy(3, 5.0, BackoffShape.LINEAR),
+    )
+    tasks = encode_envelope(
+        spark.createDataFrame([(1, 0), (2, 1), (3, 5)], TASK), "api.Task"
+    )
+    jobs = encode_envelope(
+        spark.createDataFrame(
+            [("j1", 0, 1.0), ("j2", 2, 2.0), ("j3", 2, 3.0), ("j4", 4, 4.0)], JOB
+        ),
+        "api.Job",
+    )
+    return svc, tasks.unionByName(jobs)
+
+
 SHAPES = {
     "one_schema": _one_schema,
     "entity_lookup": _entity_lookup,
     "two_schemas": _two_schemas,
+    "two_retry_streams": _two_retry_streams,
 }
 
 NO_HANDLER = ("typebus.DeadLetter", "no handler for topic")
@@ -149,9 +205,16 @@ RUN_BATCH = {
         NO_HANDLER: 2,
         UNDECODABLE: 1,
     },
+    "two_retry_streams": {
+        ("api.TaskDone", None): 1,
+        ("api.Task.retry", None): 2,
+        ("api.JobDone", None): 1,
+        ("api.Job.retry", None): 3,
+    },
 }
 # the drain re-runs retries in process: task 2 succeeds on its first
-# retry, task 3 exhausts both and is dead-lettered
+# retry, task 3 exhausts both and is dead-lettered; jobs j2 and j3
+# succeed on their second retry, j4 exhausts all three
 DRAIN = {
     **RUN_BATCH,
     "two_schemas": {
@@ -160,6 +223,11 @@ DRAIN = {
         NO_HANDLER: 2,
         UNDECODABLE: 1,
         GAVE_UP: 1,
+    },
+    "two_retry_streams": {
+        ("api.TaskDone", None): 2,
+        ("api.JobDone", None): 3,
+        GAVE_UP: 2,
     },
 }
 
@@ -183,6 +251,41 @@ def test_router_shape_outcomes(spark, shape):
     got = _outcomes(run_batch(svc, raw, now_epoch=1_000_000).union_all())
     assert got == Counter(RUN_BATCH[shape])
     assert _outcomes(drain_batches(svc, raw).union_all()) == Counter(DRAIN[shape])
+
+
+@pytest.mark.parametrize(
+    "fail_times, done",
+    [([11, 11, 11, 11], []), ([0, 9, 10, 11], [0, 1])],
+)
+def test_drain_round_cap_dead_letters_the_queue(spark, fail_times, done):
+    """A drain whose static bound (13 rounds) exceeds the round cap: a
+    task that succeeds by the last round replies, every task still
+    queued after it is dead-lettered, so each task ends as exactly one
+    reply or one dead letter."""
+    svc = Service("round-cap")
+    svc.declare_type("api.Task", _schema(spark, TASK))
+    svc.declare_type("api.TaskDone", _schema(spark, TASK))
+    svc.register_stream(
+        "api.Task", "api.TaskDone", _work, retry=RetryPolicy(12, 0.0)
+    )
+    assert _drain_round_bound(svc, 10_000) == 13 > _MAX_DRAIN_ROUNDS
+    raw = encode_envelope(
+        spark.createDataFrame(list(enumerate(fail_times)), TASK), "api.Task"
+    )
+    out = drain_batches(svc, raw).union_all()
+    payload = F.get_json_object(F.col("value").cast("string"), "$.payload")
+    rows = out.select("topic", payload.alias("p")).collect()
+    by_topic = {"api.TaskDone": [], "typebus.DeadLetter": []}
+    for r in rows:
+        by_topic[r["topic"]].append(json.loads(r["p"]))
+    replied = sorted(p["task_id"] for p in by_topic["api.TaskDone"])
+    dead = by_topic["typebus.DeadLetter"]
+    assert replied == done
+    assert len(dead) == len(fail_times) - len(done)
+    assert len(rows) == len(fail_times)
+    for p in dead:
+        assert p["message"] == "retry rounds exhausted"
+        assert p["extra"] == {"topic": "api.Task"}
 
 
 def _union_width(df) -> int:

@@ -178,6 +178,30 @@ def test_route_and_reply_correlation(spark, svc):
     assert keys == {"c1", "c2"}
 
 
+def test_column_partition_key_sets_reply_key(spark):
+    """A Column ``partition_key`` is evaluated on the handler output: the
+    reply's bus key and its ``meta.key`` are the expression's value, on
+    every build of the plan."""
+    s = Service("keyed-service")
+    s.declare_type("api.OrderPlaced", ORDER_SCHEMA)
+    s.declare_type("api.OrderConfirmed", CONFIRM_SCHEMA)
+    s.register_stream(
+        "api.OrderPlaced",
+        "api.OrderConfirmed",
+        lambda df: df.select(
+            "meta", "order_id", "customer_id", F.lit("ok").alias("status")
+        ),
+        partition_key=F.concat_ws("/", "customer_id", "order_id"),
+    )
+    for _ in range(2):
+        out = run_batch(s, _orders(spark)).topic("api.OrderConfirmed")
+        rows = out.collect()
+        assert {bytes(r["key"]).decode() for r in rows} == {"c1/o1", "c2/o2"}
+        for r in rows:
+            v = json.loads(bytes(r["value"]).decode())
+            assert v["meta"]["key"] == bytes(r["key"]).decode()
+
+
 def test_unhandled_topic_dead_letters(spark, svc):
     df = spark.createDataFrame([("x",)], "order_id string")
     raw = encode_envelope(df, "api.Unknown")

@@ -597,17 +597,24 @@ def test_drain_round_bound_arithmetic(spark):
     from typebus_spark.registry import BackoffShape, RetryPolicy, Service
     from typebus_spark.runtime import _drain_round_bound
     from typebus_spark.streaming.retry import (
+        ATTEMPT_KEY,
+        _retry_parts,
         backoff_rounds,
-        backoff_seconds_col,
     )
 
-    # scalar == columnar backoff per shape, attempts 1..4
+    # scalar == columnar backoff per shape, attempts 1..4: the router's
+    # backoff SQL on a row that has failed a-1 times (it computes the
+    # NEXT attempt, a)
     for shape in BackoffShape:
         p = RetryPolicy(4, 7.0, shape)
         for a in range(1, 5):
-            col_v = spark.range(1).select(
-                backoff_seconds_col(p, F.lit(a)).alias("d")
-            ).first()["d"]
+            extra = F.create_map(F.lit(ATTEMPT_KEY), F.lit(str(a - 1)))
+            col_v = (
+                spark.range(1)
+                .select(F.struct(extra.alias("extra")).alias("meta"))
+                .select(_retry_parts(p)[4].alias("d"))
+                .first()["d"]
+            )
             assert col_v == p.backoff_seconds(a), (shape, a)
             import math
 

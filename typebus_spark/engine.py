@@ -74,8 +74,7 @@ class Engine:
         """Run one batch through the router (testkit-style in-process bus).
 
         ``kw`` passes through to ``runtime.run_batch`` (``trace``,
-        ``now_epoch``, ``decoded_inputs``, ``emit_decoded_retry``); the
-        result is a lazy ``BatchResult`` — ``topic(name)`` per output,
+        ``now_epoch``); the result is a lazy ``BatchResult`` — ``topic(name)`` per output,
         ``union_all()`` for the whole batch in one frame."""
         return run_batch(self.service, raw, **kw)
 

@@ -30,6 +30,7 @@ import re
 import shutil
 import uuid
 from dataclasses import dataclass, field
+from functools import lru_cache
 from urllib.parse import unquote
 
 import pyspark.sql.functions as F
@@ -46,7 +47,8 @@ from typebus_spark.streaming.retry import (
     _eligibility_conds,
     _retry_decoded_cols,
     _retry_parts,
-    not_yet_eligible,
+    backoff_rounds,
+    drop_head,
     retry_topic,
     split_failures,
 )
@@ -137,7 +139,6 @@ def _union_kvt(frames: list[DataFrame]) -> DataFrame | None:
 # (~1.4 s of socket chatter per micro-batch, measured). The lru_caches
 # below pin the STATIC trees; reuse across plans is safe, and
 # nondeterministic leaves (uuid) still evaluate per row at execution.
-from functools import lru_cache  # noqa: E402
 
 
 @lru_cache(maxsize=128)
@@ -586,7 +587,7 @@ def run_batch(
         if retry_t is not None and emit_decoded_retry:
             res._add_decoded_retry(
                 in_fqn,
-                not_yet_eligible(decoded, now_epoch).select(
+                decoded.filter(_eligibility_conds(now_epoch)[1]).select(
                     *_retry_pending_cols(retry_t)
                 ),
             )
@@ -678,25 +679,14 @@ def run_batch(
                 f"handler for {in_fqn} output is missing declared "
                 f"{sd.out_type} fields: {missing}"
             )
-        # the reply expression trees are pure functions of the StreamDef
-        # (out type, partition key, declared columns) — build once and
-        # pin on the StreamDef; per-micro-batch rebuilds are pure py4j
-        # overhead
-        cached = getattr(sd, "_reply_plan", None)
-        if cached is not None and cached[0] == out_cols:
-            env_cols = cached[1]
+        pk = sd.partition_key
+        if isinstance(pk, (str, type(None))):
+            # pure function of (out type, cols, key name): shared across
+            # Service instances — a fresh Service per query invocation
+            # otherwise rebuilds ~70 py4j calls per stream
+            env_cols = _reply_env_cols_cached(sd.out_type, out_cols, pk)
         else:
-            pk = sd.partition_key
-            if isinstance(pk, (str, type(None))):
-                # pure function of (out type, cols, key name): shared
-                # across Service instances — a fresh Service per query
-                # invocation otherwise rebuilds ~70 py4j calls per stream
-                env_cols = _reply_env_cols_cached(sd.out_type, out_cols, pk)
-            else:
-                env_cols = _reply_env_cols(
-                    sd.out_type, out_cols, pk.cast("string")
-                )
-            sd._reply_plan = (out_cols, env_cols)
+            env_cols = _reply_env_cols(sd.out_type, out_cols, pk.cast("string"))
         proj, fan = _reply_fan(service.name, sd.out_type, trace)
         res._emit(out.select(*env_cols).select(*proj), fan)
     return res
@@ -724,8 +714,6 @@ def _drain_round_bound(service: Service, clock_step: int) -> int | None:
     (KafkaBus.scala:229-233) that a crash silently drops; the remaining
     snapshot jobs here are the price of deterministic replay.
     """
-    from typebus_spark.streaming.retry import backoff_rounds
-
     bounds = [
         1 + sum(
             max(1, backoff_rounds(sd.retry, a, clock_step))
@@ -737,12 +725,16 @@ def _drain_round_bound(service: Service, clock_step: int) -> int | None:
     return max(bounds) if bounds else None
 
 
+# Round cap of ``drain_batches``. A drain whose static bound exceeds it
+# dead-letters the queue left at the cap instead of replaying it further.
+_MAX_DRAIN_ROUNDS = 10
+
+
 def drain_batches(
     service: Service,
     raw: DataFrame,
     now_epoch: int = 1_000_000,
     clock_step: int = 10_000,
-    max_rounds: int = 10,
     buffer_size: int | None = None,
     buffer_order: Column | str | None = None,
 ) -> BatchResult:
@@ -750,6 +742,10 @@ def drain_batches(
     in with the simulated clock advanced past every backoff, until the
     retry queue is empty (the in-process analog of the streaming retry
     loop — used for deterministic tests and batch reprocessing jobs).
+
+    The drain runs at most ``_MAX_DRAIN_ROUNDS`` rounds; rows still
+    queued after the last one are dead-lettered as "retry rounds
+    exhausted", so every event ends as an output or a dead letter.
 
     ``buffer_size`` caps each stream's per-round retry queue with the
     reference's dropHead load-shed semantics (the 16-element
@@ -788,7 +784,7 @@ def drain_batches(
     # snapshot+count job; its outputs materialize lazily in the
     # caller's one consuming action instead.
     bound = _drain_round_bound(service, clock_step)
-    for rnd in range(1, max_rounds + 1):
+    for rnd in range(1, _MAX_DRAIN_ROUNDS + 1):
         res = run_batch(
             service,
             raw,
@@ -800,6 +796,15 @@ def drain_batches(
         merged.absorb(res)
         if not res.decoded_retry or (bound is not None and rnd >= bound):
             break
+        if rnd == _MAX_DRAIN_ROUNDS:
+            # Cap reached before the bound: the queue may still hold
+            # rows. Dead-letter them lazily (no snapshot job) instead of
+            # dropping them.
+            for fqn, df in res.decoded_retry.items():
+                value = _dead_letter_value("retry rounds exhausted", fqn)
+                arm = (None, None, value, DEAD_LETTER_TOPIC, DEAD_LETTER_TOPIC)
+                merged._emit(df, _fan([arm]))
+            break
         # Materialize the (small) next-round queue: the snapshot makes
         # the emptiness check free and keeps the pending-backoff filter
         # chain from deepening across rounds (without it the queue is a
@@ -809,50 +814,18 @@ def drain_batches(
         # already cut inside ``run_batch`` (the failed-rows checkpoint), so
         # this job is a cheap filter scan.
         feedback = {}
-        snapshots: list[tuple[str, DataFrame, int]] = []
         for fqn, df in res.decoded_retry.items():
             if buffer_size is not None:
-                from typebus_spark.streaming.retry import drop_head
-
                 df = drop_head(df, buffer_size, buffer_order)
             par = df.sparkSession.sparkContext.defaultParallelism
-            # Size the snapshot to the DATA where a hard bound exists:
-            # under dropHead shedding the queue is capped at buffer_size
-            # rows by construction, and a 500-row shed queue on 32
-            # partitions schedules 32 near-empty tasks in EVERY
-            # downstream job of the round — coalesce to ~20k rows/
-            # partition instead. Without the cap there is NO safe bound
-            # (a chained stream's queue can GROW when upstream replies
-            # start failing in a later round), so the uncapped path
-            # keeps full parallelism rather than risking a coalesce(1)
-            # on a grown queue.
-            if buffer_size is not None:
-                par = max(1, min(par, -(-buffer_size // 20_000)))
             # lazy checkpoint + count: ONE job materializes the queue
             # snapshot AND answers the emptiness probe (an eager
             # checkpoint followed by isEmpty would be two sequential
             # driver round-trips per stream per round); the count also
             # pulls the round's failed-rows checkpoint (its upstream)
             # into cache, so the give-up branch scans cached rows
-            snapshots.append(
-                (fqn, df.coalesce(par).localCheckpoint(eager=False), par)
-            )
-        # Per-stream snapshot counts submit CONCURRENTLY (r10 verdict
-        # item 5): with k retry streams the per-round wall is max, not
-        # sum, of k count jobs (the mux fan-out pattern — per-job fixed
-        # cost dominates at queue sizes). The heterogeneous payload
-        # schemas rule out a single union-keyed count without a
-        # serialize-to-common-shape projection that would cost more
-        # than it fuses. Single-stream drains take the direct path —
-        # a pool would only add thread overhead.
-        if len(snapshots) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(len(snapshots)) as pool:
-                counts = list(pool.map(lambda s: s[1].count(), snapshots))
-        else:
-            counts = [ck.count() for _, ck, _ in snapshots]
-        for (fqn, ck, par), n in zip(snapshots, counts):
+            ck = df.coalesce(par).localCheckpoint(eager=False)
+            n = ck.count()
             if n > 0:
                 # The count just measured the queue, so a NEAR-EMPTY
                 # queue can stop scheduling ``par`` empty tasks in every
@@ -1040,12 +1013,6 @@ class KafkaBus:
         for k, v in self.writer_options(topic=topic).items():
             writer = writer.option(k, v)
         writer.save()
-
-    def write_stream(self, df: DataFrame, checkpoint: str):
-        writer = df.select(*self.RAW_COLUMNS).writeStream.format("kafka")
-        for k, v in self.writer_options(checkpoint=checkpoint).items():
-            writer = writer.option(k, v)
-        return writer.start()
 
 
 def start_service(

@@ -72,15 +72,8 @@ class Client:
             direct_reply_path=F.lit(self.reply_path),
             direct_reply_service=F.lit(self.service_name),
         )
-        env = F.struct(
-            meta.alias("meta"),
-            F.struct(*[F.col(c) for c in requests.columns]).alias("payload"),
-        )
-        raw = requests.select(
-            F.lit(None).cast("binary").alias("key"),
-            F.to_json(env).cast("binary").alias("value"),
-            F.lit(request_type).alias("topic"),
-        ).localCheckpoint(eager=True)  # pin the nondeterministic uuids
+        raw = encode_envelope(requests, request_type, meta=meta)
+        raw = raw.localCheckpoint(eager=True)  # pin the nondeterministic uuids
         self.bus.publish(raw, request_type)
         return decode_envelope(raw, requests.schema)
 

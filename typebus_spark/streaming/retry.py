@@ -24,11 +24,13 @@ handlers: the ``row_handler`` wrapper catches exceptions into it) — the
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Iterator
+from functools import lru_cache
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 
 from typebus_spark.registry import RetryPolicy
 
@@ -52,24 +54,6 @@ def split_failures(out: DataFrame) -> tuple[DataFrame, DataFrame]:
     return ok, bad
 
 
-def attempt_col() -> F.Column:
-    """Current attempt number from meta.extra (0 on first delivery)."""
-    return F.coalesce(
-        F.col("meta.extra").getItem(ATTEMPT_KEY).cast("int"), F.lit(0)
-    )
-
-
-def backoff_seconds_col(policy: RetryPolicy, attempt: F.Column) -> F.Column:
-    """Columnar form of RetryPolicy.backoff_seconds
-    (KafkaBus.scala:223-233): delay / attempt*delay / attempt²*delay."""
-    d = F.lit(policy.delay_seconds)
-    if policy.shape.value == "linear":
-        return attempt * d
-    if policy.shape.value == "exponential":
-        return (attempt * attempt) * d
-    return d
-
-
 def backoff_rounds(policy: RetryPolicy, attempt: int, clock_step: int) -> int:
     """How many ``clock_step``-sized drain rounds the backoff before
     retry number ``attempt`` spans — the scalar twin of the
@@ -78,13 +62,9 @@ def backoff_rounds(policy: RetryPolicy, attempt: int, clock_step: int) -> int:
     to long while this ceils the float, so the scalar can only OVER-
     estimate — safe for ``runtime._drain_round_bound``'s upper bound).
     Tests pin scalar == columnar per shape."""
-    import math
-
     d = policy.backoff_seconds(attempt)
     return max(1, math.ceil(d / max(1, clock_step)))
 
-
-from functools import lru_cache
 
 # Constant SQL fragments for the retry meta update, parsed JVM-side in
 # ONE py4j round-trip each instead of the ~50 a python-built
@@ -161,9 +141,6 @@ def _retry_decoded_cols(policy: RetryPolicy, retry_t: str, now_key) -> tuple:
     )
 
 
-from functools import lru_cache
-
-
 @lru_cache(maxsize=128)
 def _eligibility_conds(now_key: int | None) -> tuple:
     """(eligible, not-yet) filter conditions for a pinned epoch (or wall
@@ -176,15 +153,6 @@ def _eligibility_conds(now_key: int | None) -> tuple:
     )
     nb = F.col("meta.extra").getItem(NOT_BEFORE_KEY).cast("long")
     return (nb.isNull() | (nb <= now_c), nb.isNotNull() & (nb > now_c))
-
-
-def not_yet_eligible(
-    decoded: DataFrame, now_epoch: F.Column | int | None = None
-) -> DataFrame:
-    if now_epoch is None or isinstance(now_epoch, int):
-        return decoded.filter(_eligibility_conds(now_epoch)[1])
-    nb = F.col("meta.extra").getItem(NOT_BEFORE_KEY).cast("long")
-    return decoded.filter(nb.isNotNull() & (nb > now_epoch))
 
 
 def row_handler(
@@ -256,8 +224,6 @@ def drop_head(
     order = F.col(order_by) if isinstance(order_by, str) else order_by
     if not partition_by:
         return df.orderBy(order.desc()).limit(size)
-    from pyspark.sql import Window
-
     w = Window.partitionBy(*partition_by).orderBy(order.desc())
     return (
         df.withColumn("_rn", F.row_number().over(w))
