@@ -2,6 +2,8 @@
 
 Prints ONE JSON line:
 {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+where ``queries`` holds the slowest per-query timings that keep the line
+under 1 900 chars and ``n_queries`` counts all of them.
 
 ``value`` is the total wall-clock seconds across all inventory queries
 (each fully materialized via a count+collect-free
@@ -48,77 +50,9 @@ def builds_with_jobs(spark, fn, sf_dir: str, name: str) -> bool:
     return bool(sc.statusTracker().getJobIdsForGroup(grp))
 
 
-def detail_path(default_name: str = "BENCH_DETAIL.json") -> str:
-    """Where to write the full per-query detail map.
-
-    The committed detail files are a STAMPED same-window pair (BASELINE
-    protocol); the external driver's own bench run used to overwrite
-    them in the working tree, shadowing the pair the round's claims
-    cite (r13 verdict item 5/7). Shield: when the target file is
-    git-tracked and UNMODIFIED (i.e. it is the committed stamped pair),
-    divert this run's detail to the gitignored ``*_last_run.json``
-    sibling so the run leaves ``git status`` clean. Setting
-    ``SPARK_GRAFT_COMMIT_DETAIL=1`` (the builder, when producing a new
-    stamped pair) writes the canonical path unconditionally. Once the
-    canonical file is dirty, later runs keep overwriting it (unchanged
-    mid-iteration behavior). The stdout JSON contract is untouched.
-    """
-    root = os.path.dirname(os.path.abspath(__file__))
-    canonical = os.path.join(root, default_name)
-    if os.environ.get("SPARK_GRAFT_COMMIT_DETAIL"):
-        return canonical
-    try:
-        import subprocess
-
-        tracked = subprocess.run(
-            ["git", "ls-files", "--error-unmatch", default_name],
-            cwd=root, capture_output=True,
-        )
-        status = subprocess.run(
-            ["git", "status", "--porcelain", "--", default_name],
-            cwd=root, capture_output=True, text=True,
-        )
-        if (
-            tracked.returncode == 0
-            and status.returncode == 0
-            and not status.stdout.strip()
-        ):
-            return os.path.join(
-                root, default_name.replace(".json", "_last_run.json")
-            )
-    except Exception:
-        pass
-    return canonical
-
-
-def _window_stamp() -> dict:
-    """Host-window metadata for the detail files (r12 verdict
-    What's-wrong #1): cross-window detail comparisons are the
-    documented ±30% trap, so every committed detail file records WHICH
-    window produced it — bench_diff refuses ratio claims across
-    distant-load windows without an interleaved pair."""
-    import subprocess
-
-    try:
-        sha = subprocess.check_output(
-            ["git", "rev-parse", "--short", "HEAD"],
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            text=True,
-            stderr=subprocess.DEVNULL,
-        ).strip()
-    except Exception:
-        sha = None
-    return {
-        "timestamp": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        "load_start": round(os.getloadavg()[0], 2),
-        "git_sha": sha,
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    window = _window_stamp()
     spark = get_spark(
         app_name="typebus-spark-bench",
         extra_conf={
@@ -274,44 +208,24 @@ def main() -> None:
 
     if sf_dir in LAST_STAGED_WIRE_WALL:
         out["staged_wire_sec"] = LAST_STAGED_WIRE_WALL[sf_dir]
-    # Which append query ran LIVE this bench (keep-one-live rotation):
-    # recorded so round-over-round diffs compare the append family
-    # like-for-like — the pick advances each round, and a bench run
-    # after CORRECTNESS_r{N}.json lands already resolves round N+1's
-    # pick (r11 verdict, What's wrong).
-    from typebus_spark.queries.dataflow import LIVE_APPEND_PICK
-
-    out["live_append_pick"] = LIVE_APPEND_PICK
     if failures:
         out["failures"] = failures
     if flaky:
         out["flaky"] = flaky
     # The external driver captures only the LAST ~2000 chars of stdout
-    # and parses the tail as JSON — a full 146-query map (~4.5 KB) gets
-    # its head truncated and records parsed:null (round-8 artifact).
-    # Ship the COMPLETE per-query map to BENCH_DETAIL.json (committed,
-    # machine-readable, round-over-round diffable) and keep the final
-    # stdout line under budget: headline + the slowest queries that
-    # fit + a pointer. Local callers (tools/interleave_bench.py,
-    # BASELINE.md protocol) read the detail file.
-    window["load_end"] = round(os.getloadavg()[0], 2)
-    window["live_append_pick"] = LIVE_APPEND_PICK
-    out["window"] = window
-    dpath = detail_path("BENCH_DETAIL.json")
-    with open(dpath, "w") as f:
-        json.dump(out, f)
+    # and parses the tail as JSON — a full 158-query map (~4.5 KB) gets
+    # its head truncated. Keep the final stdout line under budget:
+    # headline + the slowest queries that fit.
     budget = 1900
     slowest = sorted(
         ((n, t) for n, t in timings.items()), key=lambda kv: -kv[1]
     )
-    compact = dict(out)
-    compact["n_queries"] = len(timings)
-    compact["detail"] = os.path.basename(dpath)
+    out["n_queries"] = len(timings)
     for keep in range(len(slowest), -1, -1):
-        compact["queries"] = dict(
+        out["queries"] = dict(
             sorted(slowest[:keep])  # name order for stable diffs
         )
-        line = json.dumps(compact)
+        line = json.dumps(out)
         if len(line) <= budget:
             break
     print(line)

@@ -5,7 +5,8 @@ fn() executes work during construction (streams, drains, trainers,
 iterative loops) — caching their handle would skip the work and
 under-report. This pins the detector on one known query of each kind
 so a refactor of either the queries or the probe can't silently flip a
-classification.
+classification. The last test pins that the inventory the bench walks
+(its order and its one live append query) is fixed in code.
 """
 
 from __future__ import annotations
@@ -15,7 +16,8 @@ import os
 import pytest
 
 from bench import builds_with_jobs
-from typebus_spark.session import load_table
+from typebus_spark.session import event_time_bounds, load_table
+from typebus_spark.streaming.mux import _run_mux
 from typebus_spark.suite import QUERIES
 
 PURE = [
@@ -23,15 +25,16 @@ PURE = [
     "q_chunk_overlap",         # scan-side explode
     "q_dedup_near_jaccard",    # lazy persist — no build-time job
     "q_profile_table",         # one-pass aggregate
+    # the other append shapes read the multiplexed consumer graph
+    # (memoized scaffold — pure in steady state)
+    "q_stream_session_append",
+    "q_stream_sliding_append",
+    "q_stream_static_join_append",
 ]
-from typebus_spark.queries.dataflow import LIVE_APPEND_PICK
-
 STATEFUL = [
     "q_retry_drain",           # drain rounds execute during fn()
-    # whichever append shape holds the keep-one-live slot this round
-    # runs its REAL streaming query in fn(); the others read the mux
-    # tables (pure in steady state) — follows the rotation
-    f"q_stream_{LIVE_APPEND_PICK}_append",
+    # the one live append query runs its REAL streaming query in fn()
+    "q_stream_hourly_append",
     "q_knn_ivf_kmeans",        # trainer collects centroids
     "q_dedup_clusters",        # iterative convergence loop
 ]
@@ -46,6 +49,10 @@ def _pretouch(spark, sf_dir):
     # first-scan footer/listing jobs would misattribute as stateful
     for t in ("lineitem", "events", "documents", "embeddings"):
         load_table(spark, sf_dir, t)
+    # so would the memoized one-time setups the muxed append shapes
+    # read (bench.py warms every query before it probes)
+    event_time_bounds(spark, sf_dir)
+    _run_mux(spark, sf_dir)
 
 
 @pytest.mark.parametrize("name", PURE)
@@ -66,291 +73,63 @@ def test_stateful_queries_are_detected(spark, sf_dir, name):
     )
 
 
-def test_rotation_order_synthetic_histories():
-    """_reorder_by_driver_history is load-bearing (it is why round 7's
-    stale-window rotation came back 50/50): pin the pure ordering over
-    synthetic CORRECTNESS histories — never-seen first, regressed
-    second, oldest-green third, newest-green last; ties keep
-    registration order."""
-    from typebus_spark.suite import _rotation_order
+_PROBE = """
+import json
+import typebus_spark.suite as suite
+from typebus_spark.queries import dataflow
 
-    has_oracle = {
-        "q_new": True,        # never driver-checked
-        "q_regressed": True,  # green r2, failed r3 (latest record wins)
-        "q_old_green": True,  # green r1, untouched since
-        "q_fresh": True,      # green r3
-        "q_new2": True,       # never checked — ties broken by position
-    }
-    history = {
-        1: {"q_old_green": {"hash_match": True}},
-        2: {"q_regressed": {"hash_match": True}},
-        3: {
-            "q_regressed": {"hash_match": False, "err": "hash"},
-            "q_fresh": {"hash_match": True},
-        },
-    }
-    order = _rotation_order(has_oracle, history)
-    assert order == ["q_new", "q_regressed", "q_new2", "q_old_green", "q_fresh"]
+calls = []
+for shape in ("hourly", "session", "sliding", "static_join"):
+    for form in ("native", "mux"):
+        fn = f"{form}_stream_{shape}_append"
+        setattr(dataflow, fn, lambda s, d, fn=fn: calls.append(fn))
+live = []
+for shape in ("hourly", "session", "sliding", "static_join"):
+    name = f"q_stream_{shape}_append"
+    calls.clear()
+    suite.QUERIES[name].fn(None, "")
+    if calls == [f"native_stream_{shape}_append"]:
+        live.append(name)
+print(json.dumps({"file": suite.__file__, "order": list(suite.queries()),
+                  "live": live}))
+"""
 
 
-def test_rotation_rows_only_green_requires_still_oracle_less():
-    """A historical rows-only record only counts as green while the
-    query is STILL oracle-less; gaining an oracle re-enters the window
-    (the q_knn_ivf_kmeans round-5 upgrade case)."""
-    from typebus_spark.suite import _rotation_order
-
-    history = {
-        2: {
-            "q_gained_oracle": {"err": "no_oracle", "spark_rows": 10},
-            "q_still_no_oracle": {"err": "no_oracle", "spark_rows": 10},
-        },
-        3: {"q_other": {"hash_match": True}},
-    }
-    order = _rotation_order(
-        {"q_other": True, "q_gained_oracle": True, "q_still_no_oracle": False},
-        history,
-    )
-    # gained-oracle query is unproven again -> front; rows-only green
-    # still counts for the oracle-less one (round 2 < round 3)
-    assert order == ["q_gained_oracle", "q_still_no_oracle", "q_other"]
-
-
-def test_rotation_failure_on_same_round_as_green_resets():
-    """latest_fail >= latest_green zeroes the green (a fix must be
-    RE-proven by a newer green row, not shadowed by an old one)."""
-    from typebus_spark.suite import _rotation_order
-
-    history = {
-        2: {"q_flaky": {"hash_match": True}},
-        3: {"q_flaky": {"hash_match": False}},
-        4: {"q_flaky": {"hash_match": True}},
-    }
-    # newest record is green again -> sorts after a never-green query
-    order = _rotation_order({"q_flaky": True, "q_virgin": True}, history)
-    assert order == ["q_virgin", "q_flaky"]
-
-
-def test_bench_and_duck_detail_share_key_set():
-    """DUCK_DETAIL.json (tools/duck_replay.py) and BENCH_DETAIL.json
-    (bench.py) must cover the same inventory: every oracled query in
-    the bench map appears in the duck map and vice versa, so per-query
-    Spark/DuckDB ratios are computable for the whole suite (r9 verdict
-    item 2 — the weak set becomes arithmetic, not estimation)."""
+def test_inventory_import_reads_no_repo_files(tmp_path):
+    """Importing the inventory must not look at files beside the
+    package: the query order and which append query runs its real
+    streaming form are fixed in code. Import a copy of the package
+    twice — plain, then with a stray CORRECTNESS_r99.json at its root
+    that records a green check of the first query — and expect the
+    same order and the same live query."""
     import json
-    import os
-
-    ORACLES = {n for n, q in QUERIES.items() if q.oracle is not None}
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    bench_p = os.path.join(root, "BENCH_DETAIL.json")
-    duck_p = os.path.join(root, "DUCK_DETAIL.json")
-    if not (os.path.exists(bench_p) and os.path.exists(duck_p)):
-        pytest.skip("detail files not generated yet this round")
-    bench = set(json.load(open(bench_p))["queries"])
-    duck = set(json.load(open(duck_p))["queries"])
-    # duck replays oracles only; bench times everything (rows-only
-    # queries have no oracle by declaration)
-    assert duck == set(ORACLES) & bench, (
-        sorted(duck ^ (set(ORACLES) & bench))[:10]
-    )
-    # and the bench map must cover every registered oracle (a query
-    # silently dropped from bench would hide a regression)
-    assert set(ORACLES) <= bench, sorted(set(ORACLES) - bench)[:10]
-
-
-def test_rotation_dirty_queries_reenter_window():
-    """A query whose implementation changed this round (DIRTY_QUERIES)
-    must sort to the front even with a fresh green history — green rows
-    prove the OLD code (r10: 17 changed queries would otherwise all
-    ride outside the 50-entry driver window on r9 evidence)."""
-    from typebus_spark.suite import _rotation_order
-
-    history = {3: {"q_changed": {"hash_match": True},
-                   "q_same": {"hash_match": True}}}
-    order = _rotation_order(
-        {"q_same": True, "q_changed": True}, history, {"q_changed"}
-    )
-    assert order == ["q_changed", "q_same"]
-    # and the real DIRTY set only names registered queries
-    from typebus_spark.suite import DIRTY_QUERIES, QUERIES
-
-    assert DIRTY_QUERIES <= set(QUERIES), DIRTY_QUERIES - set(QUERIES)
-
-
-def test_rotation_dirty_since_self_clears():
-    """Dict-form dirty ({name: round_changed}) self-clears once a green
-    row from that round or later exists — the r10 hand-cleared set
-    required remembering to empty it at round start; forgetting would
-    starve 31 of the 50 window slots forever (r10 verdict item 2)."""
-    from typebus_spark.suite import _rotation_order
-
-    history = {
-        9: {"q_a": {"hash_match": True}, "q_b": {"hash_match": True}},
-        10: {"q_a": {"hash_match": True}},
-    }
-    # q_a changed in r10 and has an r10 green row -> cleared (sorts by
-    # its real green age); q_b changed in r10 but its newest green is
-    # r9 -> still dirty, front of window.
-    order = _rotation_order(
-        {"q_a": True, "q_b": True}, history, {"q_a": 10, "q_b": 10}
-    )
-    assert order == ["q_b", "q_a"]
-
-
-def test_rotation_bounds_staleness():
-    """The driver checks only the first 50 entries per round; the
-    rotation must guarantee every query is re-proven within
-    ceil(N/50) all-green rounds (r10 verdict item 2: pin the
-    max-staleness bound, don't trust it). Simulated forward from the
-    REAL committed history + real inventory, so inventory growth that
-    breaks the bound fails here first."""
-    import math
-
-    from typebus_spark.suite import (
-        DIRTY_SINCE,
-        QUERIES,
-        _load_driver_history,
-        _rotation_order,
-    )
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    history = {k: dict(v) for k, v in _load_driver_history(root).items()}
-    if not history:
-        pytest.skip("no CORRECTNESS history on disk")
-    has_oracle = {n: q.oracle is not None for n, q in QUERIES.items()}
-    window, n = 50, len(has_oracle)
-    rounds_needed = math.ceil(n / window)
-    start = max(history) + 1
-    for i in range(rounds_needed):
-        order = _rotation_order(has_oracle, history, DIRTY_SINCE)
-        history[start + i] = {
-            name: {"hash_match": True} for name in order[:window]
-        }
-    # every registered query earned a green row in the simulated span
-    latest = {}
-    for rnd in range(start, start + rounds_needed):
-        for name in history[rnd]:
-            latest[name] = rnd
-    missed = set(has_oracle) - set(latest)
-    assert not missed, sorted(missed)[:10]
-
-    # and the REAL history shows no query staler than the bound + 1
-    # round of slack (new queries land at the window front next round)
-    real_latest: dict[str, int] = {}
-    for rnd, rows in _load_driver_history(root).items():
-        for name, rec in rows.items():
-            if rec.get("hash_match") is True or (
-                rec.get("err") == "no_oracle"
-                and rec.get("spark_rows") is not None
-            ):
-                real_latest[name] = max(real_latest.get(name, 0), rnd)
-    max_round = max(max(h) for h in [_load_driver_history(root)])
-    stale = {
-        n: r
-        for n, r in real_latest.items()
-        if n in has_oracle and r < max_round - rounds_needed
-    }
-    assert not stale, f"queries staler than {rounds_needed}+1 rounds: {stale}"
-
-
-def test_live_rotation_auto_derivation():
-    """The keep-one-live pick and its dirty pair derive from the round
-    number (max CORRECTNESS round + 1): no hand edit when a round
-    starts. Pin the r10→r14 schedule (session → hourly → sliding →
-    static_join → session) and that the dirty pair is always {newly
-    live, newly muxed}."""
-    from typebus_spark.queries.dataflow import LIVE_APPEND_PICK
-    from typebus_spark.suite import (
-        LIVE_APPEND_ROTATION,
-        _live_rotation_dirty,
-        current_round,
-    )
-
-    schedule = {10: "session", 11: "hourly", 12: "sliding",
-                13: "static_join", 14: "session"}
-    for rnd, pick in schedule.items():
-        assert LIVE_APPEND_ROTATION[rnd % 4] == pick, (rnd, pick)
-
-    rnd = current_round()
-    assert LIVE_APPEND_PICK == LIVE_APPEND_ROTATION[rnd % 4]
-    dirty = _live_rotation_dirty()
-    assert dirty == {
-        f"q_stream_{LIVE_APPEND_ROTATION[rnd % 4]}_append": rnd,
-        f"q_stream_{LIVE_APPEND_ROTATION[(rnd - 1) % 4]}_append": rnd,
-    }
-    # and the merged DIRTY_SINCE carries the pair
-    from typebus_spark.suite import DIRTY_SINCE
-
-    assert set(dirty) <= set(DIRTY_SINCE)
-
-
-def test_window_stamp_keys_and_diff_refusal(tmp_path):
-    """Detail-file window hygiene (r12 verdict item 5): bench stamps
-    {timestamp, load_start, git_sha} (+load_end, live_append_pick at
-    write time), and bench_diff REFUSES ratio claims when either file
-    lacks the stamp."""
-    import json
+    import shutil
     import subprocess
-    import sys as _sys
+    import sys
 
-    from bench import _window_stamp
-
-    w = _window_stamp()
-    assert {"timestamp", "load_start", "git_sha"} <= set(w)
-    assert isinstance(w["load_start"], float)
-
-    stamped = {
-        "queries": {"q_a": 1.0, "q_b": 2.0},
-        "window": {**w, "load_end": w["load_start"]},
-    }
-    bare = {"queries": {"q_a": 1.1, "q_b": 2.1}}
-    pa, pb = tmp_path / "a.json", tmp_path / "b.json"
-    pa.write_text(json.dumps(stamped))
-    pb.write_text(json.dumps(bare))
-    r = subprocess.run(
-        [_sys.executable, "tools/bench_diff.py", str(pa), str(pb)],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copytree(
+        os.path.join(repo, "typebus_spark"),
+        tmp_path / "typebus_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
     )
-    assert r.returncode == 1 and "REFUSED" in r.stdout, r.stdout
-    pb.write_text(json.dumps(stamped))
-    r = subprocess.run(
-        [_sys.executable, "tools/bench_diff.py", str(pa), str(pb)],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
+    env = {**os.environ, "PYTHONPATH": str(tmp_path)}
+
+    def probe():
+        r = subprocess.run(
+            [sys.executable, "-c", _PROBE], cwd=tmp_path, env=env,
+            capture_output=True, text=True, timeout=300,
+        )
+        assert r.returncode == 0, r.stderr[-2000:]
+        out = json.loads(r.stdout.strip().splitlines()[-1])
+        assert out["file"].startswith(str(tmp_path)), out["file"]
+        return out
+
+    plain = probe()
+    (tmp_path / "CORRECTNESS_r99.json").write_text(
+        json.dumps({plain["order"][0]: {"hash_match": True}})
     )
-    assert r.returncode == 0 and "windows:" in r.stdout, r.stdout
-
-
-def test_detail_path_shields_committed_pair(monkeypatch):
-    """Driver-detail shielding (r13 verdict item 7): a bench run
-    without SPARK_GRAFT_COMMIT_DETAIL must not overwrite a CLEAN
-    git-tracked detail file (the driver's own run was dirtying the
-    committed stamped pair); the explicit env override restores the
-    canonical path for the builder's stamped-pair runs."""
-    import subprocess
-
-    from bench import detail_path
-
-    monkeypatch.delenv("SPARK_GRAFT_COMMIT_DETAIL", raising=False)
-    status = subprocess.run(
-        ["git", "status", "--porcelain", "--", "BENCH_DETAIL.json"],
-        cwd="/root/repo", capture_output=True, text=True,
-    )
-    clean = not status.stdout.strip()
-    p = detail_path("BENCH_DETAIL.json")
-    if clean:
-        assert p.endswith("BENCH_DETAIL_last_run.json"), p
-    else:  # mid-iteration: dirty file keeps plain overwrite behavior
-        assert p.endswith("BENCH_DETAIL.json"), p
-
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_DETAIL", "1")
-    assert detail_path("BENCH_DETAIL.json").endswith("/BENCH_DETAIL.json")
-    # the diverted sibling is gitignored so the run leaves status clean
-    ign = subprocess.run(
-        ["git", "check-ignore", "BENCH_DETAIL_last_run.json"],
-        cwd="/root/repo", capture_output=True,
-    )
-    assert ign.returncode == 0
+    with_file = probe()
+    assert with_file["order"] == plain["order"]
+    assert len(plain["order"]) == len(QUERIES)
+    assert plain["live"] == with_file["live"] == ["q_stream_hourly_append"]

@@ -1,7 +1,7 @@
 """Every inventory query with an oracle must hash-match DuckDB at smoke SF.
 
 This mirrors the driver's t2 gate (see __spark_entry__.py docstring) so a
-red test here means a red CORRECTNESS_r{N}.json entry.
+red test here means the same query fails that gate.
 """
 
 from __future__ import annotations

@@ -536,6 +536,11 @@ def test_staged_stream_source_preserves_rows(spark, sf_dir):
         ("q_stream_stream_join", "native_stream_stream_join"),
         ("q_stream_session", "native_stream_session"),
         ("mux_stream_session_append", "native_stream_session_append"),
+        ("mux_stream_sliding_append", "native_stream_sliding_append"),
+        (
+            "mux_stream_static_join_append",
+            "native_stream_static_join_append",
+        ),
     ],
 )
 def test_mux_matches_native_streaming(spark, sf_dir, qname, native):
@@ -545,12 +550,12 @@ def test_mux_matches_native_streaming(spark, sf_dir, qname, native):
     pin for the r10 amortization: the mux handlers are per-micro-batch
     batch transforms (the reference's router architecture), and the
     single-batch availableNow replay makes their output equal the
-    native query's finalized emission. Six representative shapes:
-    complete-mode window agg, append+watermark eviction, watermark-
-    bounded dedup, stateful two-sided join, session windows (complete
-    and append forms). The append pairs use the explicit mux_* entry
-    points so the pin holds regardless of which shape currently owns
-    the keep-one-live slot (LIVE_APPEND_PICK)."""
+    native query's finalized emission. Eight representative shapes:
+    complete-mode window agg, append+watermark eviction (tumbling,
+    sliding, stream-static join), watermark-bounded dedup, stateful
+    two-sided join, session windows (complete and append forms). The
+    append pairs use the explicit mux_* entry points because
+    q_stream_hourly_append runs its native form."""
     from typebus_spark.queries import dataflow as dfq
     from typebus_spark.suite import QUERIES
 

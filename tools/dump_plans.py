@@ -2,7 +2,7 @@
 
 Usage:
     python tools/dump_plans.py --root <repo-or-worktree> \
-        --out plans/r13 --suffix _before --queries q_a,q_b,...
+        --out <dir> --suffix _before --queries q_a,q_b,...
 
 Writes ``<out>/<query><suffix>.txt`` per query. Plans are captured with
 the same ``get_spark`` session shape the bench uses, so Exchange counts
@@ -10,7 +10,7 @@ and join strategies match the benched plans. Queries whose fn() runs
 jobs at build time (streams, drains, trainers) still produce a plan for
 the RETURNED frame — the machinery cost lives in the build, which the
 plan cannot show; those plans are still useful for the final-frame
-shape (noted in OPTIMIZATION_r13.md where it matters).
+shape.
 """
 
 from __future__ import annotations

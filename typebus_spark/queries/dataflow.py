@@ -47,23 +47,6 @@ from typebus_spark.suite import query, t
 STREAM_STATE_PARTITIONS = 2
 SESSION_STATE_PARTITIONS = 4
 
-# Keep-one-live rotation (r11, r10 verdict item 3): exactly ONE
-# append+watermark window query runs its REAL streaming form in the
-# inventory each round, so live watermark-eviction machinery stays
-# driver-checked at one-query cost; the other append shapes read the
-# multiplexed consumer graph (their mux==native equivalence is pinned
-# by tests/test_streaming_ops.py::test_mux_matches_native_streaming).
-# The pick DERIVES from the round number (max committed CORRECTNESS
-# round + 1 — the same history the window rotation reads), so
-# advancing it each round is automatic: session (r10) → hourly (r11)
-# → sliding (r12) → static_join (r13) → session (r14) → … .
-# suite.DIRTY_SINCE likewise auto-marks the newly-live and newly-muxed
-# queries (suite._live_rotation_dirty), so the pair re-enters the
-# driver window without hand maintenance.
-from typebus_spark.suite import LIVE_APPEND_ROTATION, current_round
-
-LIVE_APPEND_PICK = LIVE_APPEND_ROTATION[current_round() % 4]
-
 # Python-stateful operators (applyInPandasWithState) have a different
 # optimum: per-GROUP pandas overhead in the Python worker dominates the
 # state-store open/commit I/O that drives the JVM-stateful choice above,
@@ -848,22 +831,18 @@ GROUP BY 1
         "tumbling windows with a 1-hour watermark, append-mode memory "
         "sink — windows emit exactly once when the watermark closes "
         "them, so the sink is write-once and state stays bounded by "
-        "the open-window horizon. Dispatches on the keep-one-live "
-        "rotation (LIVE_APPEND_PICK, derived from the on-disk driver "
-        "history each run — round-agnostic by design): when this shape "
-        "holds the slot it runs the REAL append+watermark streaming "
-        "query; when another shape holds the slot it reads "
-        "the multiplexed consumer graph instead (the finalized-output "
-        "filter — window_end strictly before max(ts) − delay — is "
-        "applied identically to the handler output, so the result is "
-        "the same provably-finalized set either way, pinned by the "
-        "mux==native test). " + _APPEND_DOC_TAIL
+        "the open-window horizon. The one append query that runs its "
+        "REAL append+watermark streaming query, so the watermark "
+        "eviction machinery stays under the oracle check; the session, "
+        "sliding and static_join append shapes read the multiplexed "
+        "consumer graph. mux_stream_hourly_append applies the same "
+        "finalized-output filter (window_end strictly before max(ts) "
+        "− delay) to the handler output, mux==native pinned. "
+        + _APPEND_DOC_TAIL
     ),
 )
 def q_stream_hourly_append(spark, sf_dir):
-    if LIVE_APPEND_PICK == "hourly":
-        return native_stream_hourly_append(spark, sf_dir)
-    return mux_stream_hourly_append(spark, sf_dir)
+    return native_stream_hourly_append(spark, sf_dir)
 
 
 def mux_stream_hourly_append(spark, sf_dir):
@@ -970,15 +949,13 @@ HAVING max(ts) + INTERVAL 30 MINUTE < (SELECT wm FROM c)
         "its end (last event + gap), and its state is dropped; the "
         "oracle's gaps-and-islands replay keeps only sessions whose "
         "end is strictly closed. Served by the multiplexed consumer "
-        "graph while another shape holds the keep-one-live slot "
-        "(LIVE_APPEND_PICK); per-query streaming form kept as "
+        "graph (q_stream_hourly_append is the one live append query); "
+        "per-query streaming form kept as "
         "native_stream_session_append, mux==native pinned. "
         + _APPEND_DOC_TAIL
     ),
 )
 def q_stream_session_append(spark, sf_dir):
-    if LIVE_APPEND_PICK == "session":
-        return native_stream_session_append(spark, sf_dir)
     return mux_stream_session_append(spark, sf_dir)
 
 
@@ -1026,8 +1003,7 @@ def _mux_stream_session_append(spark, sf_dir, batch):
 
 def native_stream_session_append(spark, sf_dir):
     """Per-query REAL append+watermark session-window streaming form —
-    the r10 inventory shape, kept for the keep-one-live rotation and
-    the mux==native parity pin."""
+    kept for the mux==native parity pin."""
     stream, cutoff = _watermarked_events(spark, sf_dir, "stream_sess_ap_")
     agg = _agg_session_append(stream, "wts")
     name = f"sess_ap_{uuid.uuid4().hex[:8]}"
@@ -1067,14 +1043,13 @@ GROUP BY 1
         "windows sliding every 30 minutes with a 1-hour watermark in "
         "append mode — each overlapping window emits exactly once as "
         "the watermark closes it. Served by the multiplexed consumer "
-        "graph (see q_stream_hourly); per-query streaming form kept as "
+        "graph (q_stream_hourly_append is the one live append query); "
+        "per-query streaming form kept as "
         "native_stream_sliding_append, mux==native pinned. "
         + _APPEND_DOC_TAIL
     ),
 )
 def q_stream_sliding_append(spark, sf_dir):
-    if LIVE_APPEND_PICK == "sliding":
-        return native_stream_sliding_append(spark, sf_dir)
     return mux_stream_sliding_append(spark, sf_dir)
 
 
@@ -1275,9 +1250,9 @@ FROM g GROUP BY user_id, sid
         "gaps-and-islands SQL as the batch form. Served by the "
         "multiplexed consumer graph (see q_stream_hourly); the "
         "per-query streaming session_window form is kept as "
-        "native_stream_session (and ONE append+watermark shape stays "
-        "LIVE in the inventory per round — LIVE_APPEND_PICK, the "
-        "keep-one-live rotation), mux==native pinned."
+        "native_stream_session (q_stream_hourly_append is the one "
+        "append+watermark query that stays live in the inventory), "
+        "mux==native pinned."
     ),
 )
 def q_stream_session(spark, sf_dir):
@@ -1704,14 +1679,13 @@ GROUP BY 1, 2
         "then aggregates per (segment, 1-hour window) in append mode — "
         "the global complete-mode per-segment totals become exactly-"
         "once hourly emissions with evicted state. Served by the "
-        "multiplexed consumer graph (see q_stream_hourly); per-query "
-        "streaming form kept as native_stream_static_join_append, "
-        "mux==native pinned. " + _APPEND_DOC_TAIL
+        "multiplexed consumer graph (q_stream_hourly_append is the one "
+        "live append query); per-query streaming form kept as "
+        "native_stream_static_join_append, mux==native pinned. "
+        + _APPEND_DOC_TAIL
     ),
 )
 def q_stream_static_join_append(spark, sf_dir):
-    if LIVE_APPEND_PICK == "static_join":
-        return native_stream_static_join_append(spark, sf_dir)
     return mux_stream_static_join_append(spark, sf_dir)
 
 

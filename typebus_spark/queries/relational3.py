@@ -82,13 +82,12 @@ def q4_priority_exists(spark, sf_dir):
     # EXISTS as inner join + per-order dedup, not LEFT SEMI (r13):
     # with orders on the left, BroadcastHashJoin LeftSemi can only
     # build the RIGHT side — so the r12 plan broadcast the LINEITEM
-    # projection (plans/r13/q4_priority_exists_before.txt: BuildRight
-    # over the fact table). That only works at toy scale; at 100 TB the
-    # fact side never fits a broadcast and the semi degrades to a
-    # two-sided sort-merge shuffle. With the order slice on the probe
-    # side's right, the planner broadcasts it from its own size
-    # estimate at bench scale (orders scan ≈ 2.7 MB < every session's
-    # threshold) so lineitem shuffles nothing; the distinct
+    # projection (BuildRight over the fact table). That only works at
+    # toy scale; at 100 TB the fact side never fits a broadcast and the
+    # semi degrades to a two-sided sort-merge shuffle. With the order
+    # slice on the probe side's right, the planner broadcasts it from
+    # its own size estimate at bench scale (orders scan ≈ 2.7 MB <
+    # every session's threshold) so lineitem shuffles nothing; the distinct
     # (orderkey, priority) then collapses multiple late items per order
     # (priority is functionally dependent on orderkey, so this equals
     # the semi-join's order set) with map-side partials bounded by the

@@ -28,11 +28,10 @@ What stays OUTSIDE the mux (incompatible shapes, per r9 verdict):
   has that semantics.
 - ``q_stream_entity_state`` — the applyInPandasWithState E1 operator
   must itself run under the driver check.
-- one live append+watermark window query per round (the keep-one-live
-  slot, rotated per round across hourly/sliding/static_join/session —
-  ``queries/dataflow.py LIVE_APPEND_PICK``) keeps the real eviction
-  machinery driver-checked (the trainer-stays-live convention,
-  CLAUDE.md).
+- ``q_stream_hourly_append`` is the one live append+watermark window
+  query: it keeps the real eviction machinery under the oracle check
+  (the trainer-stays-live convention); the session, sliding and
+  static_join append shapes read the mux.
 
 Scale shape: at 100 TB this is exactly the deployment story — one
 long-running consumer graph per service, handlers as per-micro-batch
@@ -61,7 +60,7 @@ _MUX_CACHE: dict[tuple, dict] = {}
 
 # sf_dir -> wall seconds of the last scaffold run (bench transparency:
 # the per-query bench numbers are amortized reads; THIS is the one-time
-# cost a session pays, reported in BENCH_DETAIL.json)
+# cost a session pays, which bench.py reports as mux_scaffold_sec)
 LAST_SCAFFOLD_WALL: dict[str, float] = {}
 
 

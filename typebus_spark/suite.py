@@ -13,7 +13,6 @@ stateful streaming, iterative algorithms) and get a rows-only check.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -47,47 +46,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _load_driver_history(root: str) -> dict[int, dict]:
-    """CORRECTNESS_r{N}.json files under ``root`` → {round: records}."""
-    import glob
-    import json
-    import re
-
-    history: dict[int, dict] = {}
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            history[int(m.group(1))] = rows
-    return history
-
-
-def current_round() -> int:
-    """The round now being built: max ON-DISK CORRECTNESS round + 1
-    (the same history the window rotation reads — committed or not;
-    the driver writes the file before the next round starts, so a
-    bench run after that file lands resolves the NEXT round's live
-    pick). 1 on a fresh tree. Defined BEFORE the query-module imports
-    below — dataflow.py reads it (and LIVE_APPEND_ROTATION) at its own
-    import time."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    history = _load_driver_history(root)
-    return (max(history) + 1) if history else 1
-
-
-# Keep-one-live rotation schedule, shared with queries/dataflow.py
-# (defined here so the pick and the auto-dirty marking read ONE
-# source; dataflow imports it — suite must not import dataflow's
-# symbols at module top, the query modules import suite).
-LIVE_APPEND_ROTATION = ("sliding", "static_join", "session", "hourly")
-
-
 # Import modules that register queries (order defines inventory order).
 from typebus_spark.queries import relational  # noqa: E402,F401
 from typebus_spark.queries import relational2  # noqa: E402,F401
@@ -100,225 +58,6 @@ from typebus_spark.queries import dedup  # noqa: E402,F401
 from typebus_spark.queries import similarity  # noqa: E402,F401
 from typebus_spark.queries import text  # noqa: E402,F401
 from typebus_spark.queries import corpus  # noqa: E402,F401
-
-
-# Queries whose IMPLEMENTATION changed in a given round: a green history
-# row proves the OLD code, so each must re-enter the driver window even
-# though it has never failed. Maps query name → the round in which its
-# implementation changed; an entry stays dirty until a green driver row
-# from THAT round (or later) exists, then clears itself — no hand
-# maintenance at round start (the r10 hand-cleared set starved the
-# rotation risk onto whoever remembered to clear it). Entries whose
-# green row has landed are pruned opportunistically; stale-but-cleared
-# entries are harmless (they no longer sort to the front).
-def _live_rotation_dirty() -> dict[str, int]:
-    """Auto-dirty entries for the keep-one-live rotation: advancing the
-    pick changes BOTH the newly-live and the newly-muxed append query's
-    implementation each round, so both re-enter the driver window
-    without hand maintenance."""
-    rnd = current_round()
-    return {
-        f"q_stream_{LIVE_APPEND_ROTATION[rnd % 4]}_append": rnd,
-        f"q_stream_{LIVE_APPEND_ROTATION[(rnd - 1) % 4]}_append": rnd,
-    }
-
-
-DIRTY_SINCE: dict[str, int] = {
-    # (the keep-one-live rotation pair is auto-marked each round via
-    # _live_rotation_dirty — merged below; all r10/r11 entries earned
-    # their change-round green row in CORRECTNESS_r11 and self-cleared
-    # — pruned)
-    # r13: normalize_url's :443 strip gained its port-end anchor
-    # ((?i)^(https://[^/:?#]+):443([/?#]|$) — r12 ADVICE: x.com:4430
-    # was corrupted to x.com0) — q_domain_caps consumes it via
-    # curate_urls.
-    "q_domain_caps": 13,
-    # r15: run_batch has one router shape — raw checkpoint, one decode
-    # checkpoint per schema group, and per stream at most three
-    # generator branches (decoded rows, handler output, failed rows)
-    # instead of ~8 filtered union arms; the single-group keep_value
-    # fast path and the live-topic probe are gone. Every query routing
-    # through the batch router changed plans.
-    "q_route_counts": 15,
-    "q_route_traced": 15,
-    "q_retry_drain": 15,
-    "q_retry_drain_shed": 15,
-    "q_entity_lookup": 15,
-    "q_rpc_correlate": 15,
-    # r13: corpus-stats stragglers restructured (r12 verdict item 2):
-    # bigram_logprob persists ugc (double-scan), perplexity_buckets
-    # persists the scored frame (repartitionByRange sampling re-ran
-    # the pipeline), dsir's corpus totals became a window over lm,
-    # source_overlap's size joins share one broadcast exchange.
-    # r13 optimization round: bigram_logprob tokenizes ONCE (persisted
-    # token-array frame feeds both the bigram and unigram streams;
-    # the ex persist dropped), dsir_logweights gained the spread
-    # before its explode+md5 scan — perplexity_buckets and
-    # q_pipeline_curated_mix consume bigram_logprob transitively.
-    "q_dsir_weights": 13,
-    "q_source_overlap": 13,
-    # r13 optimization round: profile decomposition keeps its three
-    # narrow scans but drops the ensure_parallelism spread (the
-    # repartition was a full shuffle re-run by all three consumers;
-    # min/max/count profiling is scan-bound — 1.04 -> 0.46 s).
-    "q_profile_table": 13,
-    # r13 optimization round, relational rewrites (values identical,
-    # oracles unchanged): q16 drops the redundant distinct-pairs
-    # shuffle (countDistinct collapses duplicates anyway), q4's EXISTS
-    # becomes broadcast-inner + per-order distinct (LeftSemi could not
-    # broadcast the small side), q21's double countDistinct becomes
-    # two plain aggregates over a (orderkey, suppkey) pre-reduce (no
-    # Expand), q_heavy_hitter_tokens gets the lambda-free tokens_lower
-    # the r13 sweep missed.
-    "q16_supplier_part_counts": 13,
-    "q21_sole_late_supplier": 13,
-    "q_heavy_hitter_tokens": 13,
-    # r13: q7 probes ONE nation dim via aliases instead of two renamed
-    # projections — AQE builds the broadcast once and ReusedExchange
-    # serves the supplier side (5 builds -> 4 + 1 reuse); rows
-    # bit-identical (4200 checked), oracle unchanged.
-    "q7_nation_volume": 13,
-    # r13: transform(tokens, lower) → tokens_lower (lower-then-split,
-    # lambda-free — the r10 interpreted-HOF rule) in vocab_topk,
-    # token_entropy, dsir, lang_id, tfidf, bpe_pair_counts, and the
-    # clean-corpus lang gate. Same values, new expression trees.
-    "q_vocab_topk": 13,
-    "q_token_entropy": 13,
-    "q_text_langid": 13,
-    "q_bpe_pair_counts": 13,
-    # r13 optimization round: the exact index stores a third table
-    # (per-doc shingle sizes) so incremental_dedup's jaccard joins the
-    # stored sizes instead of re-aggregating the postings index behind
-    # a per-batch semi-join, and the admit tagging fuses its two outer
-    # joins into one union+min-priority join. Values identical
-    # (nc is the same per-doc distinct-shingle count, computed at
-    # index build instead of per pass); q_dedup_incremental is the
-    # only consumer of build_exact_index.
-    "q_dedup_incremental": 13,
-    # r13: _ANCHOR_PAT requires a word boundary after '<a' (r12
-    # ADVICE: <abbr>/<aside>/<article>/<address> inflated link
-    # density) — everything consuming line_link_density /
-    # drop_boilerplate changed values.
-    "q_html_boilerplate": 13,
-    "q_pipeline_clean_corpus": 13,
-    # r14 query rewrites (ADVICE r14, high): bigram_logprob,
-    # dedup_keep_best's argmax, dedup_embedding, tfidf_top_terms,
-    # top_parts_by_revenue, q4's EXISTS, topic_balance's persist and
-    # contamination_fuzzy changed implementation; the multimodal
-    # decode/resize/phash operators gained a per-batch content memo,
-    # so every query consuming them is listed, as are bigram_logprob's
-    # transitive consumers (perplexity_buckets, pipeline_curated_mix).
-    "q_bigram_logprob": 14,
-    "q_perplexity_buckets": 14,
-    "q_pipeline_curated_mix": 14,
-    "q_dedup_keep_best": 14,
-    "q_dedup_embedding": 14,
-    "q_tfidf_top_terms": 14,
-    "q_top_parts_by_revenue": 14,
-    "q4_priority_exists": 14,
-    "q_topic_balance": 14,
-    "q_contamination_fuzzy": 14,
-    "q_multimodal_decode": 14,
-    "q_multimodal_resize": 14,
-    "q_multimodal_framesample": 14,
-    "q_multimodal_real_decode": 14,
-    "q_multimodal_real_resize": 14,
-    "q_multimodal_phash": 14,
-    "q_multimodal_phash_near": 14,
-    # (r12 entries earned green rows in the r12 window and
-    # self-cleared — pruned. For the record: the r12 staging change
-    # stages wire-format fixture batches per (app, sf_dir)
-    # (queries/dataflow.staged_wire) while run_batch KEEPS its decode
-    # checkpoint — 5c0690e reverted an experiment without it.)
-}
-
-# Back-compat alias used by tests/tools that inspect the dirty set.
-DIRTY_QUERIES = set(DIRTY_SINCE)
-
-
-def _rotation_order(
-    has_oracle: dict[str, bool],
-    history: dict[int, dict],
-    dirty: set[str] | dict[str, int] | None = None,
-) -> list[str]:
-    """Pure rotation ordering (unit-tested over synthetic histories in
-    tests/test_bench_harness.py): sort query names by the latest round
-    in which each got a GREEN driver row (hash_match, or a clean
-    rows-only record for queries that are STILL oracle-less); a query
-    whose most recent driver record is a FAILURE — or that was never
-    seen — sorts to the front so the window re-proves it. Queries in
-    ``dirty`` (implementation changed since their last green row) are
-    treated as unproven and sort to the front too; when ``dirty`` is a
-    {name: round_changed} dict, an entry self-clears once a green row
-    from that round or later exists (the green row proves the NEW
-    code). Ties keep registration order (``has_oracle`` insertion
-    order), so the result is fully deterministic given the history.
-
-    ``history`` maps round number → the CORRECTNESS_r{N}.json dict.
-    A historical rows-only green only counts while the query remains
-    oracle-less: once it gains an oracle (e.g. q_knn_ivf_kmeans's
-    frozen-codebook upgrade in round 5), the old record is weaker
-    evidence than the check it now supports, so it re-enters the
-    window.
-    """
-    latest_green: dict[str, int] = {}
-    latest_fail: dict[str, int] = {}
-    for rnd, rows in history.items():
-        if not isinstance(rows, dict):
-            continue
-        for name, rec in rows.items():
-            if not isinstance(rec, dict):
-                continue
-            green = rec.get("hash_match") is True or (
-                rec.get("err") == "no_oracle"
-                and rec.get("spark_rows") is not None
-                and not has_oracle.get(name, False)
-            )
-            bucket = latest_green if green else latest_fail
-            bucket[name] = max(bucket.get(name, 0), rnd)
-
-    pos = {n: i for i, n in enumerate(has_oracle)}
-
-    def key(name: str) -> tuple[int, int]:
-        g = latest_green.get(name, 0)
-        if latest_fail.get(name, 0) >= g:
-            g = 0  # unproven or regressed: back to the front
-        if dirty and name in dirty:
-            since = dirty[name] if isinstance(dirty, dict) else None
-            if since is None or g < since:
-                g = 0  # changed code: old green rows prove old code
-        return (g, pos[name])
-
-    return sorted(has_oracle, key=key)
-
-
-
-
-def _reorder_by_driver_history() -> None:
-    """Rotate the inventory so the driver's correctness window lands on
-    the queries with the weakest driver evidence.
-
-    The driver hash-checks only the first 50 entries of ``queries()``
-    (observed each round: CORRECTNESS_r{N}.json's key set equals
-    inventory positions 1-50 in insertion order). With 100+ queries, a
-    static order re-spends the whole window on already-proven entries
-    and the tail never earns a driver row — so order by
-    :func:`_rotation_order` over the recorded driver history.
-    """
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    has_oracle = {n: q.oracle is not None for n, q in QUERIES.items()}
-    DIRTY_SINCE.update(_live_rotation_dirty())
-    DIRTY_QUERIES.clear()
-    DIRTY_QUERIES.update(DIRTY_SINCE)
-    order = _rotation_order(
-        has_oracle, _load_driver_history(root), DIRTY_SINCE
-    )
-    reordered = {n: QUERIES[n] for n in order}
-    QUERIES.clear()
-    QUERIES.update(reordered)
-
-
-_reorder_by_driver_history()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
