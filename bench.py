@@ -58,11 +58,13 @@ def main() -> None:
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             # ~150 query executions compile several codegen units each;
-            # the default generated-code cache (100 entries) evicts and
-            # recompiles constantly, and the JVM's default reserved code
-            # cache fills mid-suite — after which HotSpot disables JIT
-            # and late queries run interpreted (observed 5-10x tails).
-            # Static confs, so they must be set before session creation.
+            # get_spark's generated-code cache (1000 entries, sized for
+            # one bus op) would evict and recompile across the 158
+            # queries, so bench raises it to 10 000. The JVM's default
+            # reserved code cache fills mid-suite — after which HotSpot
+            # disables JIT and late queries run interpreted (observed
+            # 5-10x tails). Static confs, so they must be set before
+            # session creation.
             "spark.sql.codegen.cache.maxEntries": "10000",
             "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g",
         },

@@ -23,3 +23,10 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+def compiled_classes(spark) -> int:
+    """Classes Spark has compiled from generated code in this JVM so far
+    (``CodegenMetrics``); a codegen-cache hit compiles none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -2,7 +2,9 @@
 
 The external driver runs ``__spark_entry__`` with a PLAIN SparkSession
 — none of ``typebus_spark.get_spark``'s confs (AQE advisory size,
-nanosAsLong, tmpfs scratch, codegen cache) are applied. Every other
+nanosAsLong, tmpfs scratch, the 1000-entry codegen cache) are applied.
+The codegen cache only saves recompiles; the others can change results
+or failures. Every other
 test in this suite uses the get_spark fixture, so a query that silently
 depends on one of those confs would stay green locally and fail only
 at the driver. This test spawns a SUBPROCESS with a bare session and

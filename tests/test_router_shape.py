@@ -14,15 +14,23 @@ Shapes:
 
 A drain whose static round bound exceeds the round cap is checked
 separately: the rows still queued at the cap are dead-lettered.
+
+A warm batch does only its own data's work: a second drain or service
+poll over fresh rows compiles no generated code, the entity lookup
+joins its cached snapshot by broadcast, and the fresh event ids and
+clock reads that make this possible stay unique and correct.
 """
 
 from __future__ import annotations
 
 import json
+import re
 from collections import Counter
+from datetime import datetime, timezone
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import compiled_classes
 
 from typebus_spark.codec.envelope import encode_envelope, new_meta
 from typebus_spark.registry import BackoffShape, RetryPolicy, Service
@@ -32,6 +40,7 @@ from typebus_spark.runtime import (
     _drain_round_bound,
     drain_batches,
     run_batch,
+    start_service,
 )
 
 ORDER = "order_id string, user_id string, qty int, price double"
@@ -308,3 +317,102 @@ def test_router_plan_width(spark, shape, max_branches):
     if shape == "entity_lookup":
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         assert plan.count("Join LeftOuter") == 1
+
+
+def test_warm_drain_compiles_nothing(spark):
+    """The second drain of a service over a fresh batch reuses every
+    generated class of the first: no per-plan value reaches the
+    generated code, and the codegen cache holds a whole drain."""
+    svc, raw = _two_schemas(spark)
+    _outcomes(drain_batches(svc, raw).union_all())
+    fresh = _two_schemas(spark)[1]
+    before = compiled_classes(spark)
+    assert _outcomes(drain_batches(svc, fresh).union_all()) == Counter(
+        DRAIN["two_schemas"]
+    )
+    assert compiled_classes(spark) == before
+
+
+def test_warm_service_poll_compiles_nothing(spark, tmp_path):
+    """The second ``start_service`` poll of an entity-lookup service, over
+    fresh requests on the same topics, compiles no generated code."""
+    svc, raw = _entity_lookup(spark)
+    bus = FileBus(str(tmp_path / "bus"))
+    ck = str(tmp_path / "ck")
+    bus.publish(raw)
+    start_service(svc, bus, spark, ck).awaitTermination(60)
+    bus.publish(_entity_lookup(spark)[1])
+    before = compiled_classes(spark)
+    start_service(svc, bus, spark, ck).awaitTermination(60)
+    assert compiled_classes(spark) == before
+    # both polls answered: two lookups each, one hit and one miss
+    assert bus.read(spark, ["api.Account"]).count() == 4
+
+
+def test_entity_lookup_broadcasts_cached_snapshot(spark):
+    """The snapshot is materialized at registration, so the planner knows
+    its size and broadcasts it; no batch re-reads the rows it was built
+    from."""
+    svc, raw = _entity_lookup(spark)
+    out = run_batch(svc, raw.localCheckpoint(eager=True)).union_all()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert "InMemoryTableScan" in plan
+
+
+_OCCURRED_AT = re.compile(r"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3}Z")
+
+
+def _entity_batch_envelopes(spark) -> list[tuple[str, dict]]:
+    """(topic, envelope) of every output of one fresh entity-shape batch."""
+    svc, raw = _entity_lookup(spark)
+    out = run_batch(svc, raw).union_all()
+    return [
+        (r["topic"], json.loads(bytes(r["value"]).decode()))
+        for r in out.select("topic", "value").collect()
+    ]
+
+
+def test_fresh_ids_and_clock(spark):
+    """Every new envelope gets its own random event id (and, when none is
+    propagated, its own correlation id), an RPC reply keeps one id on
+    every topic it is published to, and ``occurred_at`` is wall-clock
+    time in the wire format."""
+    t0 = datetime.now(timezone.utc)
+    t0 = t0.replace(microsecond=t0.microsecond // 1000 * 1000)
+    first = _entity_batch_envelopes(spark)
+    second = _entity_batch_envelopes(spark)
+    t1 = datetime.now(timezone.utc)
+
+    def ids(batch):
+        # an RPC reply goes to its out-type topic AND the caller's topic
+        # as one event; every other output is an event of its own
+        return [e["meta"]["event_id"] for t, e in batch if t != "client-svc"]
+
+    for batch in (first, second):
+        assert len(set(ids(batch))) == len(ids(batch)) == 6
+        replies = {
+            e["meta"]["response_to"]: e["meta"]["event_id"]
+            for t, e in batch
+            if t == "api.QuoteReply"
+        }
+        rpc = [e for t, e in batch if t == "client-svc"]
+        assert len(rpc) == 2
+        for e in rpc:
+            assert e["meta"]["event_id"] == replies[e["meta"]["response_to"]]
+    assert not set(ids(first)) & set(ids(second))
+
+    # each reply carries its request's id and correlation id, both
+    # fresh from the request's encode
+    for field in ("response_to", "correlation_id"):
+        got = [e["meta"][field] for t, e in first + second if t != "client-svc"]
+        assert len(set(got)) == len(got) == 12
+
+    for _, e in first + second:
+        stamp = e["meta"]["occurred_at"]
+        assert _OCCURRED_AT.fullmatch(stamp), stamp
+        at = datetime.strptime(stamp, "%Y-%m-%dT%H:%M:%S.%fZ").replace(
+            tzinfo=timezone.utc
+        )
+        assert t0 <= at <= t1

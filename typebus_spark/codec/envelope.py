@@ -159,6 +159,18 @@ def published_event_schema(payload_schema: StructType) -> StructType:
     )
 
 
+# A fresh event id and the wall clock, as SQL read per row by reflection
+# (UUID.randomUUID and now, bus/package.scala:52-60). ``reflect`` is
+# evaluated through the expression object, so the generated Java source
+# does not change from plan to plan and Spark's codegen cache (keyed by
+# source text) hits on every warm batch. ``uuid()`` inlines its random
+# seed, fixed when the Column is built (so a cached Column also repeats
+# its ids across plans), and ``current_timestamp()`` folds to a new
+# literal per query: either would make every batch recompile.
+_FRESH_ID_SQL = "reflect('java.util.UUID', 'randomUUID')"
+_NOW_SQL = "CAST(reflect('java.time.Instant', 'now') AS TIMESTAMP)"
+
+
 def new_meta(
     event_type: str | Column,
     key: Column | None = None,
@@ -174,16 +186,15 @@ def new_meta(
 
     Mirrors Publisher.publish wrapping (bus/package.scala:52-60): fresh
     eventId + correlationId (if absent), eventType = FQN, occurredAt = now.
-    ``F.uuid()`` is nondeterministic-per-row, matching
-    ``java.util.UUID.randomUUID`` semantics.
+    Ids and the clock are read per row (``_FRESH_ID_SQL``, ``_NOW_SQL``).
     """
     et = F.lit(event_type) if isinstance(event_type, str) else event_type
     return F.struct(
-        F.uuid().alias("event_id"),
+        F.expr(_FRESH_ID_SQL).alias("event_id"),
         et.alias("event_type"),
-        (correlation_id if correlation_id is not None else F.uuid()).alias(
-            "correlation_id"
-        ),
+        (
+            correlation_id if correlation_id is not None else F.expr(_FRESH_ID_SQL)
+        ).alias("correlation_id"),
         F.lit(trace).alias("trace"),
         F.struct(
             (
@@ -206,7 +217,7 @@ def new_meta(
         ).alias("response_to"),
         F.create_map().cast("map<string,string>").alias("extra"),
         (
-            occurred_at if occurred_at is not None else F.current_timestamp()
+            occurred_at if occurred_at is not None else F.expr(_NOW_SQL)
         ).alias("occurred_at"),
     )
 
@@ -250,9 +261,9 @@ def encode_envelope(
         # round trips per call site (~0.3-1.5 ms each under load) —
         # measured as a top plan-construction cost across the router
         # queries. Dynamic inputs (event_type, key) are projected as
-        # columns first so the parsed string is static. Field order and
-        # types are identical to the Column path, so the JSON bytes on
-        # the wire don't change.
+        # columns first so the parsed string is static. Field order,
+        # types and the fresh id / clock expressions are the Column
+        # path's, so the JSON bytes on the wire don't change.
         key_col = key if key is not None else F.lit(None).cast("string")
         staged = df.select(
             *payload_cols, et.alias("__et"), key_col.alias("__key")
@@ -260,9 +271,9 @@ def encode_envelope(
         payload_sql = ", ".join(f"'{c}', `{c}`" for c in payload_cols)
         meta_sql = (
             "named_struct("
-            "'event_id', uuid(), "
+            f"'event_id', {_FRESH_ID_SQL}, "
             "'event_type', __et, "
-            "'correlation_id', uuid(), "
+            f"'correlation_id', {_FRESH_ID_SQL}, "
             "'trace', false, "
             "'direct_reply', named_struct("
             "'path', CAST(NULL AS STRING), "
@@ -271,7 +282,7 @@ def encode_envelope(
             "'socket_id', CAST(NULL AS STRING), "
             "'response_to', CAST(NULL AS STRING), "
             "'extra', CAST(map() AS MAP<STRING,STRING>), "
-            "'occurred_at', current_timestamp())"
+            f"'occurred_at', {_NOW_SQL})"
         )
         return staged.selectExpr(
             "CAST(__key AS BINARY) AS key",

@@ -233,7 +233,12 @@ class Service:
         an equi-join against the snapshot. A lookup miss replies with the
         requested id and null state fields (the reference fails the
         Future instead — documented divergence; nulls keep the reply
-        typed and SQL-joinable)."""
+        typed and SQL-joinable).
+
+        The snapshot is read once, here: its projection is cached and
+        counted, so every later batch joins the cached rows and the
+        planner sees their real size (a broadcast join when under
+        ``autoBroadcastJoinThreshold``, a shuffle join otherwise)."""
         if state_type not in self.catalog:
             raise KeyError(f"state_type not declared: {state_type}")
         ed = EntityDef(name=name, state_type=state_type, key_col=key_col, fold=fold)
@@ -257,11 +262,12 @@ class Service:
         snap_proj, join_cond, out_cols = _entity_lookup_cols(
             tuple(state_cols), key_col
         )
-        snap = snapshot.select(*snap_proj)
+        snap = snapshot.select(*snap_proj).cache()
+        snap.count()
 
         def lookup(df: DataFrame) -> DataFrame:
-            # DbAccessor answer: request id ⋈ snapshot key (broadcast by
-            # AQE when the snapshot is small; stream-static in streaming)
+            # DbAccessor answer: request id ⋈ cached snapshot key
+            # (stream-static in streaming)
             got = df.select("meta", "id").join(snap, join_cond, "left_outer")
             return got.select("meta", *out_cols)
 

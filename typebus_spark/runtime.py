@@ -137,8 +137,10 @@ def _union_kvt(frames: list[DataFrame]) -> DataFrame | None:
 # them costs a py4j round-trip per node (a fresh EventMeta struct is ~60
 # such trips), and run_batch used to rebuild identical trees every call
 # (~1.4 s of socket chatter per micro-batch, measured). The lru_caches
-# below pin the STATIC trees; reuse across plans is safe, and
-# nondeterministic leaves (uuid) still evaluate per row at execution.
+# below pin the STATIC trees; reuse across plans is safe, and the
+# nondeterministic leaves (the envelope's fresh id and clock, read by
+# reflection) still evaluate per row at execution. They also keep the
+# generated code identical across plans, so a warm batch compiles none.
 
 
 @lru_cache(maxsize=128)
@@ -540,7 +542,7 @@ def run_batch(
     if raw is not None:
         # LAZY checkpoints: the caller's one materialization computes each
         # exactly once (RDD cache locks compute each partition once, so
-        # the nondeterministic uuid envelopes stay consistent across
+        # the nondeterministic fresh-id envelopes stay consistent across
         # branches — probed in test_runtime), with no build-time job.
         raw = raw.localCheckpoint(eager=False)
         groups: dict[str, list[str]] = {}

@@ -109,6 +109,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # Spark caches generated classes by source text, 100 by default;
+        # one bus_batch op generates ~117 distinct classes, so the
+        # default cache evicts and recompiles them on every warm batch.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
