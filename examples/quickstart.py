@@ -115,7 +115,7 @@ def main() -> None:
 
     with tempfile.TemporaryDirectory() as tmp:
         bus = FileBus(f"{tmp}/bus")
-        bus.publish(raw, "api.OrderPlaced")
+        bus.publish(raw)
         q = start_service(svc, bus, spark, checkpoint_root=f"{tmp}/ckpt")
         q.awaitTermination(60)
         replies = bus.read(spark, ["api.OrderCharged"])

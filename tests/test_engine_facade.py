@@ -49,7 +49,7 @@ def test_engine_end_to_end(spark, tmp_path):
     from typebus_spark.runtime import FileBus
 
     bus = FileBus(str(tmp_path / "bus"))
-    bus.publish(encode_envelope(df, "api.OrderPlaced"), "api.OrderPlaced")
+    bus.publish(encode_envelope(df, "api.OrderPlaced"))
     q = eng.start(str(tmp_path / "bus"), str(tmp_path / "ckpt"))
     q.awaitTermination(60)
     assert bus.read(spark, ["api.OrderConfirmed"]).count() == 1

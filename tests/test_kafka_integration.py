@@ -87,7 +87,7 @@ def test_kafka_bus_end_to_end(spark, tmp_path):
 
     # publish BEFORE starting the service; earliest offsets replay it
     src = spark.createDataFrame([(1,), (2,), (3,)], "n long")
-    bus.publish(encode_envelope(src, in_topic), in_topic)
+    bus.publish(encode_envelope(src, in_topic))
 
     q = start_service(svc, bus, spark, str(tmp_path / "ckpt"))
     q.awaitTermination(120)

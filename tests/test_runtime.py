@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import threading
 from collections import Counter
 
 import pyspark.sql.functions as F
@@ -23,7 +25,7 @@ from typebus_spark.codec.envelope import decode_envelope, encode_envelope
 from typebus_spark.registry import Service
 from typebus_spark.runtime import (
     DEAD_LETTER_TOPIC,
-    TRACE_TOPIC,
+    TRACE_IN_TOPIC,
     FileBus,
     run_batch,
     start_service,
@@ -232,7 +234,7 @@ def test_rpc_reply_also_published_to_caller_topic(spark, svc):
 
 
 def test_trace_side_output_loop_guard(spark, svc):
-    from typebus_spark.runtime import TRACE_IN_TOPIC, TRACE_OUT_TOPIC
+    from typebus_spark.runtime import TRACE_OUT_TOPIC
 
     res = run_batch(svc, _orders(spark), trace=True)
     tr = res.topic(TRACE_IN_TOPIC)
@@ -249,12 +251,12 @@ def test_trace_side_output_loop_guard(spark, svc):
     ov = json.loads(bytes(out_tr.collect()[0]["value"]).decode())
     assert ov["payload"]["event"]["meta"]["event_type"] == "api.OrderConfirmed"
     # a trace event re-entering the bus must NOT be re-traced
-    svc.declare_type(TRACE_TOPIC, ORDER_SCHEMA)
-    svc.register_stream(TRACE_TOPIC, None, lambda df: None)
+    svc.declare_type(TRACE_IN_TOPIC, ORDER_SCHEMA)
+    svc.register_stream(TRACE_IN_TOPIC, None, lambda df: None)
     df = spark.createDataFrame([("t1", "c", 0.0)], ORDER_SCHEMA)
-    raw = encode_envelope(df, TRACE_TOPIC)
+    raw = encode_envelope(df, TRACE_IN_TOPIC)
     res2 = run_batch(svc, raw, trace=True)
-    assert res2.topic(TRACE_TOPIC) is None or len(res2.topic(TRACE_TOPIC).collect()) == 0
+    assert res2.topic(TRACE_IN_TOPIC) is None or len(res2.topic(TRACE_IN_TOPIC).collect()) == 0
 
 
 def test_per_event_trace_flag_and_exception_trace(spark):
@@ -263,10 +265,7 @@ def test_per_event_trace_flag_and_exception_trace(spark):
     ExceptionTrace beside the ServiceException dead-letter
     (bus/package.scala:110-124)."""
     from typebus_spark.codec.envelope import new_meta
-    from typebus_spark.runtime import (
-        TRACE_EXCEPTION_TOPIC,
-        TRACE_IN_TOPIC,
-    )
+    from typebus_spark.runtime import TRACE_EXCEPTION_TOPIC
 
     s = Service("trace-svc")
     s.declare_type("api.T", ORDER_SCHEMA)
@@ -352,7 +351,7 @@ def test_streaming_retry_end_to_end_filebus(spark, tmp_path):
     df = spark.createDataFrame(
         [("t1", 1)], "task_id string, fail_times int"
     )
-    bus.publish(encode_envelope(df, "api.Flaky"), "api.Flaky")
+    bus.publish(encode_envelope(df, "api.Flaky"))
 
     q = start_service(s, bus, spark, str(tmp_path / "ck"))
     q.awaitTermination(60)
@@ -369,7 +368,7 @@ def test_streaming_retry_end_to_end_filebus(spark, tmp_path):
 
 def test_streaming_end_to_end_filebus(spark, svc, tmp_path):
     bus = FileBus(str(tmp_path / "bus"))
-    bus.publish(_orders(spark), "api.OrderPlaced")
+    bus.publish(_orders(spark))
     q = start_service(svc, bus, spark, str(tmp_path / "ckpt"))
     q.awaitTermination(60)
     out = bus.read(spark, ["api.OrderConfirmed"])
@@ -397,9 +396,11 @@ def _crash_after_first_batch_publish(bus, max_records_per_file=None):
     real = bus.publish
     crashed = []
 
-    def publish(df, topic=None, **kw):
-        if topic is not None or crashed:
-            return real(df, topic, **kw)
+    def publish(df, **kw):
+        # start_service publishes its descriptor on the caller's thread;
+        # micro-batches publish from the stream's callback thread
+        if crashed or threading.current_thread() is threading.main_thread():
+            return real(df, **kw)
         crashed.append(True)
         conf = df.sparkSession.conf
         if max_records_per_file is not None:
@@ -430,7 +431,7 @@ def test_streaming_crash_replay_publishes_once(spark, svc, tmp_path):
     commit overwrites its own files: every request keeps exactly one
     reply, and a later start publishes nothing new."""
     bus = FileBus(str(tmp_path / "bus"))
-    bus.publish(_orders(spark, n=4), "api.OrderPlaced")
+    bus.publish(_orders(spark, n=4))
     ck = str(tmp_path / "ck")
     _crash_after_first_batch_publish(bus)
     with pytest.raises(StreamingQueryException, match="crash between"):
@@ -451,7 +452,7 @@ def test_streaming_crash_replay_removes_stale_parts(spark, svc, tmp_path):
     """A replay that writes fewer files than the crashed attempt leaves
     none of the attempt's extra parts behind."""
     bus = FileBus(str(tmp_path / "bus"))
-    bus.publish(_orders(spark, n=6), "api.OrderPlaced")
+    bus.publish(_orders(spark, n=6))
     ck = str(tmp_path / "ck")
     _crash_after_first_batch_publish(bus, max_records_per_file=1)
     with pytest.raises(StreamingQueryException, match="crash between"):
@@ -497,7 +498,7 @@ def test_publish_round_trips_escaped_topic_names(spark, svc, tmp_path):
     weird = "client svc%1:a=b#c"
     root = tmp_path / "bus"
     bus = FileBus(str(root))
-    bus.publish(_orders(spark, reply_to=weird), "api.OrderPlaced")
+    bus.publish(_orders(spark, reply_to=weird))
     start_service(svc, bus, spark, str(tmp_path / "ck")).awaitTermination(60)
 
     rows = bus.read(spark, [weird]).collect()
@@ -515,10 +516,7 @@ def test_descriptor_answered_on_bus(spark, svc, tmp_path):
     envelope yields a ServiceDescriptor reply envelope via FileBus."""
     bus = FileBus(str(tmp_path / "bus"))
     req = spark.createDataFrame([("order-service",)], "service string")
-    bus.publish(
-        encode_envelope(req, Service.GET_DESCRIPTOR_FQN),
-        Service.GET_DESCRIPTOR_FQN,
-    )
+    bus.publish(encode_envelope(req, Service.GET_DESCRIPTOR_FQN))
     q = start_service(svc, bus, spark, str(tmp_path / "ck"))
     q.awaitTermination(60)
     out = bus.read(spark, [Service.DESCRIPTOR_FQN]).collect()
@@ -679,77 +677,111 @@ def test_forward_direct_reply_to_third_service(spark, svc, tmp_path):
     assert v["payload"]["status"] == "confirmed"
 
 
-def test_encode_envelope_fast_path_bytes_equal_column_path(spark):
-    """The single-parse encode fast path must emit byte-identical wire
-    values to the Column-built path (same struct field order, same JSON
-    shape) — modulo the per-row uuids/timestamp, which are masked here
-    by decoding both sides and comparing the deterministic fields."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
+_UUID = r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+_INSTANT = r"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3}Z"
 
+
+def _masked_wire(raw) -> list:
+    """Each bus row as ``(key, value text, topic)``, with the per-row
+    ``event_id``, ``correlation_id`` and ``occurred_at`` checked against
+    their formats and then masked to ``"*"``."""
+    out = []
+    for r in raw.collect():
+        text = bytes(r["value"]).decode()
+        for name, pat in (
+            ("event_id", _UUID),
+            ("correlation_id", _UUID),
+            ("occurred_at", _INSTANT),
+        ):
+            text, n = re.subn(f'"{name}":"{pat}"', f'"{name}":"*"', text)
+            assert n == 1, (name, text)
+        key = bytes(r["key"]) if r["key"] is not None else None
+        out.append((key, text, r["topic"]))
+    return out
+
+
+def test_encode_envelope_wire_bytes_pinned(spark):
+    """The JSON wire bytes, field order included, for the default meta,
+    a keyed meta and a caller-built meta; only the fresh ids and the
+    clock are masked."""
     from typebus_spark.codec.envelope import new_meta
 
-    df = spark.range(5).select(
-        F.col("id").alias("event_id"),
-        (F.col("id") * 2).alias("user_id"),
-        (F.col("id") * 1.5).alias("value"),
+    df = spark.createDataFrame(
+        [(1, "u", 2, 3.0)], "order_id long, user_id string, qty int, price double"
     )
-    key = F.col("user_id").cast("string")
-    fast = encode_envelope(
-        df, "api.T", payload_cols=["event_id", "user_id", "value"], key=key
-    )
-    # force the Column path by passing meta explicitly
-    slow = encode_envelope(
-        df,
-        "api.T",
-        payload_cols=["event_id", "user_id", "value"],
-        key=key,
-        meta=new_meta("api.T", key=key),
-    )
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    def norm(rows):
-        out = []
-        for r in sorted(rows, key=lambda r: json.loads(bytes(r["value"]))["payload"]["event_id"]):
-            d = json.loads(bytes(r["value"]))
-            meta = d["meta"]
-            # mask per-row nondeterminism; everything else must match
-            for k in ("event_id", "correlation_id", "occurred_at"):
-                meta.pop(k, None)
-            out.append(
-                (bytes(r["key"] or b""), r["topic"], json.dumps(d, sort_keys=True),
-                 tuple(sorted(meta.keys())), tuple(sorted(d["payload"].items())))
-            )
-        return out
+    payload = '"payload":{"order_id":1,"user_id":"u","qty":2,"price":3.0}}'
+    head = '{"meta":{"event_id":"*","event_type":"api.Order","correlation_id":"*"'
+    tail = '"extra":{},"occurred_at":"*"},' + payload
 
-    f_rows, s_rows = norm(fast.collect()), norm(slow.collect())
-    assert [x[0] for x in f_rows] == [x[0] for x in s_rows]  # keys
-    assert [x[1] for x in f_rows] == [x[1] for x in s_rows]  # topics
-    # full masked JSON bodies: catches a fast-path VALUE regression in
-    # deterministic meta fields (key, trace, direct_reply), which the
-    # key-set compare below would miss
-    assert [x[2] for x in f_rows] == [x[2] for x in s_rows]
-    assert [x[3] for x in f_rows] == [x[3] for x in s_rows]  # meta keys
-    assert [x[4] for x in f_rows] == [x[4] for x in s_rows]  # payloads
-    # and both decode through the same schema to identical typed rows
-    fd = decode_envelope(fast, schema).select("payload.*").collect()
-    sd = decode_envelope(slow, schema).select("payload.*").collect()
-    assert sorted(map(tuple, fd)) == sorted(map(tuple, sd))
+    assert _masked_wire(encode_envelope(df, "api.Order")) == [
+        (None, f'{head},"trace":false,"direct_reply":{{}},{tail}', "api.Order")
+    ]
+    assert _masked_wire(encode_envelope(df, "api.Order", key=F.col("user_id"))) == [
+        (
+            b"u",
+            f'{head},"trace":false,"direct_reply":{{}},"key":"u",{tail}',
+            "api.Order",
+        )
+    ]
+    meta = new_meta(
+        "api.Order",
+        direct_reply_path=F.lit("/user/gather-1"),
+        direct_reply_service=F.lit("client-service"),
+        socket_id=F.lit("s1"),
+    )
+    assert _masked_wire(encode_envelope(df, "api.Order", meta=meta)) == [
+        (
+            None,
+            f'{head},"trace":false,"direct_reply":{{"path":"/user/gather-1",'
+            f'"service_name":"client-service"}},"socket_id":"s1",{tail}',
+            "api.Order",
+        )
+    ]
+
+
+def test_encoder_and_decoder_agree_on_envelope_shapes(spark, svc):
+    """The EventMeta that ``new_meta`` builds is ``EVENT_META_SCHEMA``
+    (names, order and types; nullability aside), and a dead letter's
+    payload is exactly the ``service_exception`` struct: its JSON carries
+    the struct's fields in order, every one decodes, and the RPC
+    timeout's ServiceException has the same type."""
+    from typebus_spark.codec.envelope import (
+        EVENT_META_SCHEMA,
+        new_meta,
+        service_exception,
+    )
+    from typebus_spark.streaming.rpc import correlate_batch
+
+    def shape(col):
+        return spark.range(1).select(col.alias("c")).schema["c"].dataType
+
+    assert shape(new_meta("x")).simpleString() == EVENT_META_SCHEMA.simpleString()
+
+    exc = shape(service_exception("m", "java.lang.RuntimeException"))
+    raw = encode_envelope(
+        spark.createDataFrame([("x",)], "order_id string"), "api.Unknown"
+    )
+    dl = run_batch(svc, raw).topic(DEAD_LETTER_TOPIC)
+    [row] = dl.collect()
+    assert list(json.loads(bytes(row["value"]))["payload"]) == exc.names
+    [back] = decode_envelope(dl, exc).collect()
+    assert back["meta"]["event_type"] == "typebus.ServiceException"
+    assert back["payload"].asDict() == {
+        "message": "no handler for topic",
+        "throwable_type": "java.lang.RuntimeException",
+        "stack_trace": [],
+        "extra": {"topic": "api.Unknown"},
+    }
+
+    req = decode_envelope(raw, ORDER_SCHEMA)
+    left = correlate_batch(req, req.limit(0)).schema["left"].dataType
+    assert left.simpleString() == exc.simpleString()
 
 
 def test_kafka_bus_plan_assertions_without_jar(spark):
     """The Kafka jar is absent in this env (CLAUDE.md), so the Kafka
     branch is asserted at the BUILDER level: subscription/offset/
-    checkpoint options, the (key, value, topic) sink row contract with
+    bootstrap options, the (key, value, topic) sink row contract with
     key driven by partition_key (K1, KafkaBus.scala:117,121,184), and
     signature compatibility with start_service's per-topic read_stream
     calls — a jar drop then becomes config-only."""
@@ -765,12 +797,11 @@ def test_kafka_bus_plan_assertions_without_jar(spark):
     assert ropts["startingOffsets"] == "latest"  # auto.offset.reset parity
     assert bus.reader_options(["a.X", "a.Y"])["subscribe"] == "a.X,a.Y"
 
-    wopts = bus.writer_options(checkpoint="/ck/svc", topic="api.Out")
-    assert wopts["checkpointLocation"] == "/ck/svc"
-    assert wopts["topic"] == "api.Out"
-    # without an explicit topic the sink must route by the row's topic
-    # column — no "topic" option pinned
-    assert "topic" not in bus.writer_options(checkpoint="/ck/svc")
+    # the sink must route by the row's topic column — no "topic" option
+    # pinned
+    assert bus.writer_options() == {
+        "kafka.bootstrap.servers": "broker1:9092,broker2:9092"
+    }
 
     # K1 keyed publish: the envelope frame IS the Kafka sink contract
     df = spark.createDataFrame([(1, "u1")], "task_id long, user string")

@@ -260,7 +260,13 @@ def test_streaming_fold_last_ttl_survives_restart(spark, tmp_path):
                     .trigger(availableNow=True)
                     .start()
                 )
-            q.awaitTermination(120)
+            # with a pending TTL an availableNow query never terminates
+            # (streaming_fold_last): stop it once its data batch is in
+            deadline = time.monotonic() + 120
+            while not any(p["numInputRows"] for p in q.recentProgress):
+                assert q.isActive and time.monotonic() < deadline, q.exception()
+                time.sleep(0.2)
+            q.stop()
 
         return push, run_once
 

@@ -50,7 +50,7 @@ def test_two_services_chained_over_bus(spark, tmp_path):
     orders = spark.createDataFrame(
         [("o1", 10.0), ("o2", 20.0)], "order_id string, amount double"
     )
-    bus.publish(encode_envelope(orders, "api.OrderPlaced"), "api.OrderPlaced")
+    bus.publish(encode_envelope(orders, "api.OrderPlaced"))
 
     # run the mesh: confirm first, then ship picks up confirm's output
     q1 = start_service(confirm_svc, bus, spark, str(tmp_path / "ck"))

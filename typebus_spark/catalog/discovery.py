@@ -39,10 +39,7 @@ def request_descriptor(
     req = spark.createDataFrame(
         [(target_service,)], "service string"
     )
-    bus.publish(
-        encode_envelope(req, Service.GET_DESCRIPTOR_FQN),
-        Service.GET_DESCRIPTOR_FQN,
-    )
+    bus.publish(encode_envelope(req, Service.GET_DESCRIPTOR_FQN))
 
 
 def await_descriptor(

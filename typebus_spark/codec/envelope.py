@@ -4,25 +4,30 @@ Reference shapes (/root/reference/typebus/macros/.../event/package.scala):
 - ``PublishedEvent(meta: EventMeta, payload: Array[Byte])`` (:166-169)
 - ``EventMeta(eventId, eventType, correlationId, trace, directReply, key,
   socketId, responseTo, extra, occurredAt)`` (:140-149)
+- ``ServiceException(message, throwableType, stackTrace, extra)`` (:28-33)
 - ``RpcClient(path, service)`` (:122)
 
-Wire format: the reference is Avro binary via avro4s (Mapper.scala:19-67).
-The engine's default wire format is **UTF-8 JSON cast to binary** —
+Each shape is built in one place, as the reference defines it once with
+one avro4s writer and reader (Mapper.scala:19-67): ``new_meta`` builds
+every EventMeta, ``service_exception`` every ServiceException, and
+``EVENT_META_SCHEMA`` is what the decoder reads back.
+
+Wire format: the engine's default is **UTF-8 JSON cast to binary** —
 schema-driven via ``to_json``/``from_json``, JVM-side Catalyst
 expressions with the same vectorized execution profile as
 ``to_avro``/``from_avro``. ``encode_envelope``/``decode_envelope`` take
 ``wire_format="avro"`` to use Avro binary instead (pyspark.sql.avro
-functions + ``avro_schema_json`` below for the record schema); the
-spark-avro connector jar is NOT in this container, so that path raises a
-clear error here and is exercised by a skip-marked round-trip test
-(tests/test_runtime.py::test_avro_wire_format_roundtrip) that runs on
-real clusters. Self-consistency + oracle agreement is the bar
-(SURVEY.md §7 risks).
+functions + ``avro_schema_json`` below for the record schema); the choice
+swaps only the serializer expression, around the same envelope struct
+and the same decoded projection. The spark-avro connector jar is NOT in
+this container, so that path raises a clear error here and is exercised
+by a skip-marked round-trip test
+(tests/test_runtime.py::test_avro_wire_format) that runs on real
+clusters. Self-consistency + oracle agreement is the bar (SURVEY.md §7
+risks).
 """
 
 from __future__ import annotations
-
-import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -146,7 +151,23 @@ EVENT_META_SCHEMA = StructType(
     ]
 )
 
-META_COLS = [f.name for f in EVENT_META_SCHEMA.fields]
+
+def service_exception(
+    message: str | Column, throwable_type: str, extra: Column | None = None
+) -> Column:
+    """A ServiceException struct column (event/package.scala:28-33), the
+    payload of dead letters and of RPC timeouts: an empty stack trace,
+    ``extra`` an empty ``map<string,string>`` unless given."""
+    return F.struct(
+        (F.lit(message) if isinstance(message, str) else message).alias(
+            "message"
+        ),
+        F.lit(throwable_type).alias("throwable_type"),
+        F.array().cast("array<string>").alias("stack_trace"),
+        (
+            extra if extra is not None else F.create_map().cast("map<string,string>")
+        ).alias("extra"),
+    )
 
 
 def published_event_schema(payload_schema: StructType) -> StructType:
@@ -241,59 +262,28 @@ def encode_envelope(
 ) -> DataFrame:
     """Payload columns → bus rows ``(key binary, value binary, topic string)``.
 
-    The (key, value, topic) triple is exactly what a Kafka sink consumes
-    (K1/K2, KafkaBus.scala:56-80); file/memory transports use the same
-    shape. Partition-key affinity (meta.key → Kafka partitioner,
-    event/package.scala:135) is preserved via the ``key`` column.
-    ``wire_format="avro"`` emits Avro binary (the reference's wire
-    contract, Mapper.scala:19-67) when spark-avro is on the classpath.
+    The envelope is ``(meta, payload)``: ``meta`` as given, or
+    ``new_meta(event_type, key=key)``, and ``payload`` the struct of
+    ``payload_cols`` (default: every column). ``wire_format`` picks only
+    its serializer: ``to_json`` cast to binary, or ``to_avro`` (the
+    reference's wire contract, Mapper.scala:19-67) when spark-avro is on
+    the classpath. The (key, value, topic) triple is exactly what a Kafka
+    sink consumes (K1/K2, KafkaBus.scala:56-80); file/memory transports
+    use the same shape. Partition-key affinity (meta.key → Kafka
+    partitioner, event/package.scala:135) is preserved via the ``key``
+    column.
+
+    The envelope is built from Columns, about a hundred py4j round trips
+    per call. Callers encode at staging or publish time, never per
+    batch: the router builds its replies, traces and dead letters from
+    cached Columns (runtime.py).
     """
-    payload_cols = payload_cols or df.columns
     et = F.lit(event_type) if isinstance(event_type, str) else event_type
-    if (
-        meta is None
-        and wire_format == "json"
-        and not {"__et", "__key"} & set(payload_cols)
-        and all(c.isidentifier() for c in payload_cols)
-    ):
-        # Fast path: the whole envelope as ONE parsed expression. The
-        # Column form of new_meta + struct + to_json costs ~100 py4j
-        # round trips per call site (~0.3-1.5 ms each under load) —
-        # measured as a top plan-construction cost across the router
-        # queries. Dynamic inputs (event_type, key) are projected as
-        # columns first so the parsed string is static. Field order,
-        # types and the fresh id / clock expressions are the Column
-        # path's, so the JSON bytes on the wire don't change.
-        key_col = key if key is not None else F.lit(None).cast("string")
-        staged = df.select(
-            *payload_cols, et.alias("__et"), key_col.alias("__key")
-        )
-        payload_sql = ", ".join(f"'{c}', `{c}`" for c in payload_cols)
-        meta_sql = (
-            "named_struct("
-            f"'event_id', {_FRESH_ID_SQL}, "
-            "'event_type', __et, "
-            f"'correlation_id', {_FRESH_ID_SQL}, "
-            "'trace', false, "
-            "'direct_reply', named_struct("
-            "'path', CAST(NULL AS STRING), "
-            "'service_name', CAST(NULL AS STRING)), "
-            "'key', __key, "
-            "'socket_id', CAST(NULL AS STRING), "
-            "'response_to', CAST(NULL AS STRING), "
-            "'extra', CAST(map() AS MAP<STRING,STRING>), "
-            f"'occurred_at', {_NOW_SQL})"
-        )
-        return staged.selectExpr(
-            "CAST(__key AS BINARY) AS key",
-            f"CAST(to_json(named_struct('meta', {meta_sql}, "
-            f"'payload', named_struct({payload_sql}))) AS BINARY) AS value",
-            "__et AS topic",
-        )
-    m = meta if meta is not None else new_meta(event_type, key=key)
     env = F.struct(
-        m.alias("meta"),
-        F.struct(*[F.col(c) for c in payload_cols]).alias("payload"),
+        (meta if meta is not None else new_meta(et, key=key)).alias("meta"),
+        F.struct(*[F.col(c) for c in payload_cols or df.columns]).alias(
+            "payload"
+        ),
     )
     if wire_format == "avro":
         _require_avro(df)
@@ -325,17 +315,14 @@ def _json_decode_expr(payload_schema_json: str) -> Column:
 
 
 @__import__("functools").lru_cache(maxsize=512)
-def _decode_sel(schema_json: str, raw_cols: tuple) -> tuple:
-    """Both projection tuples of the JSON decode, cached per (payload
-    schema, input shape): the router re-decodes the same types every
-    micro-batch, and rebuilding the two selects' column lists was a
-    measured per-build py4j cost (tools/py4j_sites.py, r12 verdict
-    item 1). ``F.col("e.meta")`` names its output ``meta`` exactly like
-    the string form."""
+def _decode_sel(raw_cols: tuple) -> tuple:
+    """The decode's two projections past the envelope column ``e``,
+    cached per input shape: the raw ``topic`` carried alongside it, then
+    ``(meta, payload[, topic])``. The router re-decodes the same shapes
+    every micro-batch, and rebuilding these column lists was a measured
+    per-build py4j cost."""
     topic = (F.col("topic"),) if "topic" in raw_cols else ()
-    first = (_json_decode_expr(schema_json),) + topic
-    second = (F.col("e.meta"), F.col("e.payload")) + topic
-    return first, second
+    return topic, (F.col("e.meta"), F.col("e.payload")) + topic
 
 
 def decode_envelope(
@@ -343,31 +330,26 @@ def decode_envelope(
     payload_schema: StructType,
     wire_format: str = "json",
 ) -> DataFrame:
-    """Bus rows → ``meta`` struct + typed ``payload`` struct (D1+D2).
+    """Bus rows → ``meta`` struct + typed ``payload`` struct (D1+D2),
+    plus ``topic`` when the rows carry it.
 
     Equivalent of ``publishedEventReader.read`` (Mapper.scala:19-38) then
     the per-type payload decode (bus/package.scala:141-142), as one
-    Catalyst ``from_json`` (or ``from_avro`` with
-    ``wire_format="avro"``). Undecodable rows yield NULL payloads →
-    routed to the dead-letter path by the runtime (O2).
+    Catalyst expression: ``wire_format`` picks ``from_json`` (cached per
+    payload schema) or ``from_avro``, and both share one projection.
+    Undecodable rows yield NULL payloads → routed to the dead-letter
+    path by the runtime (O2).
     """
     if wire_format == "avro":
         _require_avro(raw)
         from pyspark.sql.avro.functions import from_avro
 
-        env = published_event_schema(payload_schema)
-        decoded = from_avro(
-            F.col("value"), avro_schema_json(env), {"mode": "PERMISSIVE"}
-        ).alias("e")
+        env = avro_schema_json(published_event_schema(payload_schema))
+        decoded = from_avro(F.col("value"), env, {"mode": "PERMISSIVE"}).alias("e")
     else:
-        first, second = _decode_sel(payload_schema.json(), tuple(raw.columns))
-        return raw.select(*first).select(*second)
-    topic = ["topic"] if "topic" in raw.columns else []
-    return raw.select(decoded, *topic).select("e.meta", "e.payload", *topic)
-
-
-def fresh_uuid() -> str:
-    return str(uuid.uuid4())
+        decoded = _json_decode_expr(payload_schema.json())
+    topic, sel = _decode_sel(tuple(raw.columns))
+    return raw.select(decoded, *topic).select(*sel)
 
 
 def parse_event_type(fqn: str) -> str:

@@ -40,6 +40,7 @@ from typebus_spark.codec.envelope import (
     decode_envelope,
     encode_envelope,
     new_meta,
+    service_exception,
 )
 from typebus_spark.registry import RetryPolicy, Service
 from typebus_spark.streaming.retry import (
@@ -60,11 +61,7 @@ TRACE_IN_TOPIC = "typebus.InEventTrace"
 TRACE_OUT_TOPIC = "typebus.OutEventTrace"
 TRACE_EXCEPTION_TOPIC = "typebus.ExceptionTrace"
 TRACE_TOPICS = (TRACE_IN_TOPIC, TRACE_OUT_TOPIC, TRACE_EXCEPTION_TOPIC)
-TRACE_TOPIC = TRACE_IN_TOPIC  # back-compat alias (pre-r2 single topic)
 SOCKET_TOPIC_PREFIX = "typebus.socket."
-
-# ServiceException shape (event/package.scala:28-33)
-SERVICE_EXCEPTION_COLS = ["message", "throwable_type", "stack_trace", "extra"]
 
 
 @dataclass
@@ -297,13 +294,10 @@ def _dead_letter_value(message: str, in_fqn: str | None) -> F.Column:
     the topic the row arrived on — ``in_fqn``, or the row's own ``topic``
     column when None."""
     orig_topic = F.lit(in_fqn) if in_fqn is not None else F.col("topic")
-    payload = F.struct(
-        F.lit(message).alias("message"),
-        F.lit("java.lang.RuntimeException").alias("throwable_type"),
-        F.array().cast("array<string>").alias("stack_trace"),
-        F.map_from_arrays(F.array(F.lit("topic")), F.array(orig_topic)).alias(
-            "extra"
-        ),
+    payload = service_exception(
+        message,
+        "java.lang.RuntimeException",
+        extra=F.map_from_arrays(F.array(F.lit("topic")), F.array(orig_topic)),
     )
     return _json(
         F.struct(
@@ -886,27 +880,23 @@ class FileBus:
         """Whether a publish under ``name`` has put a file on ``topic``."""
         return os.path.exists(os.path.join(self._dir(topic), f"{name}-0.parquet"))
 
-    def publish(
-        self, df: DataFrame, topic: str | None = None, name: str | None = None
-    ) -> None:
+    def publish(self, df: DataFrame, name: str | None = None) -> None:
         """Write bus rows to their topic directories in one Spark job.
 
-        Rows go to the directory of their own ``topic`` column, or all to
-        ``topic`` when given. Files are named ``<name>-<n>.parquet``; a
-        repeated ``name`` overwrites its earlier files and removes those
-        it no longer produces, so a replayed publish is idempotent.
+        Rows go to the directory of their own ``topic`` column. Files are
+        named ``<name>-<n>.parquet``; a repeated ``name`` overwrites its
+        earlier files and removes those it no longer produces, so a
+        replayed publish is idempotent.
         Without ``name`` every call gets a fresh one (append).
         """
         name = name or uuid.uuid4().hex
         staging = os.path.join(self.root, ".staging", name)
         shutil.rmtree(staging, ignore_errors=True)
-        dest = F.col("topic") if topic is None else F.lit(topic)
         # coalesce keeps the file count bounded: the routed batch is a
         # union of many narrow branches, written by one wave of tasks
         par = df.sparkSession.sparkContext.defaultParallelism
-        df.select("key", "value", "topic", dest.alias(self._DEST)).coalesce(
-            par
-        ).write.partitionBy(self._DEST).parquet(staging)
+        rows = df.select("key", "value", "topic", F.col("topic").alias(self._DEST))
+        rows.coalesce(par).write.partitionBy(self._DEST).parquet(staging)
 
         prefix = f"{self._DEST}="
         written = set()
@@ -961,7 +951,7 @@ class KafkaBus:
     ``read_stream``/``publish`` surface, so a jar drop is config-only).
     The option builders are pure functions asserted by
     tests/test_runtime.py without the jar: topic subscription, offset
-    policy (``latest`` — KafkaBus.scala:117,121), checkpoint location,
+    policy (``latest`` — KafkaBus.scala:117,121), bootstrap servers,
     and the (key, value, topic) row contract, where ``key`` comes from
     the stream's ``partition_key`` via ``encode_envelope`` (K1) and the
     Kafka sink routes each row by its ``topic`` column, as FileBus does.
@@ -984,15 +974,9 @@ class KafkaBus:
             "startingOffsets": "latest",  # auto.offset.reset=latest
         }
 
-    def writer_options(
-        self, checkpoint: str | None = None, topic: str | None = None
-    ) -> dict[str, str]:
-        opts = {"kafka.bootstrap.servers": self.bootstrap}
-        if checkpoint is not None:
-            opts["checkpointLocation"] = checkpoint
-        if topic is not None:
-            opts["topic"] = topic
-        return opts
+    def writer_options(self) -> dict[str, str]:
+        # no "topic" option: the sink routes each row by its topic column
+        return {"kafka.bootstrap.servers": self.bootstrap}
 
     def read_stream(
         self, spark: SparkSession, topics: list[str] | str
@@ -1006,13 +990,10 @@ class KafkaBus:
         return False
 
     def publish(
-        self,
-        df: DataFrame,
-        topic: str | None = None,
-        name: str | None = None,  # noqa: ARG002 — FileBus parity
+        self, df: DataFrame, name: str | None = None  # noqa: ARG002 — FileBus parity
     ) -> None:
         writer = df.select(*self.RAW_COLUMNS).write.format("kafka")
-        for k, v in self.writer_options(topic=topic).items():
+        for k, v in self.writer_options().items():
             writer = writer.option(k, v)
         writer.save()
 
@@ -1047,9 +1028,7 @@ def start_service(
             [(service.name, desc)], "service string, descriptor string"
         )
         bus.publish(
-            encode_envelope(desc_df, Service.DESCRIPTOR_FQN),
-            Service.DESCRIPTOR_FQN,
-            name=desc_name,
+            encode_envelope(desc_df, Service.DESCRIPTOR_FQN), name=desc_name
         )
 
     topics = [t for t in service.subscribed_topics()]

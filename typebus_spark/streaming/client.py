@@ -74,7 +74,7 @@ class Client:
         )
         raw = encode_envelope(requests, request_type, meta=meta)
         raw = raw.localCheckpoint(eager=True)  # pin the nondeterministic uuids
-        self.bus.publish(raw, request_type)
+        self.bus.publish(raw)
         return decode_envelope(raw, requests.schema)
 
     def gather(
@@ -129,6 +129,4 @@ def forward(
         direct_reply_path=F.lit(caller_path),
         direct_reply_service=F.lit(caller_service),
     )
-    bus.publish(
-        encode_envelope(requests, request_type, meta=meta), request_type
-    )
+    bus.publish(encode_envelope(requests, request_type, meta=meta))

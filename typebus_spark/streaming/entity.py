@@ -165,6 +165,11 @@ def streaming_fold_last(
     within a batch resolve deterministically (across batches, arrival
     order wins — the same at-least-once semantics as the reference's
     actor mailbox).
+
+    With ``ttl_seconds``, a ``trigger(availableNow=True)`` query never
+    terminates while any key awaits its timeout (nor does
+    ``processAllAvailable()`` return): it keeps running a no-data
+    micro-batch about every second, so stop it once its input is in.
     """
     out_fields = [f.strip().split()[0] for f in state_ddl.split(",")]
     sort_cols = [ts_col] + (tiebreak or [])

@@ -173,7 +173,6 @@ def row_handler(
         out_ddl = (
             ", ".join(f"{n} {t}" for n, t in out_fields) + f", {ERROR_COL} string"
         )
-        meta_idx = [f.name for f in in_schema.fields]
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -197,7 +196,6 @@ def row_handler(
             for f in in_schema.fields
             if f.name == "meta"
         )
-        _ = meta_idx
         return df.mapInPandas(run, schema=f"{meta_ddl}, {out_ddl}")
 
     return transform

@@ -26,18 +26,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from typebus_spark.codec.envelope import service_exception
+
 DEFAULT_TIMEOUT_SECONDS = 4.0  # Client.scala:32
-
-
-def _exception_struct(message: F.Column) -> F.Column:
-    """ServiceException(message, throwableType, stackTrace, extra)
-    (event/package.scala:28-33)."""
-    return F.struct(
-        message.alias("message"),
-        F.lit("java.util.concurrent.TimeoutException").alias("throwable_type"),
-        F.array().cast("array<string>").alias("stack_trace"),
-        F.create_map().cast("map<string,string>").alias("extra"),
-    )
 
 
 def correlate_batch(
@@ -88,11 +79,12 @@ def correlate_batch(
         F.col("response").alias("right"),
         F.when(
             timed_out,
-            _exception_struct(
+            service_exception(
                 F.concat(
                     F.lit(f"RPC timeout after {timeout_seconds}s for request "),
                     F.col("request_id"),
-                )
+                ),
+                "java.util.concurrent.TimeoutException",
             ),
         ).alias("left"),
     )
@@ -145,11 +137,12 @@ def correlate_stream(
         F.col("response").alias("right"),
         F.when(
             timed_out,
-            _exception_struct(
+            service_exception(
                 F.concat(
                     F.lit(f"RPC timeout after {timeout_seconds}s for request "),
                     F.col("request_id"),
-                )
+                ),
+                "java.util.concurrent.TimeoutException",
             ),
         ).alias("left"),
     )
