@@ -16,9 +16,10 @@ A drain whose static round bound exceeds the round cap is checked
 separately: the rows still queued at the cap are dead-lettered.
 
 A warm batch does only its own data's work: a second drain or service
-poll over fresh rows compiles no generated code, the entity lookup
-joins its cached snapshot by broadcast, and the fresh event ids and
-clock reads that make this possible stay unique and correct.
+poll over fresh rows compiles no generated code, nor does a warm poll
+of a retrying service on the wall clock, the entity lookup joins its
+cached snapshot by broadcast, and the fresh event ids and clock reads
+that make this possible stay unique and correct.
 """
 
 from __future__ import annotations
@@ -347,6 +348,56 @@ def test_warm_service_poll_compiles_nothing(spark, tmp_path):
     assert compiled_classes(spark) == before
     # both polls answered: two lookups each, one hit and one miss
     assert bus.read(spark, ["api.Account"]).count() == 4
+
+
+def test_warm_retry_poll_compiles_nothing(spark, tmp_path):
+    """A service with a ``RetryPolicy`` polled without a pinned time: the
+    third poll over fresh rows compiles no generated code. The wall clock
+    reaches the plan as a column, not as a literal folded per batch. The
+    first poll has no retry-topic input yet, so two polls warm up."""
+    svc = _two_schemas(spark)[0]
+    bus = FileBus(str(tmp_path / "bus"))
+    ck = str(tmp_path / "ck")
+    for _ in range(3):
+        bus.publish(_two_schemas(spark)[1])
+        before = compiled_classes(spark)
+        start_service(svc, bus, spark, ck).awaitTermination(60)
+    assert compiled_classes(spark) == before
+    # every poll re-queued its failing tasks and answered every order
+    assert bus.read(spark, ["api.Task.retry"]).count() >= 3 * 2
+    assert bus.read(spark, ["api.Priced"]).count() == 3 * 3
+
+
+def test_wall_clock_retry_outcomes(spark):
+    """``run_batch`` without ``now_epoch`` reads the wall clock: a row
+    whose ``not_before`` lies in the past (or is absent) is handled, one
+    in the future is re-queued, and each row has exactly one outcome."""
+    svc = Service("wall-clock")
+    svc.declare_type("api.Task", _schema(spark, TASK))
+    svc.declare_type("api.TaskDone", _schema(spark, TASK))
+    svc.register_stream(
+        "api.Task", "api.TaskDone", _work, retry=RetryPolicy(2, 5.0)
+    )
+    past, future = "1", "4102444800"  # 1970 and 2100
+    not_before = [past] * 4 + [future] * 3 + [None] * 2
+    df = spark.createDataFrame(
+        [(i, 0, nb) for i, nb in enumerate(not_before)], TASK + ", nb string"
+    )
+    extra = F.when(
+        F.col("nb").isNotNull(),
+        F.create_map(F.lit("not_before_epoch"), F.col("nb")),
+    ).otherwise(F.create_map().cast("map<string,string>"))
+    meta = new_meta("api.Task").withField("extra", extra)
+    raw = encode_envelope(df, "api.Task", ["task_id", "fail_times"], meta=meta)
+    out = run_batch(svc, raw).union_all()
+    task = F.get_json_object(F.col("value").cast("string"), "$.payload.task_id")
+    got = [
+        (r["topic"], int(r["t"]))
+        for r in out.select("topic", task.alias("t")).collect()
+    ]
+    assert Counter(t for t, _ in got) == {"api.TaskDone": 6, "api.Task.retry": 3}
+    assert Counter(i for _, i in got) == Counter(range(9))
+    assert {i for t, i in got if t == "api.Task.retry"} == {4, 5, 6}
 
 
 def test_entity_lookup_broadcasts_cached_snapshot(spark):

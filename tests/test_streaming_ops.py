@@ -9,14 +9,14 @@ import pyspark.sql.functions as F
 import pytest
 
 from typebus_spark.codec.envelope import encode_envelope, new_meta
-from typebus_spark.registry import BackoffShape, RetryPolicy, Service
+from typebus_spark.registry import BackoffShape, RetryPolicy, Service, retry_topic
 from typebus_spark.runtime import DEAD_LETTER_TOPIC, run_batch
 from typebus_spark.streaming.entity import (
     EntityDb,
     fold_events,
     fold_last_value,
 )
-from typebus_spark.streaming.retry import retry_topic, row_handler
+from typebus_spark.streaming.retry import row_handler
 from typebus_spark.streaming.rpc import correlate_batch
 
 TASK_DDL = "task_id string, fail_times int, payload string"
@@ -96,16 +96,14 @@ def _drain(spark, service, raw, now0=1_000_000):
     outputs: dict[str, list] = {}
     now = now0
     for _ in range(6):
-        res = run_batch(service, raw, now_epoch=now)
-        rt = None
-        for topic, df in res.named().items():
-            if topic.endswith(".retry"):
-                rt = df
-            else:
-                outputs.setdefault(topic, []).extend(df.collect())
-        if rt is None or rt.isEmpty():
+        rows = run_batch(service, raw, now_epoch=now).union_all().collect()
+        retry = [r for r in rows if r["topic"].endswith(".retry")]
+        for r in rows:
+            if r not in retry:
+                outputs.setdefault(r["topic"], []).append(r)
+        if not retry:
             break
-        raw = rt
+        raw = spark.createDataFrame(retry, "key binary, value binary, topic string")
         now += 10_000  # beyond any exponential backoff in the test
     return outputs
 
@@ -263,10 +261,7 @@ def test_socket_push_delivery(spark):
     df = spark.createDataFrame([("hello",)], "msg string")
     meta = new_meta("api.Ping", socket_id=F.lit("sock-42"))
     res = run_batch(s, encode_envelope(df, "api.Ping", meta=meta))
-    pushes = res.topic("_socket_pushes")
-    assert pushes is not None
-    row = pushes.collect()[0]
-    assert row["topic"] == f"{SOCKET_TOPIC_PREFIX}sock-42"
+    [row] = res.topic(f"{SOCKET_TOPIC_PREFIX}sock-42").collect()
     v = json.loads(bytes(row["value"]).decode())
     assert v["payload"]["msg"] == "HELLO"
     assert v["meta"]["socket_id"] == "sock-42"
@@ -401,21 +396,15 @@ def test_entity_db_lookup_and_modify(spark):
     } == {"e1": "paid", "e2": "shipped"}
 
 
-def test_drop_head_global_and_keyed(spark):
+def test_drop_head_keeps_newest(spark):
     from typebus_spark.streaming.retry import drop_head
 
     df = spark.createDataFrame(
         [(k, i) for k in ("a", "b") for i in range(5)], "k string, seq long"
     )
-    # global buffer of 3: newest 3 by seq survive regardless of key
+    # buffer of 3: newest 3 by seq survive regardless of key
     kept = drop_head(df, 3, "seq").collect()
     assert len(kept) == 3 and all(r["seq"] >= 3 for r in kept)
-    # keyed buffer of 2: newest 2 PER key survive
-    kept = drop_head(df, 2, "seq", partition_by=["k"]).collect()
-    assert len(kept) == 4
-    assert sorted((r["k"], r["seq"]) for r in kept) == [
-        ("a", 3), ("a", 4), ("b", 3), ("b", 4)
-    ]
 
 
 def test_drain_buffer_requires_order(spark):
@@ -617,7 +606,7 @@ def test_drain_round_bound_arithmetic(spark):
             col_v = (
                 spark.range(1)
                 .select(F.struct(extra.alias("extra")).alias("meta"))
-                .select(_retry_parts(p)[4].alias("d"))
+                .select(_retry_parts(p)[3].alias("d"))
                 .first()["d"]
             )
             assert col_v == p.backoff_seconds(a), (shape, a)

@@ -5,7 +5,9 @@ dominate the fixed per-query floor. This wraps
 ClientServerConnection.send_command with a counter, builds every
 inventory query's DataFrame (NO execution), and prints per-query call
 counts sorted descending — the work list for the lit_vec/single-parse
-treatment.
+treatment. Memory-release commands (sent by Python finalizers as garbage
+collection frees JavaObjects) are not counted: they follow collection
+timing, not the code.
 
 Usage: python tools/py4j_chatter.py [sf_dir]
 """
@@ -19,14 +21,20 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from py4j.clientserver import ClientServerConnection  # noqa: E402
+from py4j.protocol import (  # noqa: E402
+    MEMORY_COMMAND_NAME,
+    MEMORY_DEL_SUBCOMMAND_NAME,
+)
 
 COUNT = {"n": 0}
 _orig = ClientServerConnection.send_command
+MEMORY_RELEASE = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
 
 
-def _counted(self, *a, **k):
-    COUNT["n"] += 1
-    return _orig(self, *a, **k)
+def _counted(self, command, *a, **k):
+    if not command.startswith(MEMORY_RELEASE):
+        COUNT["n"] += 1
+    return _orig(self, command, *a, **k)
 
 
 ClientServerConnection.send_command = _counted

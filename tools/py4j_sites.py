@@ -4,7 +4,9 @@ Companion to py4j_chatter.py: instead of per-query totals, this samples
 the Python stack at every send_command and aggregates counts by the
 innermost typebus_spark frame (falling back to the innermost pyspark
 frame), producing the work list for the single-parse/lru_cache
-treatment at call-site granularity.
+treatment at call-site granularity. Memory-release commands, which
+Python finalizers send whenever garbage collection frees a JavaObject,
+are not counted: they follow collection timing, not the code.
 
 Usage: python tools/py4j_sites.py [query ...]   (default: the router family)
 """
@@ -19,15 +21,20 @@ from collections import Counter
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from py4j.clientserver import ClientServerConnection  # noqa: E402
+from py4j.protocol import (  # noqa: E402
+    MEMORY_COMMAND_NAME,
+    MEMORY_DEL_SUBCOMMAND_NAME,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SITES: Counter = Counter()
 ENABLED = {"on": False}
 _orig = ClientServerConnection.send_command
+MEMORY_RELEASE = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
 
 
-def _counted(self, *a, **k):
-    if ENABLED["on"]:
+def _counted(self, command, *a, **k):
+    if ENABLED["on"] and not command.startswith(MEMORY_RELEASE):
         stack = traceback.extract_stack(limit=40)
         site = None
         for fr in reversed(stack):
@@ -40,7 +47,7 @@ def _counted(self, *a, **k):
                     site = "pyspark:" + os.path.basename(fr.filename)
                     break
         SITES[site or "?"] += 1
-    return _orig(self, *a, **k)
+    return _orig(self, command, *a, **k)
 
 
 ClientServerConnection.send_command = _counted

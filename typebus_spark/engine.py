@@ -74,8 +74,9 @@ class Engine:
         """Run one batch through the router (testkit-style in-process bus).
 
         ``kw`` passes through to ``runtime.run_batch`` (``trace``,
-        ``now_epoch``); the result is a lazy ``BatchResult`` — ``topic(name)`` per output,
-        ``union_all()`` for the whole batch in one frame."""
+        ``now_epoch``); the result is a lazy ``BatchResult``:
+        ``union_all()`` is the whole batch as one (key, value, topic)
+        frame, ``topic(t)`` its rows published to topic ``t``."""
         return run_batch(self.service, raw, **kw)
 
     def start(

@@ -85,6 +85,11 @@ class RetryPolicy:
         return self.delay_seconds
 
 
+def retry_topic(in_fqn: str) -> str:
+    """The durable retry queue of the stream consuming ``in_fqn``."""
+    return f"{in_fqn}.retry"
+
+
 @dataclass
 class StreamDef:
     """One registered stream: typebus ``StreamBuilder`` + handler
@@ -298,5 +303,5 @@ class Service:
         """Topic set = registered in-type FQNs + own service name (RPC reply
         channel, KafkaBus.scala:184) + per-stream retry topics (the durable
         form of the in-memory retry queue, KafkaBus.scala:186-189)."""
-        retry = {f"{fqn}.retry" for fqn, s in self.streams.items() if s.retry}
+        retry = {retry_topic(fqn) for fqn, s in self.streams.items() if s.retry}
         return sorted(set(self.streams) | {self.name} | retry)

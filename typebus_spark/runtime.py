@@ -42,7 +42,7 @@ from typebus_spark.codec.envelope import (
     new_meta,
     service_exception,
 )
-from typebus_spark.registry import RetryPolicy, Service
+from typebus_spark.registry import RetryPolicy, Service, retry_topic
 from typebus_spark.streaming.retry import (
     ERROR_COL,
     _eligibility_conds,
@@ -50,7 +50,7 @@ from typebus_spark.streaming.retry import (
     _retry_parts,
     backoff_rounds,
     drop_head,
-    retry_topic,
+    stamp_now,
     split_failures,
 )
 
@@ -68,19 +68,12 @@ SOCKET_TOPIC_PREFIX = "typebus.socket."
 class BatchResult:
     """Outputs of one batch pass.
 
-    One storage form: ``frames`` holds ``(frame, names)`` pairs. Each
-    frame has columns ``key, value, topic, _name`` and is one generator
+    ``frames`` holds ``(key, value, topic)`` frames, one per generator
     branch of the router (one per stream and source frame, plus the
-    unroutable dead letters); ``names`` lists the logical outputs its
-    rows can carry. A row's ``_name`` is its topic, except for the reply
-    fan-out's per-row destinations (``_rpc_replies``, ``_socket_pushes``).
-    ``topic(name)`` and ``named()`` filter over the frames;
-    ``union_all()`` selects ``(key, value, topic)`` over all of them.
+    unroutable dead letters). A row's ``topic`` is its only address.
     """
 
-    frames: list[tuple[DataFrame, tuple[str, ...]]] = field(
-        default_factory=list
-    )
+    frames: list[DataFrame] = field(default_factory=list)
     # DECODED retry feedback (``run_batch(emit_decoded_retry=True)``):
     # per-stream ``(meta, payload, topic)`` frames an in-process drain
     # loop feeds straight back in, skipping the JSON encode→decode
@@ -88,46 +81,35 @@ class BatchResult:
     # ``union_all`` — these are loop state, not bus output.
     decoded_retry: dict[str, DataFrame] = field(default_factory=dict)
 
-    def topic(self, name: str) -> DataFrame | None:
-        return _union_kvt(
-            [df.filter(_name_eq(name)) for df, ns in self.frames if name in ns]
-        )
-
-    def named(self) -> dict[str, DataFrame]:
-        """Every logical output by name. For inspection; bulk consumers
-        should ``union_all()``."""
-        names = dict.fromkeys(n for _, ns in self.frames for n in ns)
-        return {n: self.topic(n) for n in names}
+    def topic(self, t: str) -> DataFrame | None:
+        """The outputs published to topic ``t``; None without outputs."""
+        out = self.union_all()
+        return None if out is None else out.filter(F.col("topic") == t)
 
     def union_all(self) -> DataFrame | None:
         """All outputs as ONE (key, value, topic) frame — every branch
         already carries its destination in the per-row ``topic`` column,
         so consumers can materialize the whole batch in a single pass
         instead of one action per destination."""
-        return _union_kvt([df for df, _ in self.frames])
+        if not self.frames:
+            return None
+        out = self.frames[0]
+        for d in self.frames[1:]:
+            out = out.unionByName(d)
+        return out.select(*_kvt_cols())
 
     def absorb(self, other: "BatchResult") -> None:
         """Append another result's outputs to this one."""
         self.frames.extend(other.frames)
 
-    def _emit(self, src: DataFrame, fan: tuple) -> None:
-        gen, names = fan
-        self.frames.append((src.select(gen).filter(_routed()), names))
+    def _emit(self, src: DataFrame, gen: F.Column) -> None:
+        self.frames.append(src.select(gen).filter(_routed()))
 
     def _add_decoded_retry(self, in_fqn: str, df: DataFrame) -> None:
         cur = self.decoded_retry.get(in_fqn)
         self.decoded_retry[in_fqn] = (
             cur.unionByName(df) if cur is not None else df
         )
-
-
-def _union_kvt(frames: list[DataFrame]) -> DataFrame | None:
-    if not frames:
-        return None
-    out = frames[0]
-    for d in frames[1:]:
-        out = out.unionByName(d)
-    return out.select(*_kvt_cols())
 
 
 # Column objects are immutable unresolved expression trees — building
@@ -153,11 +135,6 @@ def _kvt_cols() -> tuple:
 @lru_cache(maxsize=1)
 def _routed() -> F.Column:
     return F.col("topic").isNotNull()
-
-
-@lru_cache(maxsize=64)
-def _name_eq(name: str) -> F.Column:
-    return F.col("_name") == name
 
 
 @lru_cache(maxsize=128)
@@ -191,11 +168,11 @@ def _undecodable() -> F.Column:
     return F.col("payload").isNull() | F.col("meta").isNull()
 
 
-@lru_cache(maxsize=16)
-def _good_cond(retry: bool, now: int | None) -> F.Column:
+@lru_cache(maxsize=2)
+def _good_cond(retry: bool) -> F.Column:
     """Handler input: decodable rows, minus backoff-pending retry rows."""
     good = ~_undecodable()
-    return good & _eligibility_conds(now)[0] if retry else good
+    return good & _eligibility_conds()[0] if retry else good
 
 
 def _reply_env_cols(
@@ -318,20 +295,19 @@ def _unroutable_cols() -> tuple:
         _null_key().alias("key"),
         _dead_letter_value("no handler for topic", None).alias("value"),
         F.lit(DEAD_LETTER_TOPIC).alias("topic"),
-        F.lit(DEAD_LETTER_TOPIC).alias("_name"),
     )
 
 
-def _fan(arms: list) -> tuple:
+def _fan(arms: list) -> F.Column:
     """One generator over a source frame: ``inline`` of one
-    ``(key, value, topic, _name)`` struct per arm ``(cond, key, value,
-    topic, name)``. An arm emits a row where ``cond`` holds (None =
-    always) and its topic is non-null; ``BatchResult._emit`` drops the
-    null-topic rows. ``cond`` also guards ``value``, so an arm's envelope
-    is only encoded for the rows it emits. Returns ``(generator, names)``.
+    ``(key, value, topic)`` struct per arm ``(cond, key, value, topic)``.
+    An arm emits a row where ``cond`` holds (None = always) and its topic
+    is non-null; ``BatchResult._emit`` drops the null-topic rows. ``cond``
+    also guards ``value``, so an arm's envelope is only encoded for the
+    rows it emits.
     """
     structs = []
-    for cond, key, value, topic, name in arms:
+    for cond, key, value, topic in arms:
         topic = F.lit(topic) if isinstance(topic, str) else topic
         if cond is not None:
             topic, value = F.when(cond, topic), F.when(cond, value)
@@ -340,10 +316,9 @@ def _fan(arms: list) -> tuple:
                 (key if key is not None else _null_key()).alias("key"),
                 value.alias("value"),
                 topic.alias("topic"),
-                F.lit(name).alias("_name"),
             )
         )
-    return F.inline(F.array(*structs)), tuple(a[4] for a in arms)
+    return F.inline(F.array(*structs))
 
 
 @lru_cache(maxsize=256)
@@ -352,9 +327,8 @@ def _decoded_fan(
     in_fqn: str,
     retry_t: str | None,
     requeue: bool,
-    now: int | None,
     trace: bool,
-) -> tuple:
+) -> F.Column:
     """Over decoded ``(meta, payload)`` rows: backoff-pending rows back to
     the retry topic (KafkaBus.scala:188-197 merge semantics, minus the
     dropHead load-shed; only with ``requeue``), undecodable rows to the
@@ -364,25 +338,21 @@ def _decoded_fan(
     dead, routed = bad, ~bad
     arms = []
     if retry_t is not None:
-        pending = _eligibility_conds(now)[1]
+        pending = _eligibility_conds()[1]
         dead, routed = ~pending & dead, ~pending & routed
         if requeue:
-            arms.append(
-                (pending, None, _json(_meta_payload_env()), retry_t, retry_t)
-            )
+            arms.append((pending, None, _json(_meta_payload_env()), retry_t))
     arms += [
         (
             dead,
             None,
             _dead_letter_value("undecodable payload", in_fqn),
             DEAD_LETTER_TOPIC,
-            DEAD_LETTER_TOPIC,
         ),
         (
             routed & _trace_gate(trace),
             None,
             _trace_value(service_name, TRACE_IN_TOPIC),
-            TRACE_IN_TOPIC,
             TRACE_IN_TOPIC,
         ),
     ]
@@ -410,28 +380,10 @@ def _reply_fan(service_name: str, out_type: str, trace: bool) -> tuple:
     key, value, sock = F.col("key"), F.col("value"), F.col("_env.meta.socket_id")
     fan = _fan(
         [
-            (None, key, value, out_type, out_type),
-            (
-                None,
-                key,
-                value,
-                F.col("_env.meta.direct_reply.service_name"),
-                "_rpc_replies",
-            ),
-            (
-                None,
-                key,
-                value,
-                F.concat(F.lit(SOCKET_TOPIC_PREFIX), sock),
-                "_socket_pushes",
-            ),
-            (
-                F.col("_trace").isNotNull(),
-                None,
-                F.col("_trace"),
-                TRACE_OUT_TOPIC,
-                TRACE_OUT_TOPIC,
-            ),
+            (None, key, value, out_type),
+            (None, key, value, F.col("_env.meta.direct_reply.service_name")),
+            (None, key, value, F.concat(F.lit(SOCKET_TOPIC_PREFIX), sock)),
+            (F.col("_trace").isNotNull(), None, F.col("_trace"), TRACE_OUT_TOPIC),
         ]
     )
     return proj, fan
@@ -444,7 +396,6 @@ def _give_up_fan(
     policy: RetryPolicy | None,
     flagged: bool,
     requeue: bool,
-    now: int | None,
     trace: bool,
 ) -> tuple:
     """Over failed rows' ORIGINAL events (``meta, payload``, plus a
@@ -463,8 +414,8 @@ def _give_up_fan(
         gave_up = ~retry
         if requeue:
             rt = retry_topic(in_fqn)
-            meta, payload, _ = _retry_decoded_cols(policy, rt, now)
-            arms.append((retry, None, _json(F.struct(meta, payload)), rt, rt))
+            meta, payload, _ = _retry_decoded_cols(policy, rt)
+            arms.append((retry, None, _json(F.struct(meta, payload)), rt))
     gate = _trace_gate(trace)
     arms += [
         (
@@ -472,13 +423,11 @@ def _give_up_fan(
             None,
             _dead_letter_value("handler failed", in_fqn),
             DEAD_LETTER_TOPIC,
-            DEAD_LETTER_TOPIC,
         ),
         (
             gate if gave_up is None else gave_up & gate,
             None,
             _trace_value(service_name, TRACE_EXCEPTION_TOPIC),
-            TRACE_EXCEPTION_TOPIC,
             TRACE_EXCEPTION_TOPIC,
         ),
     ]
@@ -497,7 +446,9 @@ def run_batch(
 
     ``raw`` columns: ``key binary, value binary, topic string`` — the
     transport-neutral bus row (Kafka source shape). ``now_epoch`` pins the
-    retry clock for deterministic tests (wall clock otherwise).
+    retry clock for deterministic tests (wall clock otherwise). The clock
+    is data: retry streams' decoded rows carry it as a ``_now`` column,
+    so the plan's fragments depend on the service alone.
 
     Lazy: nothing runs until the caller materializes the result
     (``BatchResult.union_all`` gives the whole batch as one frame). Every
@@ -508,7 +459,9 @@ def run_batch(
       topic filter over its group's decode), and that decode is
       checkpointed too. Catalyst has no cross-branch CSE through a Union,
       so without the checkpoints every branch would re-run the caller's
-      upstream lineage and re-parse the envelope JSON.
+      upstream lineage and re-parse the envelope JSON. A group with a
+      retry stream stamps ``_now`` before its checkpoint, so every
+      branch reads one clock value per row.
     - Unroutable rows are dead-lettered from the raw checkpoint.
     - Each stream contributes at most three generator branches, one per
       source frame: its decoded rows (retry re-queue, undecodable dead
@@ -518,7 +471,8 @@ def run_batch(
 
     ``decoded_inputs`` maps in-type FQN → an ALREADY-DECODED ``(meta,
     payload, topic)`` frame, unioned past the decode stage (the drain
-    loop's retry feedback — no JSON round-trip, caller checkpoints).
+    loop's retry feedback — no JSON round-trip, caller checkpoints and
+    pins ``now_epoch``, stamped after the snapshot).
     ``raw=None`` runs on decoded inputs alone. ``emit_decoded_retry``
     diverts retry rows (backoff-pending + failed-eligible) into
     ``BatchResult.decoded_retry`` in that decoded shape instead of
@@ -547,7 +501,10 @@ def run_batch(
             gdec = decode_envelope(
                 raw.filter(_topic_in(gtopics)),
                 service.catalog.schema_for(fqns[0]),
-            ).localCheckpoint(eager=False)
+            )
+            if any(streams[f].retry for f in fqns):
+                gdec = stamp_now(gdec, now_epoch)
+            gdec = gdec.localCheckpoint(eager=False)
             for f in fqns:
                 decoded_by_fqn[f] = (
                     gdec
@@ -562,48 +519,37 @@ def run_batch(
         # are never dead-lettered as unroutable.
         routed = {t for f in streams for t in _stream_topics(f)} | {service.name}
         res.frames.append(
-            (
-                raw.filter(_topic_in(tuple(sorted(routed)), negate=True)).select(
-                    *_unroutable_cols()
-                ),
-                (DEAD_LETTER_TOPIC,),
+            raw.filter(_topic_in(tuple(sorted(routed)), negate=True)).select(
+                *_unroutable_cols()
             )
         )
 
     for in_fqn, sd in streams.items():
-        parts = [
-            d
-            for d in (decoded_by_fqn.get(in_fqn), decoded_inputs.get(in_fqn))
-            if d is not None
-        ]
-        if not parts:
+        decoded = decoded_by_fqn.get(in_fqn)
+        fed = decoded_inputs.get(in_fqn)
+        if fed is not None:
+            if sd.retry:
+                fed = stamp_now(fed, now_epoch)
+            decoded = fed if decoded is None else decoded.unionByName(fed)
+        if decoded is None:
             continue
-        decoded = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         retry_t = retry_topic(in_fqn) if sd.retry else None
         if retry_t is not None and emit_decoded_retry:
             res._add_decoded_retry(
                 in_fqn,
-                decoded.filter(_eligibility_conds(now_epoch)[1]).select(
+                decoded.filter(_eligibility_conds()[1]).select(
                     *_retry_pending_cols(retry_t)
                 ),
             )
         res._emit(
-            decoded,
-            _decoded_fan(
-                service.name,
-                in_fqn,
-                retry_t,
-                requeue,
-                now_epoch if retry_t else None,
-                trace,
-            ),
+            decoded, _decoded_fan(service.name, in_fqn, retry_t, requeue, trace)
         )
 
         # T1: handler over (meta, payload-fields); flatten payload for
         # ergonomic expression handlers, keep meta for correlation.
         payload_schema = service.catalog.schema_for(in_fqn)
         payload_fields = tuple(f.name for f in payload_schema.fields)
-        good = decoded.filter(_good_cond(retry_t is not None, now_epoch))
+        good = decoded.filter(_good_cond(retry_t is not None))
         out = sd.handler(good.select(*_flat_cols(payload_fields)))
 
         # ST1/ST2 + C2: rows marked failed (``_error`` convention) are
@@ -631,13 +577,7 @@ def run_batch(
                     failed.select(_fid_col()), _fid_join_cond(), "left_semi"
                 )
             retry, fan = _give_up_fan(
-                service.name,
-                in_fqn,
-                sd.retry,
-                flagged,
-                requeue,
-                now_epoch if requeue else None,
-                trace,
+                service.name, in_fqn, sd.retry, flagged, requeue, trace
             )
             if retry is not None and emit_decoded_retry:
                 # Drain mode: cut the join lineage here, once per round —
@@ -648,7 +588,7 @@ def run_batch(
                 res._add_decoded_retry(
                     in_fqn,
                     orig.filter(retry).select(
-                        *_retry_decoded_cols(sd.retry, retry_t, now_epoch)
+                        *_retry_decoded_cols(sd.retry, retry_t)
                     ),
                 )
             res._emit(orig, fan)
@@ -699,9 +639,8 @@ def _drain_round_bound(service: Service, clock_step: int) -> int | None:
     rounds for the simulated clock). A single row's longest life is
     therefore 1 initial round plus, per attempt a=1..max_attempts,
     max(1, ceil(backoff(a)/clock_step)) rounds — after that the row has
-    either succeeded or exceeded max_attempts and dead-lettered
-    (``_retry_parts`` gaveup_cond, streaming/retry.py). Past this bound
-    the queue is PROVABLY empty, so the drain loop skips the final
+    either succeeded or exceeded max_attempts and dead-lettered. Past this
+    bound the queue is PROVABLY empty, so the drain loop skips the final
     snapshot+count job entirely (r10 verdict item 5). Returns None when
     no stream retries (loop exits on the round-1 emptiness check).
 
@@ -712,7 +651,7 @@ def _drain_round_bound(service: Service, clock_step: int) -> int | None:
     """
     bounds = [
         1 + sum(
-            max(1, backoff_rounds(sd.retry, a, clock_step))
+            backoff_rounds(sd.retry, a, clock_step)
             for a in range(1, sd.retry.max_attempts + 1)
         )
         for sd in service.streams.values()
@@ -798,8 +737,7 @@ def drain_batches(
             # dropping them.
             for fqn, df in res.decoded_retry.items():
                 value = _dead_letter_value("retry rounds exhausted", fqn)
-                arm = (None, None, value, DEAD_LETTER_TOPIC, DEAD_LETTER_TOPIC)
-                merged._emit(df, _fan([arm]))
+                merged._emit(df, _fan([(None, None, value, DEAD_LETTER_TOPIC)]))
             break
         # Materialize the (small) next-round queue: the snapshot makes
         # the emptiness check free and keeps the pending-backoff filter
@@ -952,9 +890,10 @@ class KafkaBus:
     The option builders are pure functions asserted by
     tests/test_runtime.py without the jar: topic subscription, offset
     policy (``latest`` — KafkaBus.scala:117,121), bootstrap servers,
-    and the (key, value, topic) row contract, where ``key`` comes from
-    the stream's ``partition_key`` via ``encode_envelope`` (K1) and the
-    Kafka sink routes each row by its ``topic`` column, as FileBus does.
+    and the (key, value, topic) row contract, where ``key`` is the
+    stream's ``partition_key``, set by the router's reply projection
+    (K1), and the Kafka sink routes each row by its ``topic`` column, as
+    FileBus does.
 
     Delivery stays at-least-once: without a transactional producer a
     replayed micro-batch is sent again, so ``name`` is ignored and

@@ -30,17 +30,31 @@ from functools import lru_cache
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
+from typebus_spark.codec.envelope import _NOW_SQL
 from typebus_spark.registry import RetryPolicy
 
 ERROR_COL = "_error"
 ATTEMPT_KEY = "attempt"
 NOT_BEFORE_KEY = "not_before_epoch"
+# The batch clock (epoch seconds), a column of every decoded row a retry
+# stream reads. The retry fragments below read it instead of taking the
+# time as an argument, so they are built once per service, and a row's
+# eligible and pending conditions read one value and stay complements.
+NOW_COL = "_now"
 
 
-def retry_topic(in_fqn: str) -> str:
-    return f"{in_fqn}.retry"
+def stamp_now(df: DataFrame, now_epoch: int | None) -> DataFrame:
+    """``df`` plus the ``_now`` column: the pinned epoch, or the wall
+    clock read per row. The router stamps the decode before its
+    checkpoint, so every branch reads the one materialized value."""
+    clock = (
+        f"CAST({int(now_epoch)} AS BIGINT)"
+        if now_epoch is not None
+        else f"unix_seconds({_NOW_SQL})"
+    )
+    return df.withColumn(NOW_COL, F.expr(clock))
 
 
 def split_failures(out: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -75,7 +89,7 @@ _NXT_SQL = f"(coalesce(cast(meta.extra['{ATTEMPT_KEY}'] as int), 0) + 1)"
 
 @lru_cache(maxsize=64)
 def _retry_parts(policy: RetryPolicy) -> tuple:
-    """(eligible_cond, gaveup_cond, kept_extra_map, next_attempt_str,
+    """(eligible_cond, kept_extra_map, next_attempt_str,
     backoff_seconds_long) — pure, policy-keyed expression trees."""
     if policy.shape.value == "linear":
         backoff_sql = f"({_NXT_SQL} * {policy.delay_seconds!r})"
@@ -85,7 +99,6 @@ def _retry_parts(policy: RetryPolicy) -> tuple:
         backoff_sql = repr(policy.delay_seconds)
     return (
         F.expr(f"{_NXT_SQL} <= {policy.max_attempts}"),
-        F.expr(f"{_NXT_SQL} > {policy.max_attempts}"),
         F.expr(
             "map_filter("
             "coalesce(meta.extra, cast(map() as map<string,string>)), "
@@ -104,24 +117,17 @@ def _split_conds() -> tuple:
 
 
 @lru_cache(maxsize=256)
-def _retry_decoded_cols(policy: RetryPolicy, retry_t: str, now_key) -> tuple:
+def _retry_decoded_cols(policy: RetryPolicy, retry_t: str) -> tuple:
     """The full (meta', payload, topic) projection for retry re-queue
-    rows, keyed by (policy, topic, pinned epoch).
+    rows, keyed by (policy, topic).
 
     Retry rows keep the ORIGINAL meta (same event_id — the retry state
     key, KafkaBus.scala:205) with ``extra.attempt`` incremented and
-    ``extra.not_before_epoch`` = now + backoff(attempt); the router
+    ``extra.not_before_epoch`` = ``_now`` + backoff(attempt); the router
     encodes them to the retry topic, or an in-process drain feeds them
     back decoded. The meta-update tree (withField + map_concat) is ~25
-    py4j round trips and the drain loop rebuilt it per stream per ROUND;
-    a drain pins one epoch so this caches across rounds. ``now_key=None``
-    = wall clock."""
-    now_c = (
-        F.lit(now_key)
-        if now_key is not None
-        else F.unix_timestamp(F.current_timestamp())
-    )
-    _, _, kept_map, nxt_str, backoff = _retry_parts(policy)
+    py4j round trips; cached, a service builds it once."""
+    _, kept_map, nxt_str, backoff = _retry_parts(policy)
     new_meta = F.col("meta").withField(
         "extra",
         F.map_concat(
@@ -130,7 +136,7 @@ def _retry_decoded_cols(policy: RetryPolicy, retry_t: str, now_key) -> tuple:
                 F.lit(ATTEMPT_KEY),
                 nxt_str,
                 F.lit(NOT_BEFORE_KEY),
-                (now_c + backoff).cast("string"),
+                (F.col(NOW_COL) + backoff).cast("string"),
             ),
         ),
     )
@@ -141,18 +147,13 @@ def _retry_decoded_cols(policy: RetryPolicy, retry_t: str, now_key) -> tuple:
     )
 
 
-@lru_cache(maxsize=128)
-def _eligibility_conds(now_key: int | None) -> tuple:
-    """(eligible, not-yet) filter conditions for a pinned epoch (or wall
-    clock when ``now_key`` is None). Cached: the drain loop rebuilds
-    these per stream per round, ~10 py4j round-trips each."""
-    now_c = (
-        F.lit(now_key)
-        if now_key is not None
-        else F.unix_timestamp(F.current_timestamp())
-    )
+@lru_cache(maxsize=1)
+def _eligibility_conds() -> tuple:
+    """(eligible, not-yet) filter conditions of a row's ``not_before``
+    against its ``_now``. Cached: ~10 py4j round-trips each."""
     nb = F.col("meta.extra").getItem(NOT_BEFORE_KEY).cast("long")
-    return (nb.isNull() | (nb <= now_c), nb.isNotNull() & (nb > now_c))
+    now = F.col(NOW_COL)
+    return (nb.isNull() | (nb <= now), nb.isNotNull() & (nb > now))
 
 
 def row_handler(
@@ -201,30 +202,16 @@ def row_handler(
     return transform
 
 
-def drop_head(
-    df: DataFrame,
-    size: int,
-    order_by: F.Column | str,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
+def drop_head(df: DataFrame, size: int, order_by: F.Column | str) -> DataFrame:
     """akka-streams ``buffer(size, OverflowStrategy.dropHead)`` analog:
     keep the NEWEST ``size`` rows (highest ``order_by``), silently shed
     the rest — the reference attaches exactly this 16-element dropHead
     buffer to the retry re-injection stream (KafkaBus.scala:186-189) as
     its back-pressure escape valve under overload.
 
-    Global form: ``orderBy(desc).limit(size)`` compiles to
-    TakeOrderedAndProject — O(size) state per partition plus one tiny
-    merge, never a cluster-wide sort. Keyed form: rank window, which
-    Catalyst executes with WindowGroupLimit (per-map-partition pruning
-    to ``size`` rows per key BEFORE the exchange).
+    ``orderBy(desc).limit(size)`` compiles to TakeOrderedAndProject —
+    O(size) state per partition plus one tiny merge, never a
+    cluster-wide sort.
     """
     order = F.col(order_by) if isinstance(order_by, str) else order_by
-    if not partition_by:
-        return df.orderBy(order.desc()).limit(size)
-    w = Window.partitionBy(*partition_by).orderBy(order.desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= size)
-        .drop("_rn")
-    )
+    return df.orderBy(order.desc()).limit(size)
