@@ -13,7 +13,10 @@ Shapes:
   schemas, so a drain snapshots two retry queues per round.
 
 A drain whose static round bound exceeds the round cap is checked
-separately: the rows still queued at the cap are dead-lettered.
+separately: the rows still queued at the cap are dead-lettered. A drain
+fast-forwards time, so retry-topic rows queued by a wall-clock service
+are due in its next round, and every input of a drain ends as exactly one
+reply or one dead letter within the bound.
 
 A warm batch does only its own data's work: a second drain or service
 poll over fresh rows compiles no generated code, nor does a warm poll
@@ -26,6 +29,7 @@ from __future__ import annotations
 
 import json
 import re
+import time
 from collections import Counter
 from datetime import datetime, timezone
 
@@ -33,6 +37,7 @@ import pyspark.sql.functions as F
 import pytest
 from conftest import compiled_classes
 
+from typebus_spark import runtime
 from typebus_spark.codec.envelope import encode_envelope, new_meta
 from typebus_spark.registry import BackoffShape, RetryPolicy, Service
 from typebus_spark.runtime import (
@@ -278,7 +283,7 @@ def test_drain_round_cap_dead_letters_the_queue(spark, fail_times, done):
     svc.register_stream(
         "api.Task", "api.TaskDone", _work, retry=RetryPolicy(12, 0.0)
     )
-    assert _drain_round_bound(svc, 10_000) == 13 > _MAX_DRAIN_ROUNDS
+    assert _drain_round_bound(svc) == 13 > _MAX_DRAIN_ROUNDS
     raw = encode_envelope(
         spark.createDataFrame(list(enumerate(fail_times)), TASK), "api.Task"
     )
@@ -296,6 +301,103 @@ def test_drain_round_cap_dead_letters_the_queue(spark, fail_times, done):
     for p in dead:
         assert p["message"] == "retry rounds exhausted"
         assert p["extra"] == {"topic": "api.Task"}
+
+
+def _task_service(spark, name, policy):
+    svc = Service(name)
+    svc.declare_type("api.Task", _schema(spark, TASK))
+    svc.declare_type("api.TaskDone", _schema(spark, TASK))
+    svc.register_stream("api.Task", "api.TaskDone", _work, retry=policy)
+    return svc
+
+
+def _task_outcomes(df) -> list[tuple]:
+    """(topic, dead-letter reason, dead letter's origin topic, reply's
+    task id) of every output row."""
+    value = F.col("value").cast("string")
+    dead = F.col("topic") == "typebus.DeadLetter"
+    cols = (
+        F.col("topic"),
+        F.when(dead, F.get_json_object(value, "$.payload.message")),
+        F.when(dead, F.get_json_object(value, "$.payload.extra.topic")),
+        F.get_json_object(value, "$.payload.task_id"),
+    )
+    return [tuple(r) for r in df.select(*cols).collect()]
+
+
+def test_drain_replies_to_queued_future_retry(spark):
+    """A drain fast-forwards time: a retry-topic row that a wall-clock
+    batch queued (attempt 1, ``not_before`` in the future) is due in the
+    drain's next round, so it and a fresh task both reply — the row is
+    neither left pending nor dropped when the drain stops."""
+    svc = _task_service(spark, "queued-retry", RetryPolicy(2, 3600.0))
+    first = run_batch(
+        svc, encode_envelope(spark.createDataFrame([(1, 1)], TASK), "api.Task")
+    )
+    queued = first.topic("api.Task.retry").localCheckpoint(eager=True)
+    (row,) = queued.collect()
+    extra = json.loads(bytes(row["value"]).decode())["meta"]["extra"]
+    assert extra["attempt"] == "1"
+    assert int(extra["not_before_epoch"]) > time.time()
+
+    fresh = encode_envelope(spark.createDataFrame([(2, 0)], TASK), "api.Task")
+    out = drain_batches(svc, fresh.unionByName(queued)).union_all()
+    assert sorted((topic, int(t)) for topic, *_, t in _task_outcomes(out)) == [
+        ("api.TaskDone", 1),
+        ("api.TaskDone", 2),
+    ]
+
+
+@pytest.mark.parametrize(
+    "max_attempts, fail_times",
+    [(m, f) for m in (1, 3) for f in range(m + 2)],
+)
+def test_drain_conserves_every_input(spark, monkeypatch, max_attempts, fail_times):
+    """Fresh rows and queued retry-topic rows (attempt 1, ``not_before``
+    past or future) in one drain: each input ends as exactly one reply or
+    one "handler failed" dead letter, and the drain calls ``run_batch``
+    at most ``_drain_round_bound`` times."""
+    svc = _task_service(
+        spark, "conserve", RetryPolicy(max_attempts, 5.0, BackoffShape.LINEAR)
+    )
+    fresh = encode_envelope(
+        spark.createDataFrame([(0, fail_times), (1, fail_times)], TASK), "api.Task"
+    )
+    past, future = "1", "4102444800"  # 1970 and 2100
+    df = spark.createDataFrame(
+        [(2, fail_times, past), (3, fail_times, future), (4, fail_times, future)],
+        TASK + ", nb string",
+    )
+    extra = F.create_map(
+        F.lit("attempt"), F.lit("1"), F.lit("not_before_epoch"), F.col("nb")
+    )
+    meta = new_meta("api.Task").withField("extra", extra)
+    queued = encode_envelope(
+        df, "api.Task.retry", ["task_id", "fail_times"], meta=meta
+    )
+
+    calls = []
+    real = runtime.run_batch
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(runtime, "run_batch", counted)
+    got = _task_outcomes(drain_batches(svc, fresh.unionByName(queued)).union_all())
+    monkeypatch.undo()
+
+    # a row fails while its attempt < fail_times; a fresh row starts at
+    # attempt 0, a queued one at 1, and either may retry up to attempt
+    # max_attempts. A dead letter names its reason and topic, not its
+    # event, so the dead letters are counted.
+    if fail_times <= max_attempts:
+        assert sorted((topic, int(t)) for topic, *_, t in got) == [
+            ("api.TaskDone", t) for t in range(5)
+        ]
+    else:
+        assert got == [("typebus.DeadLetter", "handler failed", "api.Task", None)] * 5
+    assert 1 <= len(calls) <= _drain_round_bound(svc)
 
 
 def _union_width(df) -> int:

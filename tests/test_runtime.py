@@ -181,19 +181,31 @@ def test_route_and_reply_correlation(spark, svc):
 
 
 def test_column_partition_key_sets_reply_key(spark):
-    """A Column ``partition_key`` is evaluated on the handler output: the
-    reply's bus key and its ``meta.key`` are the expression's value, on
-    every build of the plan."""
+    """A computed key is a column the handler adds and ``partition_key``
+    names: the reply's bus key and its ``meta.key`` are that column's
+    value, on every build of the plan, and the reply payload keeps only
+    the declared fields. A Column ``partition_key`` is refused."""
     s = Service("keyed-service")
     s.declare_type("api.OrderPlaced", ORDER_SCHEMA)
     s.declare_type("api.OrderConfirmed", CONFIRM_SCHEMA)
+
+    def handler(df):
+        return df.select(
+            "meta",
+            "order_id",
+            F.lit("ok").alias("status"),
+            F.concat_ws("/", "customer_id", "order_id").alias("route_key"),
+        )
+
+    with pytest.raises(TypeError, match="partition_key"):
+        s.register_stream(
+            "api.OrderPlaced",
+            "api.OrderConfirmed",
+            handler,
+            partition_key=F.col("route_key"),
+        )
     s.register_stream(
-        "api.OrderPlaced",
-        "api.OrderConfirmed",
-        lambda df: df.select(
-            "meta", "order_id", "customer_id", F.lit("ok").alias("status")
-        ),
-        partition_key=F.concat_ws("/", "customer_id", "order_id"),
+        "api.OrderPlaced", "api.OrderConfirmed", handler, partition_key="route_key"
     )
     for _ in range(2):
         out = run_batch(s, _orders(spark)).topic("api.OrderConfirmed")
@@ -202,6 +214,7 @@ def test_column_partition_key_sets_reply_key(spark):
         for r in rows:
             v = json.loads(bytes(r["value"]).decode())
             assert v["meta"]["key"] == bytes(r["key"]).decode()
+            assert set(v["payload"]) == {"order_id", "status"}
 
 
 def test_unhandled_topic_dead_letters(spark, svc):

@@ -582,23 +582,18 @@ def test_mux_single_batch_invariant(spark, sf_dir):
 
 def test_drain_round_bound_arithmetic(spark):
     """_drain_round_bound is the give-up filter as arithmetic: per
-    retry stream, 1 initial round + per-attempt waiting rounds
-    (ceil(backoff/clock_step), min 1); per-service max; None when no
-    stream retries. The scalar backoff must agree with the columnar
-    _retry_parts schedule per shape (next-attempt semantics)."""
+    retry stream, 1 initial round + one round per allowed attempt (every
+    queued row is due in the next round); per-service max; None when no
+    stream retries. The columnar _retry_parts backoff agrees with
+    ``RetryPolicy.backoff_seconds`` per shape (next-attempt semantics)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from typebus_spark.registry import BackoffShape, RetryPolicy, Service
     from typebus_spark.runtime import _drain_round_bound
-    from typebus_spark.streaming.retry import (
-        ATTEMPT_KEY,
-        _retry_parts,
-        backoff_rounds,
-    )
+    from typebus_spark.streaming.retry import ATTEMPT_KEY, _retry_parts
 
-    # scalar == columnar backoff per shape, attempts 1..4: the router's
-    # backoff SQL on a row that has failed a-1 times (it computes the
-    # NEXT attempt, a)
+    # the router's backoff SQL on a row that has failed a-1 times (it
+    # computes the NEXT attempt, a), attempts 1..4
     for shape in BackoffShape:
         p = RetryPolicy(4, 7.0, shape)
         for a in range(1, 5):
@@ -610,11 +605,6 @@ def test_drain_round_bound_arithmetic(spark):
                 .first()["d"]
             )
             assert col_v == p.backoff_seconds(a), (shape, a)
-            import math
-
-            assert backoff_rounds(p, a, 5) == max(
-                1, math.ceil(col_v / 5)
-            ), (shape, a)
 
     payload = StructType([StructField("i", LongType())])
 
@@ -630,73 +620,18 @@ def test_drain_round_bound_arithmetic(spark):
             )
         return svc
 
-    # the q_retry_drain shape: max_attempts=2, exponential 10s, step
-    # 10_000 -> backoffs 10 and 40 both inside one step -> bound 3
+    # the q_retry_drain shape: max_attempts=2 -> bound 3, whatever the
+    # backoff
     assert _drain_round_bound(
-        mk(RetryPolicy(2, 10.0, BackoffShape.EXPONENTIAL)), 10_000
+        mk(RetryPolicy(2, 10.0, BackoffShape.EXPONENTIAL))
     ) == 3
-    # slow clock: delays 10 and 40 over step 15 -> 1 + 1 + 3 = 5
-    assert _drain_round_bound(
-        mk(RetryPolicy(2, 10.0, BackoffShape.EXPONENTIAL)), 15
-    ) == 5
     # multi-stream: the max of per-stream bounds governs
     assert _drain_round_bound(
         mk(
             RetryPolicy(1, 1.0, BackoffShape.NONE),
             RetryPolicy(3, 1.0, BackoffShape.NONE),
-        ),
-        10_000,
+        )
     ) == 4
     # no retrying stream -> None (loop exits on emptiness)
-    assert _drain_round_bound(mk(), 10_000) is None
+    assert _drain_round_bound(mk()) is None
 
-
-def test_drain_bound_respects_backoff_pending(spark):
-    """The static bound must NOT truncate a drain whose backoff spans
-    multiple clock steps: delay 3s with clock_step 1 leaves the failed
-    rows backoff-PENDING through rounds 2-3 (attempt unchanged) and
-    they retry only at round 4 — a bound that ignored pending rows
-    would break at max_attempts+1 = 2 and silently drop them."""
-    import json as _json
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from typebus_spark.codec.envelope import encode_envelope
-    from typebus_spark.registry import BackoffShape, RetryPolicy, Service
-    from typebus_spark.runtime import (
-        DEAD_LETTER_TOPIC,
-        _drain_round_bound,
-        drain_batches,
-    )
-
-    payload = StructType([StructField("seq", LongType())])
-    svc = Service("pending-test")
-    svc.declare_type("api.P", payload)
-    svc.declare_type("api.P.done", payload)
-
-    def handler(df):
-        attempt = F.coalesce(
-            F.col("meta.extra").getItem("attempt").cast("int"), F.lit(0)
-        )
-        return df.select(
-            "meta",
-            "seq",
-            F.when(attempt < 1, F.lit("transient")).alias("_error"),
-        )
-
-    pol = RetryPolicy(1, 3.0, BackoffShape.NONE)
-    svc.register_stream("api.P", "api.P.done", handler, retry=pol)
-    assert _drain_round_bound(svc, 1) == 4  # 1 + ceil(3/1)
-
-    raw = encode_envelope(
-        spark.createDataFrame([(i,) for i in range(4)], "seq long"), "api.P"
-    )
-    res = drain_batches(svc, raw, clock_step=1)
-    rows = res.union_all().collect()
-    done = sorted(
-        _json.loads(bytes(r["value"]))["payload"]["seq"]
-        for r in rows
-        if r["topic"] == "api.P.done"
-    )
-    assert done == [0, 1, 2, 3]  # every row completed on its retry
-    assert not [r for r in rows if r["topic"] == DEAD_LETTER_TOPIC]

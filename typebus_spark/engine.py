@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from typebus_spark.catalog.types import TypeCatalog
@@ -60,7 +60,7 @@ class Engine:
         in_type: str,
         out_type: str | None,
         handler: Callable[[DataFrame], DataFrame],
-        partition_key: Column | str | None = None,
+        partition_key: str | None = None,
         retry: RetryPolicy | None = None,
     ):
         return self.service.register_stream(

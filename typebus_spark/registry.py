@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from enum import Enum
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 from typebus_spark.catalog.types import TypeCatalog
@@ -105,7 +105,8 @@ class StreamDef:
     in_type: str
     out_type: str | None  # None == sink stream (op2Unit, Module.scala:72-80)
     handler: Callable[[DataFrame], DataFrame]
-    partition_key: Column | str | None = None  # withPartitionKey analog
+    # withPartitionKey analog: the handler-output column that keys replies
+    partition_key: str | None = None
     retry: RetryPolicy | None = None  # withRetryPolicy analog
     retry_on: str | None = None  # error-pattern guard (PF.isDefinedAt analog)
     service_level: bool = False  # hidden/control-plane stream (op2Service)
@@ -194,7 +195,7 @@ class Service:
         in_type: str,
         out_type: str | None,
         handler: Callable[[DataFrame], DataFrame],
-        partition_key: Column | str | None = None,
+        partition_key: str | None = None,
         retry: RetryPolicy | None = None,
         retry_on: str | None = None,
         service_level: bool = False,
@@ -203,8 +204,15 @@ class Service:
 
         ``handler`` receives the decoded DataFrame (columns ``meta`` struct
         + payload fields) and returns the out-payload DataFrame. A stream
-        with ``out_type=None`` is terminal (T2).
+        with ``out_type=None`` is terminal (T2). ``partition_key`` names
+        the handler-output column whose value keys each reply; a computed
+        key is a column the handler adds.
         """
+        if partition_key is not None and not isinstance(partition_key, str):
+            raise TypeError(
+                "partition_key must name a handler-output column; "
+                "add a computed key to the handler's output"
+            )
         if in_type not in self.catalog:
             raise KeyError(f"in_type not declared: {in_type}")
         if out_type is not None and out_type not in self.catalog:

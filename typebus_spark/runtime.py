@@ -48,7 +48,6 @@ from typebus_spark.streaming.retry import (
     _eligibility_conds,
     _retry_decoded_cols,
     _retry_parts,
-    backoff_rounds,
     drop_head,
     stamp_now,
     split_failures,
@@ -74,11 +73,13 @@ class BatchResult:
     """
 
     frames: list[DataFrame] = field(default_factory=list)
-    # DECODED retry feedback (``run_batch(emit_decoded_retry=True)``):
-    # per-stream ``(meta, payload, topic)`` frames an in-process drain
-    # loop feeds straight back in, skipping the JSON encode→decode
-    # round-trip of the durable retry-topic path. Not part of
-    # ``union_all`` — these are loop state, not bus output.
+    # Drain mode only (``run_batch(decoded_inputs=...)``): per stream, the
+    # failed rows eligible for another attempt, as DECODED ``(meta,
+    # payload, topic)`` frames the drain loop feeds straight back in,
+    # skipping the JSON encode→decode round-trip of the durable
+    # retry-topic path. A drain has no backoff-pending rows: each of
+    # these is due in the next round. Not part of ``union_all`` — these
+    # are loop state, not bus output.
     decoded_retry: dict[str, DataFrame] = field(default_factory=dict)
 
     def topic(self, t: str) -> DataFrame | None:
@@ -104,12 +105,6 @@ class BatchResult:
 
     def _emit(self, src: DataFrame, gen: F.Column) -> None:
         self.frames.append(src.select(gen).filter(_routed()))
-
-    def _add_decoded_retry(self, in_fqn: str, df: DataFrame) -> None:
-        cur = self.decoded_retry.get(in_fqn)
-        self.decoded_retry[in_fqn] = (
-            cur.unionByName(df) if cur is not None else df
-        )
 
 
 # Column objects are immutable unresolved expression trees — building
@@ -175,14 +170,17 @@ def _good_cond(retry: bool) -> F.Column:
     return good & _eligibility_conds()[0] if retry else good
 
 
-def _reply_env_cols(
-    out_type: str, out_cols: tuple, key_col: F.Column
-) -> tuple:
+@lru_cache(maxsize=256)
+def _reply_env_cols(out_type: str, out_cols: tuple, pk: str | None) -> tuple:
     """(key, reply envelope, request meta) — the reply frame's first
-    projection. The envelope: responseTo = request eventId, correlation
-    propagated, directReply passed through (RPC2/RPC3), payload projected
-    to the declared out-type columns. It is computed once per row, so the
-    reply on every destination and its OutEventTrace carry one event."""
+    projection. The key is the handler-output column ``pk`` (null
+    without one). The envelope: responseTo = request eventId,
+    correlation propagated, directReply passed through (RPC2/RPC3),
+    payload projected to the declared out-type columns. It is computed
+    once per row, so the reply on every destination and its
+    OutEventTrace carry one event. A pure function of its arguments, so
+    it is shared across Service instances."""
+    key_col = F.col(pk).cast("string") if pk else F.lit(None).cast("string")
     reply_meta = new_meta(
         out_type,
         key=key_col,
@@ -203,16 +201,6 @@ def _reply_env_cols(
     )
 
 
-@lru_cache(maxsize=256)
-def _reply_env_cols_cached(
-    out_type: str, out_cols: tuple, pk: str | None
-) -> tuple:
-    key_col = (
-        F.col(pk).cast("string") if pk else F.lit(None).cast("string")
-    )
-    return _reply_env_cols(out_type, out_cols, key_col)
-
-
 def _sql_str(s: str) -> str:
     """SQL single-quoted string literal (topic/type names are code-declared
     identifiers, but escape defensively)."""
@@ -227,12 +215,6 @@ def _topic_in(topics: tuple, negate: bool = False) -> F.Column:
     distinct topic set, then free."""
     lst = ", ".join(_sql_str(t) for t in topics)
     return F.expr(f"topic {'NOT ' if negate else ''}IN ({lst})")
-
-
-@lru_cache(maxsize=256)
-def _retry_pending_cols(retry_t: str) -> tuple:
-    """(meta, payload, lit-topic) projection for backoff-pending rows."""
-    return (F.col("meta"), F.col("payload"), F.lit(retry_t).alias("topic"))
 
 
 @lru_cache(maxsize=1)
@@ -326,13 +308,12 @@ def _decoded_fan(
     service_name: str,
     in_fqn: str,
     retry_t: str | None,
-    requeue: bool,
     trace: bool,
 ) -> F.Column:
-    """Over decoded ``(meta, payload)`` rows: backoff-pending rows back to
-    the retry topic (KafkaBus.scala:188-197 merge semantics, minus the
-    dropHead load-shed; only with ``requeue``), undecodable rows to the
-    dead-letter topic (O2), and an InEventTrace of every routed row,
+    """Over decoded ``(meta, payload)`` rows: with a ``retry_t``,
+    backoff-pending rows back to that retry topic (KafkaBus.scala:188-197
+    merge semantics, minus the dropHead load-shed), undecodable rows to
+    the dead-letter topic (O2), and an InEventTrace of every routed row,
     gated per row (O1, KafkaBus.scala:200)."""
     bad = _undecodable()
     dead, routed = bad, ~bad
@@ -340,8 +321,7 @@ def _decoded_fan(
     if retry_t is not None:
         pending = _eligibility_conds()[1]
         dead, routed = ~pending & dead, ~pending & routed
-        if requeue:
-            arms.append((pending, None, _json(_meta_payload_env()), retry_t))
+        arms.append((pending, None, _json(_meta_payload_env()), retry_t))
     arms += [
         (
             dead,
@@ -440,7 +420,6 @@ def run_batch(
     trace: bool = False,
     now_epoch: int | None = None,
     decoded_inputs: dict[str, DataFrame] | None = None,
-    emit_decoded_retry: bool = False,
 ) -> BatchResult:
     """Route one batch of raw bus rows through every registered stream.
 
@@ -464,24 +443,26 @@ def run_batch(
       branch reads one clock value per row.
     - Unroutable rows are dead-lettered from the raw checkpoint.
     - Each stream contributes at most three generator branches, one per
-      source frame: its decoded rows (retry re-queue, undecodable dead
-      letter, InEventTrace), the handler output (reply fan-out and
-      OutEventTrace) and its failed rows (retry, "handler failed" dead
-      letter, ExceptionTrace).
+      source frame: its decoded rows (backoff-pending re-queue,
+      undecodable dead letter, InEventTrace), the handler output (reply
+      fan-out and OutEventTrace) and its failed rows (retry, "handler
+      failed" dead letter, ExceptionTrace).
 
-    ``decoded_inputs`` maps in-type FQN → an ALREADY-DECODED ``(meta,
-    payload, topic)`` frame, unioned past the decode stage (the drain
-    loop's retry feedback — no JSON round-trip, caller checkpoints and
-    pins ``now_epoch``, stamped after the snapshot).
-    ``raw=None`` runs on decoded inputs alone. ``emit_decoded_retry``
-    diverts retry rows (backoff-pending + failed-eligible) into
-    ``BatchResult.decoded_retry`` in that decoded shape instead of
-    encoding them to the retry topic.
+    A dict ``decoded_inputs`` (possibly empty) selects drain mode. It
+    maps in-type FQN → an ALREADY-DECODED ``(meta, payload, topic)``
+    frame, unioned past the decode stage (the drain loop's retry
+    feedback — no JSON round-trip; the caller checkpoints it, and it is
+    stamped after the snapshot). ``raw=None`` runs on decoded inputs
+    alone. A drain fast-forwards time, so it has no backoff-pending
+    rows: every decodable row of a retry stream goes to its handler, and
+    the failed rows eligible for another attempt go to
+    ``BatchResult.decoded_retry`` in that decoded shape instead of being
+    encoded to the retry topic.
     """
     res = BatchResult()
+    requeue = decoded_inputs is None
     decoded_inputs = decoded_inputs or {}
     streams = service.streams
-    requeue = not emit_decoded_retry
 
     def _stream_topics(fqn: str) -> tuple:
         return (fqn,) + ((retry_topic(fqn),) if streams[fqn].retry else ())
@@ -534,22 +515,15 @@ def run_batch(
         if decoded is None:
             continue
         retry_t = retry_topic(in_fqn) if sd.retry else None
-        if retry_t is not None and emit_decoded_retry:
-            res._add_decoded_retry(
-                in_fqn,
-                decoded.filter(_eligibility_conds()[1]).select(
-                    *_retry_pending_cols(retry_t)
-                ),
-            )
-        res._emit(
-            decoded, _decoded_fan(service.name, in_fqn, retry_t, requeue, trace)
-        )
+        # the topic backoff-pending rows go back to; a drain has none
+        pending_t = retry_t if requeue else None
+        res._emit(decoded, _decoded_fan(service.name, in_fqn, pending_t, trace))
 
         # T1: handler over (meta, payload-fields); flatten payload for
         # ergonomic expression handlers, keep meta for correlation.
         payload_schema = service.catalog.schema_for(in_fqn)
         payload_fields = tuple(f.name for f in payload_schema.fields)
-        good = decoded.filter(_good_cond(retry_t is not None))
+        good = decoded.filter(_good_cond(pending_t is not None))
         out = sd.handler(good.select(*_flat_cols(payload_fields)))
 
         # ST1/ST2 + C2: rows marked failed (``_error`` convention) are
@@ -579,17 +553,14 @@ def run_batch(
             retry, fan = _give_up_fan(
                 service.name, in_fqn, sd.retry, flagged, requeue, trace
             )
-            if retry is not None and emit_decoded_retry:
+            if retry is not None and not requeue:
                 # Drain mode: cut the join lineage here, once per round —
                 # the decoded retry rows and the give-up branch both read
                 # it. Lazy: the drain loop's queue-snapshot count
                 # materializes it, so the round pays one job, not two.
                 orig = orig.localCheckpoint(eager=False)
-                res._add_decoded_retry(
-                    in_fqn,
-                    orig.filter(retry).select(
-                        *_retry_decoded_cols(sd.retry, retry_t)
-                    ),
+                res.decoded_retry[in_fqn] = orig.filter(retry).select(
+                    *_retry_decoded_cols(sd.retry, retry_t)
                 )
             res._emit(orig, fan)
 
@@ -601,8 +572,9 @@ def run_batch(
         # directReply passed through (RPC3), partition key from builder.
         # The payload is projected to the DECLARED out-type schema (static
         # typing analog of O4 return-type resolution); the partition key
-        # may reference any handler-output column, mirroring
-        # ``withPartitionKey(U => String)`` (bus/package.scala:36-39).
+        # names any handler-output column, so a computed key
+        # (``withPartitionKey(U => String)``, bus/package.scala:36-39) is
+        # a column the handler adds.
         if "meta" not in out.columns:
             raise ValueError(
                 f"handler for {in_fqn} must preserve the 'meta' column"
@@ -615,34 +587,25 @@ def run_batch(
                 f"handler for {in_fqn} output is missing declared "
                 f"{sd.out_type} fields: {missing}"
             )
-        pk = sd.partition_key
-        if isinstance(pk, (str, type(None))):
-            # pure function of (out type, cols, key name): shared across
-            # Service instances — a fresh Service per query invocation
-            # otherwise rebuilds ~70 py4j calls per stream
-            env_cols = _reply_env_cols_cached(sd.out_type, out_cols, pk)
-        else:
-            env_cols = _reply_env_cols(sd.out_type, out_cols, pk.cast("string"))
+        env_cols = _reply_env_cols(sd.out_type, out_cols, sd.partition_key)
         proj, fan = _reply_fan(service.name, sd.out_type, trace)
         res._emit(out.select(*env_cols).select(*proj), fan)
     return res
 
 
-def _drain_round_bound(service: Service, clock_step: int) -> int | None:
+def _drain_round_bound(service: Service) -> int | None:
     """Static upper bound on the number of drain rounds that can end
     with a NONEMPTY retry queue — the give-up filter as arithmetic.
 
-    Rows enter the drain only at round 1 (``raw=None`` afterwards) and
-    the queue holds two kinds of rows: failed-eligible (attempt just
-    incremented; retry emitted only while attempt ≤ max_attempts) and
-    backoff-pending (attempt unchanged; waits ceil(backoff/clock_step)
-    rounds for the simulated clock). A single row's longest life is
-    therefore 1 initial round plus, per attempt a=1..max_attempts,
-    max(1, ceil(backoff(a)/clock_step)) rounds — after that the row has
-    either succeeded or exceeded max_attempts and dead-lettered. Past this
-    bound the queue is PROVABLY empty, so the drain loop skips the final
-    snapshot+count job entirely (r10 verdict item 5). Returns None when
-    no stream retries (loop exits on the round-1 emptiness check).
+    Rows enter the drain only at round 1 (``raw=None`` afterwards), and
+    every queued row is due in the next round, where its attempt count
+    goes up by one if it fails again; a row is re-queued only while that
+    count is ≤ max_attempts. A fresh row (attempt 0) therefore lives at
+    most 1 + max_attempts rounds, a row that arrives from the retry
+    topic with attempts spent fewer; after that it has either succeeded
+    or been dead-lettered. Past this bound the queue is PROVABLY empty, so the
+    drain loop skips the final snapshot+count job. Returns None when no
+    stream retries (the loop exits on the round-1 emptiness check).
 
     Reference parity: the reference pays no drain bookkeeping at all —
     its retry is a fire-and-forget in-memory timer
@@ -650,10 +613,7 @@ def _drain_round_bound(service: Service, clock_step: int) -> int | None:
     snapshot jobs here are the price of deterministic replay.
     """
     bounds = [
-        1 + sum(
-            backoff_rounds(sd.retry, a, clock_step)
-            for a in range(1, sd.retry.max_attempts + 1)
-        )
+        1 + sd.retry.max_attempts
         for sd in service.streams.values()
         if sd.retry is not None
     ]
@@ -663,20 +623,26 @@ def _drain_round_bound(service: Service, clock_step: int) -> int | None:
 # Round cap of ``drain_batches``. A drain whose static bound exceeds it
 # dead-letters the queue left at the cap instead of replaying it further.
 _MAX_DRAIN_ROUNDS = 10
+# The drain's clock (epoch seconds). A drain fast-forwards time, so no
+# row waits on it; it only stamps the ``not_before`` of re-queued rows.
+_DRAIN_EPOCH = 1_000_000
 
 
 def drain_batches(
     service: Service,
     raw: DataFrame,
-    now_epoch: int = 1_000_000,
-    clock_step: int = 10_000,
     buffer_size: int | None = None,
     buffer_order: Column | str | None = None,
 ) -> BatchResult:
-    """Batch-mode retry drain: run ``run_batch``, feed retry topics back
-    in with the simulated clock advanced past every backoff, until the
-    retry queue is empty (the in-process analog of the streaming retry
-    loop — used for deterministic tests and batch reprocessing jobs).
+    """Batch-mode retry drain: run ``run_batch``, feed the failed rows
+    eligible for retry back in, until the retry queue is empty (the
+    in-process analog of the streaming retry loop — used for
+    deterministic tests and batch reprocessing jobs).
+
+    A drain fast-forwards time: there is no backoff wait, and every
+    queued row is due in the next round, including retry-topic rows
+    whose ``not_before`` lies in the future. Only the attempt count
+    bounds a row's retries, as in the stream.
 
     The drain runs at most ``_MAX_DRAIN_ROUNDS`` rounds; rows still
     queued after the last one are dead-lettered as "retry rounds
@@ -692,9 +658,9 @@ def drain_batches(
     documented divergence when durability beats liveness."""
     merged = BatchResult()
     # Per round, materialize ONLY what the next round needs: the retry
-    # queue, kept in DECODED form (``emit_decoded_retry``) — the loop
-    # feeds it back through ``decoded_inputs``, so rounds 2+ skip the
-    # retry-topic JSON encode AND the decode stage entirely (the two
+    # queue, kept in DECODED form (drain mode of ``run_batch``) — the
+    # loop feeds it back through ``decoded_inputs``, so rounds 2+ skip
+    # the retry-topic JSON encode AND the decode stage entirely (the two
     # most expensive expressions in the router; the durable bus path
     # still pays them, an in-process drain needn't). Coalesce +
     # localCheckpoint cuts the lineage that would otherwise re-execute
@@ -711,21 +677,16 @@ def drain_batches(
             "decoded retry rows to rank newest-first, e.g. "
             "payload.<sequence field>)"
         )
-    now = now_epoch
-    feedback: dict[str, DataFrame] | None = None
+    feedback: dict[str, DataFrame] = {}
     # Static give-up bound: past this round the retry queue is PROVABLY
     # empty (every row has either succeeded or exceeded max_attempts —
     # see _drain_round_bound), so the final round skips its
     # snapshot+count job; its outputs materialize lazily in the
     # caller's one consuming action instead.
-    bound = _drain_round_bound(service, clock_step)
+    bound = _drain_round_bound(service)
     for rnd in range(1, _MAX_DRAIN_ROUNDS + 1):
         res = run_batch(
-            service,
-            raw,
-            now_epoch=now,
-            decoded_inputs=feedback,
-            emit_decoded_retry=True,
+            service, raw, now_epoch=_DRAIN_EPOCH, decoded_inputs=feedback
         )
         raw = None  # only round 1 consumes the raw batch
         merged.absorb(res)
@@ -740,10 +701,9 @@ def drain_batches(
                 merged._emit(df, _fan([(None, None, value, DEAD_LETTER_TOPIC)]))
             break
         # Materialize the (small) next-round queue: the snapshot makes
-        # the emptiness check free and keeps the pending-backoff filter
-        # chain from deepening across rounds (without it the queue is a
-        # union tree that grows a leaf per round and re-scans every prior
-        # round's checkpoint from every consumer — measured 3-4x slower).
+        # the emptiness check free and keeps the queue's lineage from
+        # deepening across rounds (without it every consumer re-scans
+        # every prior round's checkpoint — measured 3-4x slower).
         # The expensive part of the round — the give-up semi-join — was
         # already cut inside ``run_batch`` (the failed-rows checkpoint), so
         # this job is a cheap filter scan.
@@ -775,7 +735,6 @@ def drain_batches(
                 feedback[fqn] = ck.coalesce(tgt) if tgt < par else ck
         if not feedback:
             break
-        now += clock_step
     return merged
 
 

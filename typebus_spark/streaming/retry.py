@@ -12,9 +12,15 @@ topic carrying ``attempt`` and ``not_before`` in ``meta.extra``; the
 source unions the retry topic and dispatches rows whose ``not_before`` has
 passed, re-publishing the rest. State therefore lives on the bus + in the
 checkpoint — no unbounded driver/executor dict (the reference's known
-leak, SURVEY.md §7 risks), nothing is load-shed, and a crash replays from
-the checkpoint instead of dropping the queue. Deliberate, strictly
-stronger divergence; documented here.
+leak, SURVEY.md §7 risks), nothing is load-shed by default, and a crash
+replays from the checkpoint instead of dropping the queue. Deliberate,
+strictly stronger divergence; documented here. The reference's shed is
+opt-in where liveness wins: ``drop_head`` below, as the in-process
+drain's ``buffer_size`` (``runtime.drain_batches``).
+
+The in-process drain keeps only the part of these semantics a batch can
+observe — the attempt count, not wall time: it fast-forwards the clock,
+so every queued row is due in the next round.
 
 Failure marking: vectorized handlers signal per-row failure via a nullable
 ``_error`` string column (expression handlers: ``F.when(...)``; Python
@@ -24,7 +30,6 @@ handlers: the ``row_handler`` wrapper catches exceptions into it) — the
 
 from __future__ import annotations
 
-import math
 from collections.abc import Callable, Iterator
 from functools import lru_cache
 
@@ -66,18 +71,6 @@ def split_failures(out: DataFrame) -> tuple[DataFrame, DataFrame]:
     ok = out.filter(ok_cond).drop(ERROR_COL)
     bad = out.filter(bad_cond)
     return ok, bad
-
-
-def backoff_rounds(policy: RetryPolicy, attempt: int, clock_step: int) -> int:
-    """How many ``clock_step``-sized drain rounds the backoff before
-    retry number ``attempt`` spans — the scalar twin of the
-    ``_retry_parts`` backoff SQL (same next-attempt semantics: a row
-    failing its a-th time gets backoff(a); the SQL truncates the delay
-    to long while this ceils the float, so the scalar can only OVER-
-    estimate — safe for ``runtime._drain_round_bound``'s upper bound).
-    Tests pin scalar == columnar per shape."""
-    d = policy.backoff_seconds(attempt)
-    return max(1, math.ceil(d / max(1, clock_step)))
 
 
 # Constant SQL fragments for the retry meta update, parsed JVM-side in
