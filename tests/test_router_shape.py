@@ -312,14 +312,15 @@ def _task_service(spark, name, policy):
 
 
 def _task_outcomes(df) -> list[tuple]:
-    """(topic, dead-letter reason, dead letter's origin topic, reply's
-    task id) of every output row."""
+    """(topic, dead-letter reason, dead letter's origin topic, the event
+    id a dead letter responds to, reply's task id) of every output row."""
     value = F.col("value").cast("string")
     dead = F.col("topic") == "typebus.DeadLetter"
     cols = (
         F.col("topic"),
         F.when(dead, F.get_json_object(value, "$.payload.message")),
         F.when(dead, F.get_json_object(value, "$.payload.extra.topic")),
+        F.when(dead, F.get_json_object(value, "$.meta.response_to")),
         F.get_json_object(value, "$.payload.task_id"),
     )
     return [tuple(r) for r in df.select(*cols).collect()]
@@ -383,20 +384,25 @@ def test_drain_conserves_every_input(spark, monkeypatch, max_attempts, fail_time
         calls.append(1)
         return real(*args, **kwargs)
 
+    inputs = fresh.unionByName(queued).localCheckpoint(eager=True)
+    event_id = F.get_json_object(F.col("value").cast("string"), "$.meta.event_id")
+    ids = [r[0] for r in inputs.select(event_id).collect()]
     monkeypatch.setattr(runtime, "run_batch", counted)
-    got = _task_outcomes(drain_batches(svc, fresh.unionByName(queued)).union_all())
+    got = _task_outcomes(drain_batches(svc, inputs).union_all())
     monkeypatch.undo()
 
     # a row fails while its attempt < fail_times; a fresh row starts at
     # attempt 0, a queued one at 1, and either may retry up to attempt
-    # max_attempts. A dead letter names its reason and topic, not its
-    # event, so the dead letters are counted.
+    # max_attempts. A dead letter responds to the event it stands for.
     if fail_times <= max_attempts:
         assert sorted((topic, int(t)) for topic, *_, t in got) == [
             ("api.TaskDone", t) for t in range(5)
         ]
     else:
-        assert got == [("typebus.DeadLetter", "handler failed", "api.Task", None)] * 5
+        assert sorted(got) == sorted(
+            ("typebus.DeadLetter", "handler failed", "api.Task", i, None)
+            for i in ids
+        )
     assert 1 <= len(calls) <= _drain_round_bound(svc)
 
 

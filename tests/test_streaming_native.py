@@ -506,61 +506,6 @@ def test_state_store_provider_parity(spark, tmp_path, provider):
         assert rows["e3"]["status"] == "created"
 
 
-def test_transform_with_state_fold(spark, tmp_path):
-    """Conditional next-gen stateful API test: runs the
-    transformWithStateInPandas last-write-wins fold when the Python env
-    has google.protobuf (the state-server protocol dependency); skips
-    here with the reason. Plan-parity with streaming_fold_last."""
-    from typebus_spark.session import state_store_provider
-    from typebus_spark.streaming.entity import (
-        streaming_fold_last_tws,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        import pytest
-
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            streaming_fold_last_tws(
-                spark.range(1).selectExpr(
-                    "'k' as id", "current_timestamp() as ts"
-                ),
-                "id", "ts", "id string, ts timestamp",
-            )
-        pytest.skip(
-            "google.protobuf not installed (pip barred in this "
-            "container) — transformWithStateInPandas's state server "
-            "cannot start; the applyInPandasWithState fold covers E1 "
-            "here. Install protobuf on a deployment to run this."
-        )
-
-    import uuid
-
-    events = spark.createDataFrame(
-        [
-            ("e1", "2024-01-01 00:00:00", "created", 1.0),
-            ("e1", "2024-01-01 00:01:00", "paid", 2.0),
-            ("e2", "2024-01-01 00:00:30", "created", 5.0),
-        ],
-        "id string, ts string, status string, amount double",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    stream = _stage_stream(spark, tmp_path, f"tws_{uuid.uuid4().hex[:6]}", events)
-    folded = streaming_fold_last_tws(
-        stream, "id", "ts",
-        "id string, ts timestamp, status string, amount double",
-    )
-    name = f"tws_{uuid.uuid4().hex[:6]}"
-    with state_store_provider(spark, "rocksdb"):  # required by the API
-        q = (
-            folded.writeStream.format("memory").queryName(name)
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-    rows = {r["id"]: r for r in spark.table(name).collect()}
-    assert rows["e1"]["status"] == "paid"
-    assert rows["e2"]["status"] == "created"
-
-
 def test_drop_duplicates_within_watermark_bounds_state(spark, tmp_path):
     """dropDuplicatesWithinWatermark (q_stream_dedup_bounded's
     machinery): duplicate keys within the delay are dropped, and keys

@@ -11,11 +11,7 @@ import pytest
 from typebus_spark.codec.envelope import encode_envelope, new_meta
 from typebus_spark.registry import BackoffShape, RetryPolicy, Service, retry_topic
 from typebus_spark.runtime import DEAD_LETTER_TOPIC, run_batch
-from typebus_spark.streaming.entity import (
-    EntityDb,
-    fold_events,
-    fold_last_value,
-)
+from typebus_spark.streaming.entity import fold_events, fold_last_value
 from typebus_spark.streaming.retry import row_handler
 from typebus_spark.streaming.rpc import correlate_batch
 
@@ -378,22 +374,36 @@ def test_fold_events_general(spark):
     assert rows["e1"]["status"] == "paid"  # event-time ordered fold
 
 
-def test_entity_db_lookup_and_modify(spark):
+def test_fold_last_value_ties_are_order_free(spark):
+    """Eight events of one key at the same ``ts``: the winner is the row
+    with the greatest state columns (``status``, then ``amount``), whole,
+    however the rows are ordered and partitioned on input."""
+    rows = [
+        ("e1", "2024-01-01 00:00:00", f"s{i}", float(7 - i)) for i in range(8)
+    ]
+    ddl = "id string, ts string, status string, amount double"
+    for n in (1, 2, 3, 8):
+        for ordered in (rows, rows[::-1]):
+            events = spark.createDataFrame(
+                spark.sparkContext.parallelize(ordered, n), ddl
+            ).withColumn("ts", F.col("ts").cast("timestamp"))
+            got = fold_last_value(events, "id", "ts").collect()
+            assert [(r["status"], r["amount"]) for r in got] == [("s7", 0.0)]
+
+
+def test_fold_last_value_merges_updates(spark):
+    """modifyState as a fold: a snapshot unioned with newer updates folds
+    to the updated state, and keys without an update keep theirs."""
     snap = fold_last_value(_entity_events(spark), "id", "ts")
-    db = EntityDb(snap, "id")
-    reqs = spark.createDataFrame([("e1",), ("missing",)], "req_id string")
-    got = db.get_state(reqs, "req_id")
-    rows = {r["req_id"]: r for r in got.collect()}
-    assert rows["e1"]["status"] == "paid"
-    assert rows["missing"]["status"] is None  # DbAccessor miss → nulls
     upd = spark.createDataFrame(
         [("e2", "2024-01-01 01:00:00", "shipped", 6.0)],
         "id string, ts string, status string, amount double",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    db2 = db.modify_state(upd, "ts")
-    assert {
-        r["id"]: r["status"] for r in db2.snapshot.collect()
-    } == {"e1": "paid", "e2": "shipped"}
+    merged = fold_last_value(snap.unionByName(upd), "id", "ts")
+    assert {r["id"]: r["status"] for r in merged.collect()} == {
+        "e1": "paid",
+        "e2": "shipped",
+    }
 
 
 def test_drop_head_keeps_newest(spark):

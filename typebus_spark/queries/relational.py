@@ -16,7 +16,6 @@ Scale notes (100 TB design stance):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Window
 
 from typebus_spark.suite import query, t
 
@@ -256,19 +255,17 @@ FROM (
   FROM events
 ) WHERE rn = 1
 """,
-    doc="Latest state per key — batch analog of the EntityDb keyed state (SURVEY §2.1 E1).",
+    doc="Latest state per key by fold_last_value — batch analog of the keyed entity state (SURVEY §2.1 E1).",
 )
 def q_last_event_per_user(spark, sf_dir):
+    from typebus_spark.streaming.entity import fold_last_value
+
     e = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("ts").alias("last_ts"),
-            F.col("event_type").alias("last_event_type"),
-            F.col("value").alias("last_value"),
-        )
+    last = fold_last_value(e, "user_id", "ts", ["event_id", "event_type", "value"])
+    return last.select(
+        "user_id",
+        F.col("event_id").alias("last_event_id"),
+        F.col("ts").alias("last_ts"),
+        F.col("event_type").alias("last_event_type"),
+        F.col("value").alias("last_value"),
     )

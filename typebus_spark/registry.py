@@ -119,7 +119,6 @@ class EntityDef:
     name: str
     state_type: str
     key_col: str = "id"
-    fold: Callable[..., Any] | None = None  # (state, event)->state for streaming
 
 
 class Service:
@@ -234,7 +233,6 @@ class Service:
         name: str,
         state_type: str,
         key_col: str = "id",
-        fold: Callable[..., Any] | None = None,
         snapshot: DataFrame | None = None,
         accessor_type: str | None = None,
     ) -> EntityDef:
@@ -254,7 +252,7 @@ class Service:
         ``autoBroadcastJoinThreshold``, a shuffle join otherwise)."""
         if state_type not in self.catalog:
             raise KeyError(f"state_type not declared: {state_type}")
-        ed = EntityDef(name=name, state_type=state_type, key_col=key_col, fold=fold)
+        ed = EntityDef(name=name, state_type=state_type, key_col=key_col)
         self.entities[name] = ed
         if snapshot is None:
             return ed

@@ -251,19 +251,25 @@ def _dead_letter_value(message: str, in_fqn: str | None) -> F.Column:
     """A routed row wrapped as a ServiceException envelope
     (produceErrorReport, bus/package.scala:93-125); ``extra.topic`` names
     the topic the row arrived on — ``in_fqn``, or the row's own ``topic``
-    column when None."""
-    orig_topic = F.lit(in_fqn) if in_fqn is not None else F.col("topic")
+    column when None. A decoded row (``in_fqn`` given) is linked like a
+    reply: ``response_to`` is its event id and its correlation id is
+    propagated. A raw unroutable row has no decoded meta to link."""
+    fqn = "typebus.ServiceException"
+    if in_fqn is None:
+        orig_topic, meta = F.col("topic"), _static_meta(fqn)
+    else:
+        orig_topic = F.lit(in_fqn)
+        meta = new_meta(
+            fqn,
+            correlation_id=F.col("meta.correlation_id"),
+            response_to=F.col("meta.event_id"),
+        )
     payload = service_exception(
         message,
         "java.lang.RuntimeException",
         extra=F.map_from_arrays(F.array(F.lit("topic")), F.array(orig_topic)),
     )
-    return _json(
-        F.struct(
-            _static_meta("typebus.ServiceException").alias("meta"),
-            payload.alias("payload"),
-        )
-    )
+    return _json(F.struct(meta.alias("meta"), payload.alias("payload")))
 
 
 @lru_cache(maxsize=1)
@@ -792,7 +798,7 @@ class FileBus:
         # coalesce keeps the file count bounded: the routed batch is a
         # union of many narrow branches, written by one wave of tasks
         par = df.sparkSession.sparkContext.defaultParallelism
-        rows = df.select("key", "value", "topic", F.col("topic").alias(self._DEST))
+        rows = df.selectExpr("key", "value", "topic", f"topic AS {self._DEST}")
         rows.coalesce(par).write.partitionBy(self._DEST).parquet(staging)
 
         prefix = f"{self._DEST}="

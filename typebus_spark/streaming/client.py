@@ -34,6 +34,24 @@ from typebus_spark.streaming.rpc import (
 )
 
 
+def _direct_reply_rows(
+    requests: DataFrame,
+    request_type: str,
+    reply_path: str,
+    reply_service: str,
+    correlation_id: F.Column | None,
+) -> DataFrame:
+    """Typed request payloads as bus rows whose ``direct_reply`` names
+    (``reply_path``, ``reply_service``) — where the reply is routed."""
+    meta = new_meta(
+        request_type,
+        correlation_id=correlation_id,
+        direct_reply_path=F.lit(reply_path),
+        direct_reply_service=F.lit(reply_service),
+    )
+    return encode_envelope(requests, request_type, meta=meta)
+
+
 class Client:
     """Typed RPC client bound to a bus + calling service name.
 
@@ -66,13 +84,9 @@ class Client:
         client (Client.scala:38-44). Returns the DECODED request rows
         (meta + payload) to correlate with later — keep it (or persist
         it) as the gather handle."""
-        meta = new_meta(
-            request_type,
-            correlation_id=correlation_id,
-            direct_reply_path=F.lit(self.reply_path),
-            direct_reply_service=F.lit(self.service_name),
+        raw = _direct_reply_rows(
+            requests, request_type, self.reply_path, self.service_name, correlation_id
         )
-        raw = encode_envelope(requests, request_type, meta=meta)
         raw = raw.localCheckpoint(eager=True)  # pin the nondeterministic uuids
         self.bus.publish(raw)
         return decode_envelope(raw, requests.schema)
@@ -123,10 +137,8 @@ def forward(
     whose ``direct_reply`` names ANOTHER service, so the responder's
     reply is routed straight to that caller's back-channel and never
     transits the forwarder."""
-    meta = new_meta(
-        request_type,
-        correlation_id=correlation_id,
-        direct_reply_path=F.lit(caller_path),
-        direct_reply_service=F.lit(caller_service),
+    bus.publish(
+        _direct_reply_rows(
+            requests, request_type, caller_path, caller_service, correlation_id
+        )
     )
-    bus.publish(encode_envelope(requests, request_type, meta=meta))

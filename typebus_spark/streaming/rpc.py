@@ -31,6 +31,44 @@ from typebus_spark.codec.envelope import service_exception
 DEFAULT_TIMEOUT_SECONDS = 4.0  # Client.scala:32
 
 
+def _request_cols() -> tuple:
+    return (
+        F.col("meta.event_id").alias("request_id"),
+        F.col("meta.correlation_id").alias("correlation_id"),
+        F.col("meta.occurred_at").alias("requested_at"),
+        F.col("payload").alias("request"),
+    )
+
+
+def _response_cols() -> tuple:
+    return (
+        F.col("meta.response_to").alias("response_to"),
+        F.col("meta.occurred_at").alias("responded_at"),
+        F.col("payload").alias("response"),
+    )
+
+
+def _outcome(
+    joined: DataFrame, status: F.Column, timed_out: F.Column, timeout_seconds: float
+) -> DataFrame:
+    """The Either-shaped result: ``right`` the response, ``left`` a
+    TimeoutException ServiceException where ``timed_out`` holds."""
+    timeout = service_exception(
+        F.concat(
+            F.lit(f"RPC timeout after {timeout_seconds}s for request "),
+            F.col("request_id"),
+        ),
+        "java.util.concurrent.TimeoutException",
+    )
+    return joined.select(
+        "request_id",
+        "correlation_id",
+        status.alias("status"),
+        F.col("response").alias("right"),
+        F.when(timed_out, timeout).alias("left"),
+    )
+
+
 def correlate_batch(
     requests: DataFrame,
     responses: DataFrame,
@@ -46,19 +84,10 @@ def correlate_batch(
     by response event time — deterministic gather.
     """
     now = now if now is not None else F.current_timestamp()
-    req = requests.select(
-        F.col("meta.event_id").alias("request_id"),
-        F.col("meta.correlation_id").alias("correlation_id"),
-        F.col("meta.occurred_at").alias("requested_at"),
-        F.col("payload").alias("request"),
-    )
+    req = requests.select(*_request_cols())
     # earliest response per request_id (dedup at-least-once redelivery)
     resp = (
-        responses.select(
-            F.col("meta.response_to").alias("response_to"),
-            F.col("meta.occurred_at").alias("responded_at"),
-            F.col("payload").alias("response"),
-        )
+        responses.select(*_response_cols())
         .filter(F.col("response_to").isNotNull())
         .groupBy("response_to")
         .agg(
@@ -69,25 +98,12 @@ def correlate_batch(
     timed_out = F.col("response").isNull() & (
         now > F.col("requested_at") + F.expr(f"INTERVAL {timeout_seconds} SECONDS")
     )
-    return joined.select(
-        "request_id",
-        "correlation_id",
+    status = (
         F.when(F.col("response").isNotNull(), F.lit("completed"))
         .when(timed_out, F.lit("timeout"))
         .otherwise(F.lit("pending"))
-        .alias("status"),
-        F.col("response").alias("right"),
-        F.when(
-            timed_out,
-            service_exception(
-                F.concat(
-                    F.lit(f"RPC timeout after {timeout_seconds}s for request "),
-                    F.col("request_id"),
-                ),
-                "java.util.concurrent.TimeoutException",
-            ),
-        ).alias("left"),
     )
+    return _outcome(joined, status, timed_out, timeout_seconds)
 
 
 def correlate_stream(
@@ -105,17 +121,12 @@ def correlate_stream(
     (no unbounded GatherActor population). Rows that never matched emit
     with a ServiceException once evicted.
     """
-    req = requests.select(
-        F.col("meta.event_id").alias("request_id"),
-        F.col("meta.correlation_id").alias("correlation_id"),
-        F.col("meta.occurred_at").alias("requested_at"),
-        F.col("payload").alias("request"),
-    ).withWatermark("requested_at", watermark_delay)
-    resp = responses.select(
-        F.col("meta.response_to").alias("response_to"),
-        F.col("meta.occurred_at").alias("responded_at"),
-        F.col("payload").alias("response"),
-    ).withWatermark("responded_at", watermark_delay)
+    req = requests.select(*_request_cols()).withWatermark(
+        "requested_at", watermark_delay
+    )
+    resp = responses.select(*_response_cols()).withWatermark(
+        "responded_at", watermark_delay
+    )
 
     cond = (
         (F.col("request_id") == F.col("response_to"))
@@ -128,21 +139,5 @@ def correlate_stream(
     )
     joined = req.join(resp, cond, "left_outer")
     timed_out = F.col("response").isNull()
-    return joined.select(
-        "request_id",
-        "correlation_id",
-        F.when(timed_out, F.lit("timeout")).otherwise(F.lit("completed")).alias(
-            "status"
-        ),
-        F.col("response").alias("right"),
-        F.when(
-            timed_out,
-            service_exception(
-                F.concat(
-                    F.lit(f"RPC timeout after {timeout_seconds}s for request "),
-                    F.col("request_id"),
-                ),
-                "java.util.concurrent.TimeoutException",
-            ),
-        ).alias("left"),
-    )
+    status = F.when(timed_out, F.lit("timeout")).otherwise(F.lit("completed"))
+    return _outcome(joined, status, timed_out, timeout_seconds)
